@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions
+import graft.functions.{GraftExpressions, TextFunctions}
 
 /** The COMPOSED training-data pipeline — every stage the engine ships,
   * chained the way a real corpus build runs them:
@@ -194,9 +194,10 @@ object Pipeline {
     * group balance — which is exactly the interaction a per-stage gate
     * cannot see.
     *
-    * Scale shape matches [[selectCorpus]]: scan-shaped filters, one
-    * min_by hash-aggregate, the banded-LSH near-dedup, two
-    * localCheckpoints at the cluster boundaries, and the broadcast
+    * Scale shape matches [[selectCorpus]]: one scan-shaped gate pass
+    * (checkpointed, see [[hygienicStages]]), one min_by hash-aggregate,
+    * the banded-LSH near-dedup, two localCheckpoints at the cluster
+    * boundaries, and the broadcast
     * temperature rate table. The benchmark side is scrubbed with the
     * same chain before indexing (scrub-before-hash discipline — a
     * benchmark item differing from a corpus page only in an email must
@@ -225,28 +226,28 @@ object Pipeline {
       textCol,
       idCol,
       groupCol
-    ).last._2
+    )._2.last
 
-  /** The hygienic chain's stage boundaries IN ORDER — `(stage, frame)`
-    * with each frame the survivors entering the next stage. One source of
-    * truth for [[selectHygienic]] (which returns the last frame) and the
-    * attrition report (which counts every boundary): the stage order,
-    * the scrub-before-hash discipline, and the checkpoint scopes cannot
-    * drift between the pipeline and its own audit.
+  /** The hygienic chain in ONE shape, shared by [[selectHygienic]] and
+    * the audit ([[rejectReasons]]/[[attrition]]) so the stage order, the
+    * scrub-before-hash discipline and the checkpoint scopes cannot drift
+    * between the pipeline and its own audit. Returns `(gated, later)`:
     *
-    * `auditMaterialize` is the AUDIT consumers' switch
-    * ([[rejectReasons]]/[[attrition]], which read EVERY boundary): the
-    * scan-side gates (Gopher, quality — independent row-local
-    * predicates, so sequential filtering == flag conjunction) compute as
-    * flags in ONE checkpointed kernel pass, and the repetition and
-    * decontamination boundaries checkpoint too — each expensive stage
-    * then evaluates exactly once however many boundary frames read it.
-    * The pipeline path ([[selectHygienic]], one consumer per boundary)
-    * keeps the lazy shape: its only materializations stay the dedup
-    * checkpoints the clustering loop needs anyway, and the scan-side
-    * gates fuse into the one corpus scan. The audit's trade — store the
-    * shrinking survivor frames once each vs re-run the text kernels per
-    * boundary branch — is the standard multi-consumer checkpoint call.
+    *  - `gated`: every scrubbed document plus [[RejectCol]], the first
+    *    failing row-local gate in the MassiveText order (1 = structural
+    *    Gopher, 2 = quality score, 3 = repetition, 0 = passed all; a NULL
+    *    predicate fails, as `filter` drops it). One kernel pass, and the
+    *    CASE short-circuits, so each kernel runs only on the rows the
+    *    earlier gates admitted.
+    *  - `later`: the survivors of decontamination, exact dedup, near dedup
+    *    and mix, in order — the last four [[RejectStageNames]].
+    *
+    * `gated` is localCheckpointed once because it is read more than once:
+    * [[Decontaminate.clean]]'s id-keyed anti join scans its corpus on both
+    * sides, and the audit reads it again for the reject depths.
+    * Unmaterialized, every text kernel would run once per read. The
+    * benchmark side is scrubbed with the same chain before indexing
+    * (scrub-before-hash).
     */
   private def hygienicStages(
       docs: DataFrame,
@@ -258,56 +259,39 @@ object Pipeline {
       temperature: Int,
       textCol: String,
       idCol: String,
-      groupCol: String,
-      auditMaterialize: Boolean = false
-  ): Seq[(String, DataFrame)] = {
-    // stages 1-3: scrub, then the STRUCTURAL Gopher gate, then the
-    // model-shaped quality score — the MassiveText order (hard structural
-    // rules drop machine noise before any continuum scoring spends a
-    // kernel pass on it). The benchmark side is scrubbed with the same
-    // chain before indexing (scrub-before-hash).
-    val scrubbed0 = scrubDocs(docs, textCol, idCol, groupCol)
-    val (scrubbed, structural, qualified) =
-      if (!auditMaterialize) {
-        val structural = Heuristics.filterGopher(scrubbed0, textCol = textCol)
-        val qualified =
-          structural.filter(TextFunctions.qualityScoreFused(col(textCol)) >= cfg.minQuality)
-        (scrubbed0, structural, qualified)
-      } else {
-        val audit = scrubbed0
-          .withColumn("__graft_g", Heuristics.gopherKeepExpr(col(textCol)))
-          .withColumn(
-            "__graft_q",
-            TextFunctions.qualityScoreFused(col(textCol)) >= cfg.minQuality
-          )
-          .localCheckpoint(true)
-        (
-          audit.drop("__graft_g", "__graft_q"),
-          audit.filter(col("__graft_g")).drop("__graft_g", "__graft_q"),
-          audit.filter(col("__graft_g") && col("__graft_q")).drop("__graft_g", "__graft_q")
-        )
-      }
-    val benchScrubbed = benchmark.select(TextFunctions.scrub(col(textCol)).as(textCol))
-    val nonRepetitive0 =
-      Repetition.filterRepetitive(qualified, 2, maxDupFrac, maxTopFrac, textCol, idCol)
-    val nonRepetitive =
-      if (auditMaterialize) nonRepetitive0.localCheckpoint(true) else nonRepetitive0
-    val decontaminated0 =
-      Decontaminate.clean(nonRepetitive, benchScrubbed, decontamK, textCol, idCol)
-    val decontaminated =
-      if (auditMaterialize) decontaminated0.localCheckpoint(true) else decontaminated0
+      groupCol: String
+  ): (DataFrame, Seq[DataFrame]) = {
+    val text = col(textCol)
+    def fails(p: Column): Column = !coalesce(p, lit(false))
+    val reject =
+      when(fails(Heuristics.gopherKeepExpr(text)), 1)
+        .when(fails(TextFunctions.qualityScoreFused(text) >= cfg.minQuality), 2)
+        .when(fails(GraftExpressions.gram_rep_ok(text, 2, maxDupFrac, maxTopFrac)), 3)
+        .otherwise(0)
+    val gated = scrubDocs(docs, textCol, idCol, groupCol)
+      .withColumn(RejectCol, reject)
+      .localCheckpoint(true)
+    val benchScrubbed = benchmark.select(TextFunctions.scrub(text).as(textCol))
+    val decontaminated = Decontaminate.clean(
+      gated.filter(col(RejectCol) === 0).drop(RejectCol),
+      benchScrubbed,
+      decontamK,
+      textCol,
+      idCol
+    )
     val (exactKept, nearKept) =
       dedupStages(decontaminated, cfg.nearDupThreshold, textCol, idCol, Seq(groupCol))
     val mixed = Sampling.temperatureFlatten(nearKept, groupCol, textCol, temperature)
-    ("input" -> scrubbed) +: RejectStageNames.zip(
-      Seq(structural, qualified, nonRepetitive, decontaminated, exactKept, nearKept, mixed)
-    )
+    (gated, Seq(decontaminated, exactKept, nearKept, mixed))
   }
 
-  /** The hygienic chain's DROPPING stages in order (everything after the
-    * no-drop "input" projection) — one source of truth for
-    * [[hygienicStages]]'s labels, [[rejectReasons]]'s attribution values
-    * and [[attrition]]'s fixed 7-row funnel shape.
+  /** [[hygienicStages]]' per-document first failing row-local gate. */
+  private val RejectCol = "__graft_reject"
+
+  /** The hygienic chain's DROPPING stages in order — one source of truth
+    * for [[rejectReasons]]'s attribution values and [[attrition]]'s fixed
+    * 7-row funnel shape. The first three are [[hygienicStages]]' reject
+    * codes 1-3, the last four its later frames.
     */
   private val RejectStageNames = Seq(
     "gopher", "quality", "repetition", "decontamination",
@@ -382,14 +366,14 @@ object Pipeline {
     * the first stage that dropped it (the funnel's attribution), or
     * `kept` if it reached the mix.
     *
-    * Shape (r14): each stage's id set is tagged with its depth and
-    * UNIONED, then ONE `groupBy(id).max(depth)` finds how far every
-    * document survived — the first-dropping stage is `depth + 1` because
-    * the stage frames are nested subsets. One id-key shuffle with
-    * map-side combine (≤ 8 tagged rows per document collapse in the
-    * partial aggregate), replacing the previous SEVEN left joins on the
-    * id key — at corpus scale the id sets are NOT broadcastable, so
-    * those were seven full shuffles of the id column.
+    * Shape: every document's depth (the number of stages it survived) is
+    * 0-3 from [[hygienicStages]]' reject column, and the four later stage
+    * frames tag their ids with depths 4-7; the tags are UNIONED and ONE
+    * `groupBy(id).max(depth)` finds how far every document got — the
+    * first-dropping stage is `depth + 1` because the stage frames are
+    * nested subsets. One id-key shuffle with map-side combine, and a
+    * duplicated id counts as far as its furthest row, so an id the
+    * decontamination anti join removes leaves with all its rows.
     */
   def rejectReasons(
       docs: DataFrame,
@@ -403,7 +387,7 @@ object Pipeline {
       idCol: String = "doc_id",
       groupCol: String = "lang"
   ): DataFrame = {
-    val stages = hygienicStages(
+    val (gated, later) = hygienicStages(
       docs,
       benchmark,
       cfg,
@@ -413,17 +397,13 @@ object Pipeline {
       temperature,
       textCol,
       idCol,
-      groupCol,
-      auditMaterialize = true
-    ).drop(1) // "input" drops nothing — it is not a reject reason
-    val tagged = stages.zipWithIndex
-      .map { case ((_, frame), k) =>
-        frame.select(col(idCol), lit(k + 1).as("__graft_depth"))
-      }
-      .foldLeft(docs.select(col(idCol), lit(0).as("__graft_depth")))(_ unionByName _)
-    val reason = stages
-      .map { case (name, _) => name }
-      .zipWithIndex
+      groupCol
+    )
+    val rowLocalDepth = when(col(RejectCol) === 0, 3).otherwise(col(RejectCol) - 1)
+    val tagged = later.zipWithIndex
+      .map { case (frame, k) => frame.select(col(idCol), lit(k + 4).as("__graft_depth")) }
+      .foldLeft(gated.select(col(idCol), rowLocalDepth.as("__graft_depth")))(_ unionByName _)
+    val reason = RejectStageNames.zipWithIndex
       .foldRight(lit("kept")) { case ((name, k), rest) =>
         when(col("__graft_reached") === k, lit(name)).otherwise(rest)
       }

@@ -296,76 +296,7 @@ object Profile {
     spark.stop()
   }
 
-  /** `Profile attrition [sfDir]` — stage attribution of the q109 audit
-    * chain: replicates `hygienicStages(auditMaterialize = true)` +
-    * `rejectReasons`' union/argmax boundary by boundary so the gate's
-    * end-to-end seconds are attributable to one materialization.
-    */
-  private def attritionMain(args: Array[String]): Unit = {
-    val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = GraftSession.local("prof-attrition", 32)
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.functions.TextFunctions
-    import graft.operators.{Decontaminate, Dedup, Heuristics, Repetition, Sampling}
-    import org.apache.spark.sql.DataFrame
-    def time[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[attr] $name%-36s ${(System.nanoTime() - t0) / 1e9}%7.3f s"); r
-    }
-    val all = Tables.loadSpread(spark, dir, "documents")
-    val bucket = GraftExpressions.poly_hash(col("text")) % 10
-    val docs = all.filter(bucket < 9)
-    val benchmark = all.filter(bucket >= 9)
-    val (minQuality, maxDupFrac, maxTopFrac, decontamK) = (0.4275, 0.3, 0.2, 4)
-    // warm codegen once on the cheap prefix
-    docs.select(TextFunctions.scrub(col("text"))).limit(1).collect()
-    val audit = time("audit checkpoint (scrub+flags)") {
-      docs
-        .select(col("doc_id"), col("lang"), TextFunctions.scrub(col("text")).as("text"))
-        .withColumn("__g", Heuristics.gopherKeepExpr(col("text")))
-        .withColumn("__q", TextFunctions.qualityScoreFused(col("text")) >= minQuality)
-        .localCheckpoint(true)
-    }
-    val scrubbed = audit.drop("__g", "__q")
-    val structural = audit.filter(col("__g")).drop("__g", "__q")
-    val qualified = audit.filter(col("__g") && col("__q")).drop("__g", "__q")
-    val benchScrubbed = time("bench scrub (count)") {
-      val b = benchmark.select(TextFunctions.scrub(col("text")).as("text")); b.count(); b
-    }
-    val nonRepetitive = time("repetition checkpoint") {
-      Repetition.filterRepetitive(qualified, 2, maxDupFrac, maxTopFrac, "text", "doc_id")
-        .localCheckpoint(true)
-    }
-    val decontaminated = time("decontaminate checkpoint") {
-      Decontaminate.clean(nonRepetitive, benchScrubbed, decontamK, "text", "doc_id")
-        .localCheckpoint(true)
-    }
-    val exactKept = time("exact-dedup checkpoint") {
-      decontaminated
-        .groupBy(col("text"))
-        .agg(min_by(struct(col("doc_id"), col("lang")), col("doc_id")).as("__keeper"))
-        .select(col("__keeper.doc_id"), col("__keeper.lang"), col("text"))
-        .localCheckpoint(true)
-    }
-    val nearKept = time("near-dedup checkpoint (LSH+components)") {
-      val reps = Dedup.dedupNearBest(exactKept, 0.8, "text", "doc_id").select(col("doc_id"))
-      exactKept.join(reps, Seq("doc_id"), "left_semi").localCheckpoint(true)
-    }
-    val mixed = Sampling.temperatureFlatten(nearKept, "lang", "text", 2)
-    val stages: Seq[DataFrame] =
-      Seq(structural, qualified, nonRepetitive, decontaminated, exactKept, nearKept, mixed)
-    time("reason union + max(depth) + collect") {
-      val tagged = stages.zipWithIndex
-        .map { case (f, k) => f.select(col("doc_id"), lit(k + 1).as("__d")) }
-        .foldLeft(docs.select(col("doc_id"), lit(0).as("__d")))(_ unionByName _)
-      tagged.groupBy(col("doc_id")).agg(max(col("__d")).as("__r"))
-        .groupBy(col("__r")).agg(count(lit(1))).collect()
-    }
-    spark.stop()
-  }
-
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("attrition")) { attritionMain(args); return }
     if (args.headOption.contains("pipeline")) { pipelineMain(args); return }
     if (args.headOption.contains("micro")) { microMain(args); return }
     if (args.headOption.contains("decon")) { deconMain(args); return }

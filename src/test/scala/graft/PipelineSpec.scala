@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -11,6 +12,75 @@ import graft.operators.{Pipeline, SequencePack}
 class PipelineSpec extends SparkSpec {
 
   private lazy val docs = sources.Tables.load(spark, Sf0001, "documents")
+
+  /** The crafted hygienic corpus and its benchmark: one casualty per
+    * stage, plus two robustness inputs — a NULL text (its NULL Gopher
+    * predicate fails the gate) and an id on two rows of which only one
+    * carries the benchmark run (the id-keyed decontamination anti join
+    * removes both rows).
+    *
+    * ~100 DISTINCT tokens: lenScore 1.0 alone passes the quality gate
+    * (0.5 + punctScore 0.2 = 0.7) and repetition stays near zero. Every
+    * doc that must reach a LATER stage carries "the of" (two distinct
+    * engine stopwords) and word-shaped tokens, so the r07 structural
+    * Gopher gate (>=50 words, mean len 3-10, >=80% alpha, >=2 distinct
+    * stopwords) passes it and the intended stage still does the cutting.
+    */
+  private def hygienicCorpus: (DataFrame, DataFrame) = {
+    val s = spark
+    import s.implicits._
+    val base = (0 until 98).map(i => s"word$i").mkString(" ") + " the of"
+    val other = (100 until 200).map(i => s"vocab$i").mkString(" ")
+    val terms = (300 until 400).map(i => s"term$i").mkString(" ")
+    val benchRun = (1 to 10).map(i => s"bench$i").mkString(" ")
+    val crafted = Seq(
+      (1L, "en", base + " unique one"), // survives everything
+      (2L, "en", base + " unique one"), // exact dup of 1 -> collapses
+      // repetitive -> cut by the repetition stage (dup_frac ~1); "the of"
+      // keeps it past the structural gate so that stage gets to bite
+      (3L, "en", Seq.fill(118)("loop").mkString(" ") + " the of"),
+      // contains a benchmark 4-gram -> decontaminated (after passing gopher)
+      (4L, "en", s"$other $benchRun the of"),
+      (5L, "fr", other + " a is autre chose"),
+      // structural casualty: >=50 alphabetic words but ZERO stopwords —
+      // only the NEW gopher stage can cut this one (quality 0.7 passes)
+      (6L, "en", (0 until 60).map(i => s"keyword$i").mkString(" ")),
+      // one id, two rows: only the second carries the benchmark run
+      (7L, "de", s"$terms the of"),
+      (7L, "de", s"$terms $benchRun the of"),
+      (8L, "en", null) // NULL text
+    ).toDF("doc_id", "lang", "text")
+    (crafted, Seq((900L, "xx", benchRun)).toDF("doc_id", "lang", "text"))
+  }
+
+  /** ACTIONS `body` fires, not jobs: AQE materializes every shuffle stage
+    * as its own job, so a single collect over a join tree is many jobs —
+    * the QueryExecutionListener fires exactly once per action (collect /
+    * checkpoint). The listener bus posts async; settle until two
+    * consecutive reads agree (actions are blocking, so every event is
+    * queued when the body returns).
+    */
+  private def actionsIn(body: => Unit): Int = {
+    val actions = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        actions.incrementAndGet()
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+        actions.incrementAndGet()
+    }
+    def settled(): Int = {
+      var last = -1
+      var cur = actions.get()
+      while (cur != last) { Thread.sleep(200); last = cur; cur = actions.get() }
+      cur
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val before = settled()
+      body
+      settled() - before
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   test("composition laws: sample bound, quality gate, dedup, conservation") {
     val cfg = Pipeline.Config()
@@ -112,35 +182,13 @@ class PipelineSpec extends SparkSpec {
 
   test("hygienic pipeline: each new stage bites on a crafted corpus, composition holds") {
     import spark.implicits._
-    // ~100 DISTINCT tokens: lenScore 1.0 alone passes the quality gate
-    // (0.5 + punctScore 0.2 = 0.7) and repetition stays near zero. Every
-    // doc that must reach a LATER stage carries "the of" (two distinct
-    // engine stopwords) and word-shaped tokens, so the r07 structural
-    // Gopher gate (>=50 words, mean len 3-10, >=80% alpha, >=2 distinct
-    // stopwords) passes it and the intended stage still does the cutting
-    val base = (0 until 98).map(i => s"word$i").mkString(" ") + " the of"
-    val other = (100 until 200).map(i => s"vocab$i").mkString(" ")
-    val benchRun = (1 to 10).map(i => s"bench$i").mkString(" ")
-    val crafted = Seq(
-      (1L, "en", base + " unique one"), // survives everything
-      (2L, "en", base + " unique one"), // exact dup of 1 -> collapses
-      // repetitive -> cut by the repetition stage (dup_frac ~1); "the of"
-      // keeps it past the structural gate so that stage gets to bite
-      (3L, "en", Seq.fill(118)("loop").mkString(" ") + " the of"),
-      // contains a benchmark 4-gram -> decontaminated (after passing gopher)
-      (4L, "en", s"$other $benchRun the of"),
-      (5L, "fr", other + " a is autre chose"),
-      // structural casualty: >=50 alphabetic words but ZERO stopwords —
-      // only the NEW gopher stage can cut this one (quality 0.7 passes)
-      (6L, "en", (0 until 60).map(i => s"keyword$i").mkString(" "))
-    ).toDF("doc_id", "lang", "text")
-    val benchmark = Seq((900L, "xx", benchRun)).toDF("doc_id", "lang", "text")
+    val (crafted, benchmark) = hygienicCorpus
     val selected = Pipeline.selectHygienic(crafted, benchmark)
     val ids = selected.select("doc_id").as[Long].collect().toSet
-    // 6 cut by the structural gate, 2 collapsed into 1, 3 repetitive,
-    // 4 contaminated; 1 and 5 survive (fr is the rarest group ->
-    // temperature keeps it whole; en's single survivor group also keeps
-    // rate 1.0 since both groups have size 1)
+    // 6 and the NULL-text 8 cut by the structural gate, 2 collapsed into
+    // 1, 3 repetitive, 4 and both rows of 7 contaminated; 1 and 5 survive
+    // (fr is the rarest group -> temperature keeps it whole; en's single
+    // survivor group also keeps rate 1.0 since both groups have size 1)
     assert(ids === Set(1L, 5L))
     // token conservation through packing: packed n_tokens sums to the
     // selected docs' CHUNK tokens (overlap duplicates overlap*(nChunks-1)
@@ -158,19 +206,7 @@ class PipelineSpec extends SparkSpec {
 
   test("attrition funnel + reject reasons: chained counts, per-stage attribution, kept == pipeline") {
     import spark.implicits._
-    // the crafted corpus from the hygienic test: one casualty per stage
-    val base = (0 until 98).map(i => s"word$i").mkString(" ") + " the of"
-    val other = (100 until 200).map(i => s"vocab$i").mkString(" ")
-    val benchRun = (1 to 10).map(i => s"bench$i").mkString(" ")
-    val crafted = Seq(
-      (1L, "en", base + " unique one"),
-      (2L, "en", base + " unique one"), // exact dup of 1
-      (3L, "en", Seq.fill(118)("loop").mkString(" ") + " the of"), // repetitive
-      (4L, "en", s"$other $benchRun the of"), // contaminated
-      (5L, "fr", other + " a is autre chose"),
-      (6L, "en", (0 until 60).map(i => s"keyword$i").mkString(" ")) // gopher casualty
-    ).toDF("doc_id", "lang", "text")
-    val benchmark = Seq((900L, "xx", benchRun)).toDF("doc_id", "lang", "text")
+    val (crafted, benchmark) = hygienicCorpus
 
     val funnel = Pipeline
       .attrition(crafted, benchmark)
@@ -182,14 +218,14 @@ class PipelineSpec extends SparkSpec {
       "gopher", "quality", "repetition", "decontamination", "exact_dedup", "near_dedup", "mix"
     ))
     // the funnel chains: n_out(i) == n_in(i+1), n_in - n_dropped == n_out
-    assert(funnel.head._3 === 6L)
+    assert(funnel.head._3 === 8L) // distinct input ids
     funnel.foreach { case (_, _, nIn, nDropped, nOut) => assert(nIn - nDropped === nOut) }
     funnel.sliding(2).foreach { w => assert(w(0)._5 === w(1)._3) }
     // each crafted casualty lands in its intended stage
     val drops = funnel.map(f => f._2 -> f._4).toMap
-    assert(drops("gopher") === 1L) // doc 6
+    assert(drops("gopher") === 2L) // doc 6 and the NULL-text doc 8
     assert(drops("repetition") === 1L) // doc 3
-    assert(drops("decontamination") === 1L) // doc 4
+    assert(drops("decontamination") === 2L) // doc 4 and the shared id 7
     assert(drops("exact_dedup") === 1L) // doc 2 collapses into 1
     assert(funnel.last._5 === 2L) // docs 1 and 5 survive
 
@@ -198,10 +234,12 @@ class PipelineSpec extends SparkSpec {
       .as[(Long, String)]
       .collect()
       .toMap
-    assert(reasons.size === 6) // one row per INPUT doc
+    assert(reasons.size === 8) // one row per INPUT id
     assert(reasons(6L) === "gopher")
     assert(reasons(3L) === "repetition")
     assert(reasons(4L) === "decontamination")
+    assert(reasons(7L) === "decontamination") // leaves with both rows
+    assert(reasons(8L) === "gopher")
     assert(reasons(2L) === "exact_dedup")
     assert(reasons(1L) === "kept")
     assert(reasons(5L) === "kept")
@@ -226,45 +264,27 @@ class PipelineSpec extends SparkSpec {
       (3L, "fr", base + " autre chose")
     ).toDF("doc_id", "lang", "text")
     val benchmark = Seq((900L, "xx", "bench run only")).toDF("doc_id", "lang", "text")
-    // count ACTIONS, not jobs: AQE materializes every shuffle stage as its
-    // own job, so a single collect over the reason join tree is many jobs —
-    // the QueryExecutionListener fires exactly once per action (collect /
-    // checkpoint), which is the thing the one-pass rework bounds. The
-    // listener bus posts async; settle until two consecutive reads agree
-    // (actions are blocking, so every event is queued when the body returns).
-    val actions = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-        actions.incrementAndGet()
-      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
-        actions.incrementAndGet()
-    }
-    def actionsIn(body: => Unit): Int = {
-      val before = {
-        var last = -1; var cur = actions.get()
-        while (cur != last) { Thread.sleep(200); last = cur; cur = actions.get() }
-        cur
-      }
-      body
-      var last = -1
-      var cur = actions.get()
-      while (cur != last) { Thread.sleep(200); last = cur; cur = actions.get() }
-      cur - before
-    }
-    spark.listenerManager.register(listener)
-    try {
-      // building rejectReasons is LAZY apart from the chain's eager dedup
-      // checkpoints — its action count IS the chain's own unavoidable work
-      val chainActions = actionsIn(Pipeline.rejectReasons(crafted, benchmark))
-      // the funnel must add exactly the single groupBy(reason) collect on
-      // top of that — the old shape added 8 sequential boundary counts
-      val attrActions = actionsIn(Pipeline.attrition(crafted, benchmark))
-      assert(chainActions > 0, "the chain's checkpoints run eagerly")
-      assert(
-        attrActions <= chainActions + 1,
-        s"funnel must be one action: $attrActions vs chain $chainActions"
-      )
-    } finally spark.listenerManager.unregister(listener)
+    // building rejectReasons is LAZY apart from the chain's eager
+    // checkpoints — its action count IS the chain's own unavoidable work
+    val chainActions = actionsIn(Pipeline.rejectReasons(crafted, benchmark))
+    // the funnel must add exactly the single groupBy(reason) collect on
+    // top of that — the old shape added 8 sequential boundary counts
+    val attrActions = actionsIn(Pipeline.attrition(crafted, benchmark))
+    assert(chainActions > 0, "the chain's checkpoints run eagerly")
+    assert(
+      attrActions <= chainActions + 1,
+      s"funnel must be one action: $attrActions vs chain $chainActions"
+    )
+  }
+
+  test("one shape: building selectHygienic and rejectReasons fires the same actions") {
+    val (crafted, benchmark) = hygienicCorpus
+    // the pipeline and its audit build the SAME chain — no extra audit
+    // checkpoints, no lazier pipeline-only branch
+    val pipelineActions = actionsIn(Pipeline.selectHygienic(crafted, benchmark))
+    val auditActions = actionsIn(Pipeline.rejectReasons(crafted, benchmark))
+    assert(pipelineActions > 0, "the chain's checkpoints run eagerly")
+    assert(auditActions === pipelineActions)
   }
 
   test("mixing pipeline: importance, temperature, budget, and shard stages all bite; plan laws hold") {
