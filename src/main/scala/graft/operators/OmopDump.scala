@@ -17,8 +17,11 @@ import org.apache.spark.sql.SparkSession
   *    unity + per-file/total row counts from footers (`dump_table.py:235-248`).
   *
   * Scale design: the scan parallelizes via JDBC range partitions or parquet
-  * splits; the write is shuffle-free (scan partitions stream straight into
-  * shard files, split at `maxRecordsPerFile`). Nothing is collected on the
+  * splits. Without a limit, or with one above the source count (which is
+  * then dropped, see below), the write is shuffle-free: scan partitions
+  * stream straight into shard files, split at `maxRecordsPerFile`. A limit
+  * at or below the count over a multi-partition scan plans a global LIMIT,
+  * which gathers the rows into one writer task. Nothing is collected on the
   * driver at any size.
   */
 object OmopDump {
@@ -42,7 +45,10 @@ object OmopDump {
         n > 0 && n <= Int.MaxValue,
         s"limit $n out of range (1..${Int.MaxValue}); use grab-everything (no limit) beyond that"
       )
-      scanned.limit(n.toInt)
+      // A limit above the count cannot bite, and the read-back check below
+      // accepts the same outcomes without it; applied, it would shuffle
+      // every row into one writer task.
+      if (n <= sourceCount) scanned.limit(n.toInt) else scanned
     }
     ShardedParquetSink.write(limited, outputDir, layout)
     val report = ShardedParquetSink.readBackReport(spark, outputDir)

@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.jdbc.JDBCOptions
+import org.apache.spark.sql.jdbc.JdbcDialects
 
 /** Connection + scan-tuning surface for a relational (Oracle-style OMOP CDM)
   * source. Mirrors the reference's env-var configuration
@@ -9,7 +11,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * replaces the single serial cursor with Spark's partitioned JDBC scan: N
   * executors each open their own connection over a `partitionColumn` range,
   * so the architectural ceiling of 1x parallelism in the reference
-  * (`dump_table.py:41-45`) becomes numPartitions-x.
+  * (`dump_table.py:41-45`) becomes numPartitions-x. [[JdbcNoteSource]]
+  * reads the range bounds, `min`/`max` of `partitionColumn`, at the source
+  * before each scan.
   *
   * The password is deliberately excluded from `toString`/logs.
   */
@@ -59,9 +63,9 @@ object JdbcSourceConfig {
   * exact ResultSetMetaData, so the nullable-int workaround
   * (`dump_table.py:144-146`) vanishes: Spark's LongType is natively nullable.
   *
-  * No Oracle driver ships in this offline environment, so these paths are
-  * exercised in tests through the [[NoteSource]] abstraction with a parquet
-  * stand-in; the option plumbing below is the production path.
+  * The scan and the scalar queries run live in `JdbcIntegrationSpec`
+  * against embedded Derby, which exercises the same generic JDBC source and
+  * per-engine dialect machinery an Oracle URL does.
   */
 object JdbcSource {
 
@@ -94,18 +98,35 @@ object JdbcSource {
   /** O2: scalar count computed inside the database — only the scalar crosses
     * the wire, exactly like `select count(1) from note` (`dump_table.py:59,69`).
     */
-  def countAtSource(spark: SparkSession, cfg: JdbcSourceConfig, table: String): Long = {
-    val df = spark.read
-      .format("jdbc")
-      .option("url", cfg.url)
-      .option("query", s"select count(1) as n from $table")
-      .option("user", cfg.user)
-      .option("password", cfg.password)
-      .load()
-    // positional, not by name: identifier case-folding is engine-specific
-    // (Derby/Oracle upper-case an unquoted alias to N — found by the live
-    // Derby integration test; a name lookup works on some engines only)
-    df.collect()(0).getAs[Number](0).longValue()
+  def countAtSource(spark: SparkSession, cfg: JdbcSourceConfig, table: String): Long =
+    atSource(cfg, table, s"select count(1) from $table").head.get
+
+  /** `min`/`max` of `col` at the source; None when the table holds no
+    * non-NULL key (empty, or every key NULL).
+    */
+  def boundsAtSource(cfg: JdbcSourceConfig, table: String, col: String): Option[(Long, Long)] =
+    atSource(cfg, table, s"select min($col), max($col) from $table") match {
+      case Seq(Some(lo), Some(hi)) => Some((lo, hi))
+      case _                       => None
+    }
+
+  /** One row of integral scalars from a driver-side connection: no Spark job
+    * and no schema-resolution query for a single number. The connection comes
+    * from the URL's dialect, so driver lookup and connection providers stay
+    * Spark's. Columns are read by position, because alias case-folding is
+    * engine-specific (Derby and Oracle upper-case an unquoted alias).
+    */
+  private def atSource(cfg: JdbcSourceConfig, table: String, sql: String): Seq[Option[Long]] = {
+    val opts = new JDBCOptions(cfg.url, table, Map("user" -> cfg.user, "password" -> cfg.password))
+    val conn = JdbcDialects.get(cfg.url).createConnectionFactory(opts)(-1)
+    try {
+      val rs = conn.createStatement().executeQuery(sql)
+      require(rs.next(), s"no row from: $sql")
+      (1 to rs.getMetaData.getColumnCount).map { i =>
+        val v = rs.getLong(i)
+        if (rs.wasNull()) None else Some(v)
+      }
+    } finally conn.close()
   }
 }
 
@@ -133,7 +154,15 @@ final class ParquetNoteSource(path: String, coalesceTo: Option[Int] = None) exte
   def countAtSource(spark: SparkSession): Long = scan(spark).count()
 }
 
+/** Scans in `numPartitions` range tasks when `partitionColumn` is set: the
+  * bounds are read at the source, and Spark's first range also takes the
+  * NULL keys. A table without a non-NULL key is scanned unbounded.
+  */
 final class JdbcNoteSource(cfg: JdbcSourceConfig, table: String) extends NoteSource {
-  def scan(spark: SparkSession): DataFrame = JdbcSource.readTable(spark, cfg, table)
+  def scan(spark: SparkSession): DataFrame = {
+    val bounds = cfg.partitionColumn.filter(_ => cfg.numPartitions > 1)
+      .flatMap(JdbcSource.boundsAtSource(cfg, table, _))
+    JdbcSource.readTable(spark, cfg, table, bounds)
+  }
   def countAtSource(spark: SparkSession): Long = JdbcSource.countAtSource(spark, cfg, table)
 }

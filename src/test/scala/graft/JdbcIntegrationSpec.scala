@@ -56,6 +56,26 @@ class JdbcIntegrationSpec extends SparkSpec {
     } finally conn.close()
   }
 
+  // robustness tables: an empty NOTE, and one keyed on a nullable column
+  // whose ids 0..19 alternate with NULL keys (PERSON_ID tells rows apart)
+  private lazy val robustnessDb: Unit = {
+    db
+    val conn = DriverManager.getConnection(url)
+    try {
+      val st = conn.createStatement()
+      st.executeUpdate("CREATE TABLE NOTE_EMPTY (NOTE_ID BIGINT NOT NULL PRIMARY KEY, NOTE_TEXT CLOB)")
+      st.executeUpdate("CREATE TABLE NOTE_NULLKEY (NOTE_ID BIGINT, PERSON_ID BIGINT NOT NULL, NOTE_TEXT CLOB)")
+      val ps = conn.prepareStatement("INSERT INTO NOTE_NULLKEY VALUES (?, ?, ?)")
+      (0 until 40).foreach { i =>
+        if (i % 2 == 0) ps.setLong(1, (i / 2).toLong) else ps.setNull(1, java.sql.Types.BIGINT)
+        ps.setLong(2, i.toLong)
+        ps.setString(3, s"note $i")
+        ps.addBatch()
+      }
+      ps.executeBatch()
+    } finally conn.close()
+  }
+
   test("O2: count-at-source pushes the scalar count to the database") {
     db
     assert(JdbcSource.countAtSource(spark, cfg(1), "NOTE") == NRows.toLong)
@@ -94,6 +114,51 @@ class JdbcIntegrationSpec extends SparkSpec {
     // dumped parquet reads back with the dialect-rewritten schema intact
     val back = spark.read.parquet(out)
     assert(back.schema("NOTE_TEXT").dataType == StringType)
+  }
+
+  test("O1: a partitioned JdbcNoteSource scans in numPartitions ranges read at the source, each row once") {
+    db
+    val source = new JdbcNoteSource(cfg(4), "NOTE")
+    val parts = source.scan(spark).rdd.getNumPartitions
+    assert(parts == 4, s"expected 4 JDBC range partitions from the source's key bounds, got $parts")
+    val out = s"$testOut/jdbc_dump_ranges"
+    val res = OmopDump.run(spark, source, out, limit = None)
+    assert(res.sourceCount == NRows.toLong && res.report.totalRows == NRows.toLong)
+    val back = spark.read.parquet(out).agg(count(lit(1)), sum(col("NOTE_ID"))).head()
+    assert(back.getLong(0) == NRows.toLong)
+    assert(back.getLong(1) == NRows.toLong * (NRows - 1) / 2, "every row exactly once across the range boundaries")
+  }
+
+  test("a limit above the source count is not applied: the dump keeps one shard per range") {
+    db
+    val out = s"$testOut/jdbc_dump_limit_above"
+    val res = OmopDump.run(spark, new JdbcNoteSource(cfg(4), "NOTE"), out, limit = Some(1000L))
+    assert(res.sourceCount == NRows.toLong && res.report.totalRows == NRows.toLong)
+    assert(spark.read.parquet(out).count() == NRows.toLong)
+    assert(res.report.numFiles == 4, s"a global LIMIT would gather the rows into 1 shard, got ${res.report.numFiles}")
+  }
+
+  test("robustness: an empty table dumps through a partitioned source (NULL min/max) and reads back 0 rows") {
+    robustnessDb
+    val partitioned = cfg(4)
+    assert(JdbcSource.boundsAtSource(partitioned, "NOTE_EMPTY", "NOTE_ID").isEmpty)
+    val out = s"$testOut/jdbc_dump_empty"
+    val res = OmopDump.run(spark, new JdbcNoteSource(partitioned, "NOTE_EMPTY"), out, limit = None)
+    assert(res.sourceCount == 0L && res.report.totalRows == 0L)
+    assert(spark.read.parquet(out).count() == 0L)
+  }
+
+  test("robustness: a nullable partition column with NULL keys dumps every row, NULL-key rows included") {
+    robustnessDb
+    val source = new JdbcNoteSource(cfg(4), "NOTE_NULLKEY")
+    assert(source.scan(spark).rdd.getNumPartitions == 4)
+    val out = s"$testOut/jdbc_dump_nullkey"
+    val res = OmopDump.run(spark, source, out, limit = None)
+    assert(res.sourceCount == 40L && res.report.totalRows == 40L)
+    val back = spark.read.parquet(out)
+    assert(back.filter(col("NOTE_ID").isNull).count() == 20L)
+    assert(back.select("PERSON_ID").distinct().count() == 40L)
+    assert(back.agg(sum(col("PERSON_ID"))).head().getLong(0) == 40L * 39 / 2)
   }
 
   test("resumable dump off the live JDBC source: range filter pushed into the source query, resume == fresh") {

@@ -31,11 +31,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - Oracle-only types (BINARY_FLOAT/BINARY_DOUBLE/TIMESTAMP WITH TIME
   *    ZONE) have no JDBC-standard code, so the shared default CANNOT
   *    place them — the dialect itself must.
-  *  - LIMIT emission: `OmopDump.run(limit)` plans a LIMIT over the scan;
-  *    on Oracle the dialect pushes it as `WHERE rownum <= n` — the same
-  *    top-n the reference requests with `FETCH FIRST :how_many ROWS
-  *    ONLY` (`dump_table.py:94`), pushed to the database so the scan,
-  *    not the executor, truncates.
+  *  - LIMIT emission: the dialect's limit clause is `WHERE rownum <= n`,
+  *    the same top-n the reference requests with `FETCH FIRST :how_many
+  *    ROWS ONLY` (`dump_table.py:94`). `OmopDump.run(limit)` reads through
+  *    the V1 `spark.read.format("jdbc")` relation, which pushes no limit:
+  *    the plan keeps the LIMIT above `Scan JDBCRelation`, so the executor,
+  *    not the database, truncates. This spec pins the clause only.
   *  - Write-side types: round-tripping parquet back INTO Oracle must
   *    emit Oracle-native DDL types (VARCHAR2/NUMBER), not ANSI names
   *    Oracle rejects.
