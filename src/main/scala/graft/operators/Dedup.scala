@@ -554,16 +554,14 @@ object Dedup {
   private def driverComponentsMaxEdges: Long =
     sys.props.get("graft.components.driverMaxEdges").map(_.toLong).getOrElse(1L << 20)
 
-  /** Exact union-find over a driver-collected symmetric edge frame —
-    * [[componentsOf]]'s small regime. Roots are maintained as the MIN id
-    * of their set (union attaches the larger root under the smaller), so
-    * after path compression every vertex's root IS its component's min
-    * member: the same labels the star contraction converges to.
+  /** Exact union-find over driver-held edges — the small regime of
+    * [[componentsOf]] and [[keepNearBest]]. Roots are maintained as the
+    * MIN id of their set (union attaches the larger root under the
+    * smaller), so after path compression every vertex's root IS its
+    * component's min member: the same labels the star contraction
+    * converges to. Returns every vertex with its label.
     */
-  private def driverComponents(
-      spark: org.apache.spark.sql.SparkSession,
-      rows: Array[org.apache.spark.sql.Row]
-  ): DataFrame = {
+  private def unionFind(edges: Iterator[(Long, Long)]): Map[Long, Long] = {
     val parent = new java.util.HashMap[Long, Long]()
     def find(x: Long): Long = {
       var r = x
@@ -572,20 +570,25 @@ object Dedup {
       while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
       r
     }
-    var i = 0
-    while (i < rows.length) {
-      val row = rows(i); i += 1
-      val (u, v) = (row.getLong(0), row.getLong(1))
+    edges.foreach { case (u, v) =>
       if (!parent.containsKey(u)) parent.put(u, u)
       if (!parent.containsKey(v)) parent.put(v, v)
       val (ru, rv) = (find(u), find(v))
       if (ru != rv) { if (ru < rv) parent.put(rv, ru) else parent.put(ru, rv) }
     }
-    val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size())
+    val out = Map.newBuilder[Long, Long]
     val keys = parent.keySet().iterator()
     while (keys.hasNext) { val k = keys.next(); out += ((k, find(k))) }
+    out.result()
+  }
+
+  /** [[unionFind]] over a collected symmetric edge frame, as a label frame. */
+  private def driverComponents(
+      spark: org.apache.spark.sql.SparkSession,
+      rows: Array[org.apache.spark.sql.Row]
+  ): DataFrame = {
     import spark.implicits._
-    out.toSeq.toDF("doc_id", "cluster_id")
+    unionFind(rows.iterator.map(r => (r.getLong(0), r.getLong(1)))).toSeq.toDF("doc_id", "cluster_id")
   }
 
   /** Clustering strategy selector for [[dedupNear]]. Both produce
@@ -707,6 +710,82 @@ object Dedup {
         col("b.score").as("score"),
         col("n_members")
       )
+  }
+
+  /** `docs` restricted to the rows of one best-score representative per
+    * near-dup cluster — the survivor set `docs ⋉ dedupNearBest(docs).doc_id`
+    * that a pipeline stage wants, with the same pick: `max(struct(score,
+    * -id))`, so NULL scores lowest, NaN highest, `-0.0 == 0.0`, ties to the
+    * min id, and every row of a winning id survives. NULL ids never
+    * survive, as the semi join drops them. Two regimes, one result
+    * (DedupSpec's regime-equality law):
+    *
+    *  - COLLECTED, when the verified pairs fit [[componentsOf]]'s driver cap
+    *    (`driverMaxEdges`, counted as symmetric edges): the pairs are
+    *    collected ONCE (capped limit, no persist or count), [[unionFind]]
+    *    labels their ids, only those clustered ids are scored (one scan,
+    *    broadcast semi join against the local id frame), the driver picks
+    *    each cluster's winner, and the result is `docs` LEFT ANTI
+    *    broadcast(losers): no aggregate and no shuffle of the corpus. Zero
+    *    verified pairs return `docs` without scoring anything.
+    *  - DISTRIBUTED, over the cap, with cap 0, or for non-long ids: the
+    *    semi join of `docs` against [[dedupNearBest]] — clustering labels
+    *    joined back onto every document, every document scored, one
+    *    `groupBy(cluster_id)`. The collected regime's probe job is wasted
+    *    there, as in [[componentsOf]].
+    */
+  def keepNearBest(
+      docs: DataFrame,
+      threshold: Double,
+      textCol: String = "text",
+      idCol: String = "doc_id",
+      scoreOf: Column => Column = TextFunctions.qualityScoreFused,
+      driverMaxEdges: Long = driverComponentsMaxEdges
+  ): DataFrame = {
+    val key = "__graft_near_id"
+    def distributed: DataFrame = {
+      val reps = dedupNearBest(docs, threshold, textCol, idCol, scoreOf).select(col("doc_id").as(key))
+      docs.join(reps, col(idCol) === col(key), "left_semi")
+    }
+    if (driverMaxEdges <= 0L || docs.schema(idCol).dataType != org.apache.spark.sql.types.LongType)
+      return distributed
+    val cap = math.min(driverMaxEdges, (Int.MaxValue - 1).toLong).toInt
+    val rows = withSignatures(docs, textCol, idCol) { base =>
+      minhashPairsOf(base, threshold).select(col("doc_a"), col("doc_b")).limit(cap + 1).collect()
+    }
+    // pairs are ordered (doc_a < doc_b), so each distinct one is two
+    // symmetric edges; duplicated ids can repeat a pair row
+    val pairs = rows.iterator.map(r => (r.getLong(0), r.getLong(1))).toSet
+    if (rows.length > cap || 2L * pairs.size > cap) return distributed
+    val kept = docs.filter(col(idCol).isNotNull)
+    if (pairs.isEmpty) return kept
+    val label = unionFind(pairs.iterator)
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val scored = docs
+      .join(broadcast(label.keys.toSeq.toDF(key)), col(idCol) === col(key), "left_semi")
+      .select(col(idCol), scoreOf(col(textCol)).as("score"))
+    // the pick compares internal values with Spark's own ordering of the
+    // score type, the ordering `max(struct(...))` uses
+    val scoreType = scored.schema("score").dataType
+    val ordering = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(scoreType)
+    val internal = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(scoreType)
+    def beats(s: Any, id: Long, t: Any, tid: Long): Boolean = {
+      val c =
+        if (s == null) { if (t == null) 0 else -1 }
+        else if (t == null) 1
+        else ordering.compare(s, t)
+      c > 0 || (c == 0 && id < tid)
+    }
+    val best = scala.collection.mutable.HashMap.empty[Long, (Any, Long)]
+    scored.collect().foreach { r =>
+      val (id, s) = (r.getLong(0), internal(r.get(1)))
+      val cluster = label(id)
+      if (best.get(cluster).forall { case (t, tid) => beats(s, id, t, tid) }) best(cluster) = (s, id)
+    }
+    val winners = best.valuesIterator.map(_._2).toSet
+    val losers = label.keys.filterNot(winners).toSeq.toDF(key)
+    kept.join(broadcast(losers), col(idCol) === col(key), "left_anti")
   }
 
   /** CENTRALITY-based representative per near-dup cluster — the THIRD

@@ -21,9 +21,9 @@ import graft.functions.{GraftExpressions, TextFunctions}
   *
   * Scale shape: every stage is shuffle-bounded by what it must do —
   * quality is scan-only, exact dedup one hash-aggregate, near-dedup the
-  * banded-LSH + star-contraction path (internally persisted /
-  * checkpointed), sampling a bounded-heap aggregate, packing a window
-  * partitioned by doc_id. Stage handoffs are LEFT SEMI joins on the id
+  * banded-LSH pair pass with its driver or star-contraction clustering
+  * ([[Dedup.keepNearBest]]), sampling a bounded-heap aggregate, packing
+  * a window partitioned by doc_id. Stage handoffs are LEFT SEMI joins on the id
   * (small survivor sets; broadcast-able after dedup shrinks the corpus).
   * The exact-dedup survivor frame is localCheckpoint-ed: the clustering
   * loop's own actions would otherwise re-evaluate the scan+filter
@@ -102,11 +102,19 @@ object Pipeline {
     * groupBy + semi-join shape evaluated the upstream scan on BOTH sides
     * (the dominant cost at 500k docs) and added a second shuffle — then
     * one best-quality representative per MinHash-LSH cluster (q42
-    * semantics). Both frames localCheckpoint: the clustering loop runs
-    * its own actions per round, and downstream stages read the survivors
-    * more than once; without materialization each action re-runs the
-    * whole upstream chain. Shared dedup core of both composed pipelines —
-    * the checkpoint scoping and keeper-column subtleties live HERE, once.
+    * semantics) through [[Dedup.keepNearBest]].
+    *
+    * Cost shape: the exact-dedup frame is localCheckpointed because the
+    * near-dedup reads it more than once (its pair collect and its score
+    * collect). When the verified pairs fit the driver cap, near dedup is
+    * those two collects, a driver union-find and pick, and a broadcast
+    * anti join of the losers — no aggregate and no shuffle of the corpus;
+    * over the cap it is the [[Dedup.dedupNearBest]] semi join. The
+    * survivors are localCheckpointed too: downstream stages read them
+    * more than once, and each read would otherwise rebuild the losers'
+    * broadcast (or, over the cap, the clustering join). Shared dedup core
+    * of both composed pipelines — the checkpoint scoping and keeper-column
+    * subtleties live HERE, once.
     */
   private def dedupSurvivors(
       gated: DataFrame,
@@ -135,10 +143,7 @@ object Pipeline {
       .agg(min_by(struct(keeperFields: _*), col(idCol)).as("__keeper"))
       .select((idCol +: carryCols).map(c => col(s"__keeper.$c")) :+ col(textCol): _*)
       .localCheckpoint(true)
-    val reps = Dedup
-      .dedupNearBest(exactKept, nearDupThreshold, textCol, idCol)
-      .select(col("doc_id").as(idCol))
-    (exactKept, exactKept.join(reps, Seq(idCol), "left_semi").localCheckpoint(true))
+    (exactKept, Dedup.keepNearBest(exactKept, nearDupThreshold, textCol, idCol).localCheckpoint(true))
   }
 
   /** Run the full pipeline; returns one row per training sequence:
@@ -196,12 +201,13 @@ object Pipeline {
     *
     * Scale shape matches [[selectCorpus]]: one scan-shaped gate pass
     * (checkpointed, see [[hygienicStages]]), one min_by hash-aggregate,
-    * the banded-LSH near-dedup, two localCheckpoints at the cluster
-    * boundaries, and the broadcast
-    * temperature rate table. The benchmark side is scrubbed with the
-    * same chain before indexing (scrub-before-hash discipline — a
-    * benchmark item differing from a corpus page only in an email must
-    * still decontaminate it).
+    * the banded-LSH near-dedup (one pair collect and one score collect of
+    * the clustered ids when the pairs fit the driver cap, see
+    * [[dedupSurvivors]]), two localCheckpoints at the dedup boundaries,
+    * and the broadcast temperature rate table. The benchmark side is
+    * scrubbed with the same chain before indexing (scrub-before-hash
+    * discipline — a benchmark item differing from a corpus page only in
+    * an email must still decontaminate it).
     */
   def selectHygienic(
       docs: DataFrame,

@@ -2,9 +2,12 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 import scala.jdk.CollectionConverters._
 
@@ -121,10 +124,6 @@ object ShardedParquetSink {
     }
   }
 
-  /** O11: open the output directory as one dataset and count rows per file
-    * from parquet FOOTERS only — no data pages are read, matching the
-    * reference's fragment-metadata walk (`dump_table.py:243-248`).
-    */
   /** How many shards the driver-side footer pool handles before
     * [[readBackReport]] distributes the walk as an executor job: under
     * it, a 32-thread driver pool finishes in well under a second with
@@ -134,24 +133,36 @@ object ShardedParquetSink {
     */
   val DistributedReportThreshold: Int = 4096
 
+  /** O11: verify the output directory from parquet FOOTERS only — no
+    * data pages are read, matching the reference's fragment-metadata walk
+    * (`dump_table.py:243-248`). Each shard's footer is opened once and
+    * gives both its row count and its Spark schema (Spark's own footer
+    * reader, made nullable as a file relation reports it, so the DDL is
+    * `spark.read.parquet(dir).schema.toDDL` without a Spark job or a file
+    * index). Every shard must carry the same schema — the reference's
+    * unified-schema check (`dump_table.py:235-248`) — and a directory
+    * with no shards is refused by name.
+    */
   def readBackReport(
       spark: SparkSession,
       outputDir: String,
       distributedThreshold: Int = DistributedReportThreshold
   ): DumpReport = {
-    val schemaDdl = spark.read.parquet(outputDir).schema.toDDL
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files = listParquetFiles(conf, outputDir)
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val files = listParquetFiles(hadoopConf, outputDir)
+    require(files.nonEmpty, s"read-back: no parquet shards in $outputDir")
+    // the session's SQL confs carry the schema converter's settings
+    val sqlConfs = spark.conf.getAll
     // Footer reads are independent metadata IO — concurrent driver pool
-    // up to the threshold, executor job past it (r16: the doc-comment
-    // promise made real). Either way no data pages are read.
-    val shards =
+    // up to the threshold, executor job past it
+    val footers =
       if (files.size <= distributedThreshold) {
+        val read = footerReader(hadoopConf, sqlConfs)
         val pool =
-          java.util.concurrent.Executors.newFixedThreadPool(math.min(32, math.max(1, files.size)))
+          java.util.concurrent.Executors.newFixedThreadPool(math.min(32, files.size))
         try {
-          val futures = files.map(p => pool.submit(new java.util.concurrent.Callable[ShardInfo] {
-            def call(): ShardInfo = ShardInfo(p.toString, footerRowCount(conf, p))
+          val futures = files.map(p => pool.submit(new java.util.concurrent.Callable[ShardFooter] {
+            def call(): ShardFooter = read(p)
           }))
           futures.map(_.get())
         } finally pool.shutdown()
@@ -159,10 +170,10 @@ object ShardedParquetSink {
         // ship the hadoop conf as its entry map (Configuration is not
         // serializable; executors overlay the driver's entries on their
         // own defaults), fan the path list out ~1k paths per task, and
-        // collect one tiny (path, rows) pair per shard — driver memory
-        // stays O(shards), the IO runs cluster-wide
+        // collect one tiny footer summary per shard — driver memory stays
+        // O(shards), the IO runs cluster-wide
         val entries = {
-          val it = conf.iterator()
+          val it = hadoopConf.iterator()
           val b = Seq.newBuilder[(String, String)]
           while (it.hasNext) { val e = it.next(); b += ((e.getKey, e.getValue)) }
           b.result()
@@ -173,16 +184,47 @@ object ShardedParquetSink {
           .mapPartitions { paths =>
             val c = new Configuration()
             entries.foreach { case (k, v) => c.set(k, v) }
-            paths.map(p => ShardInfo(p, footerRowCount(c, new Path(p))))
+            val read = footerReader(c, sqlConfs)
+            paths.map(p => read(new Path(p)))
           }
           .collect()
           .toSeq
-          .sortBy { s =>
-            val name = new Path(s.path).getName
+          .sortBy { f =>
+            val name = new Path(f.path).getName
             (shardIndex(name), name) // same order listParquetFiles yields
           }
       }
-    DumpReport(schemaDdl, shards)
+    val schema = footers.head.schema
+    val other = footers.find(_.schema != schema)
+    require(
+      other.isEmpty,
+      s"read-back: shards disagree on the schema: ${footers.head.path} has " +
+        s"${schema.toDDL} but ${other.get.path} has ${other.get.schema.toDDL}"
+    )
+    DumpReport(schema.toDDL, footers.map(f => ShardInfo(f.path, f.rows)))
+  }
+
+  /** One shard's footer as the read-back sees it. */
+  private final case class ShardFooter(path: String, rows: Long, schema: StructType)
+
+  /** A footer reader: opens a shard's footer once for its row count and
+    * nullable Spark schema, converted under the session's `sqlConfs`.
+    */
+  private def footerReader(conf: Configuration, sqlConfs: Map[String, String]): Path => ShardFooter = {
+    val sqlConf = new SQLConf
+    sqlConfs.foreach { case (k, v) => sqlConf.setConfString(k, v) }
+    val converter = new ParquetToSparkSchemaConverter(sqlConf)
+    file => {
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      try {
+        val footer = reader.getFooter
+        ShardFooter(
+          file.toString,
+          footer.getBlocks.asScala.map(_.getRowCount.longValue).sum,
+          ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer), converter).toNullable
+        )
+      } finally reader.close()
+    }
   }
 
   // Spark task files (`part-00042-<uuid>…parquet`) and this sink's renamed
@@ -212,11 +254,5 @@ object ShardedParquetSink {
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map(_.getPath)
       .sortBy(p => (shardIndex(p.getName), p.getName))
-  }
-
-  private def footerRowCount(conf: Configuration, file: Path): Long = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try reader.getFooter.getBlocks.asScala.map(_.getRowCount.longValue).sum
-    finally reader.close()
   }
 }

@@ -58,14 +58,9 @@ object Profile {
         .localCheckpoint(true)
       exactKept.count()
     }
-    var reps: org.apache.spark.sql.DataFrame = null
-    time("near-dedup best (cluster+argmax)") {
-      reps = Dedup.dedupNearBest(exactKept, cfg.nearDupThreshold).select(col("doc_id"))
-      reps.count()
-    }
     var survivors: org.apache.spark.sql.DataFrame = null
-    time("survivors checkpoint") {
-      survivors = exactKept.join(reps, Seq("doc_id"), "left_semi").localCheckpoint(true)
+    time("near-dedup survivors + checkpoint") {
+      survivors = Dedup.keepNearBest(exactKept, cfg.nearDupThreshold).localCheckpoint(true)
       survivors.count()
     }
     time("balanced sample") {

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Dedup
 import graft.sources.Tables
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -145,6 +146,99 @@ class DedupSpec extends SparkSpec {
     val selfOnly = labelsOf(Seq((5L, 5L), (7L, 8L)), Long.MaxValue)
     assert(selfOnly == labelsOf(Seq((5L, 5L), (7L, 8L)), 0L))
     assert(selfOnly == Map(7L -> 7L, 8L -> 7L))
+  }
+
+  /** A 60-token sliding window: windows 3 apart share 3-shingle Jaccard
+    * 0.90, 5 apart 0.84, 10 apart 0.70 — near-dups at 0.8 only up to 5. */
+  private def window(prefix: String, from: Int): String =
+    (from until from + 60).map(j => s"$prefix$j").mkString(" ")
+
+  /** Crafted clusters for [[Dedup.keepNearBest]], each pinning one rule
+    * of the `max(struct(score, -id))` pick, with the score looked up by
+    * text (absent = NULL). Survivors: 2, 10, 30, 41, 51, both rows of 60,
+    * 70 and 80.
+    */
+  private lazy val nearBestCase: (DataFrame, Column => Column) = {
+    val rows = Seq[(java.lang.Long, String, Option[Double])](
+      (1L, window("a", 0), Some(0.5)), // chain 1~2~3 (1 and 3 are not a pair): 2 scores best
+      (2L, window("a", 5), Some(0.9)),
+      (3L, window("a", 10), Some(0.7)),
+      (10L, window("b", 0), Some(0.6)), // equal scores: the min id wins
+      (11L, window("b", 3), Some(0.6)),
+      (30L, window("c", 0), Some(-0.0)), // -0.0 == 0.0: a tie, the min id wins
+      (31L, window("c", 3), Some(0.0)),
+      (40L, window("d", 0), Some(5.0)), // NaN is the highest score
+      (41L, window("d", 3), Some(Double.NaN)),
+      (50L, window("e", 0), None), // NULL is the lowest score
+      (51L, window("e", 3), Some(-1.0)),
+      (60L, window("f", 0), Some(0.1)), // a duplicated id scores by its best row
+      (60L, window("g", 0), Some(0.9)),
+      (61L, window("f", 3), Some(0.5)),
+      (70L, null, None), // NULL text: in no pair
+      (80L, window("h", 0), Some(0.3)), // singleton
+      (null, window("i", 0), Some(1.0)) // NULL id: never survives
+    )
+    val scoreOf = (t: Column) =>
+      rows.collect { case (_, text, Some(s)) if text != null => (text, s) }
+        .foldLeft(lit(null).cast("double")) { case (rest, (text, s)) =>
+          when(t === text, lit(s)).otherwise(rest)
+        }
+    (rows.map(r => (r._1, r._2)).toDF("doc_id", "text"), scoreOf)
+  }
+
+  private def sortedRows(df: DataFrame): Seq[(Option[Long], Option[String])] =
+    df.as[(Option[Long], Option[String])].collect().toSeq.sorted
+
+  test("keepNearBest regime equality: collected pick == dedupNearBest semi join, row for row") {
+    val (crafted, scoreOf) = nearBestCase
+    def keep(df: DataFrame, cap: Long) =
+      sortedRows(Dedup.keepNearBest(df, 0.8, scoreOf = scoreOf, driverMaxEdges = cap))
+    val collected = keep(crafted, 1L << 20)
+    assert(collected == keep(crafted, 0L), "regimes diverged")
+    assert(
+      collected.map(_._1.get) == Seq(2L, 10L, 30L, 41L, 51L, 60L, 60L, 70L, 80L),
+      s"survivors: $collected"
+    )
+    // the default quality score on the fixture corpus
+    def fixture(cap: Long) =
+      sortedRows(Dedup.keepNearBest(docs.select("doc_id", "text"), 0.8, driverMaxEdges = cap))
+    assert(fixture(1L << 20) == fixture(0L))
+    // zero verified pairs: docs back without a scoring action (the one
+    // action is the pair collect); the empty frame likewise
+    val noPairs = crafted.filter(col("doc_id").isin(1L, 10L, 70L, 80L) || col("doc_id").isNull)
+    var kept: DataFrame = null
+    assert(actionsIn { kept = Dedup.keepNearBest(noPairs, 0.8, scoreOf = scoreOf) } === 1)
+    assert(sortedRows(kept) == keep(noPairs, 0L))
+    assert(sortedRows(kept).map(_._1.get) == Seq(1L, 10L, 70L, 80L))
+    val empty = crafted.filter(lit(false))
+    assert(keep(empty, 1L << 20).isEmpty && keep(empty, 0L).isEmpty)
+  }
+
+  test("keepNearBest shape: the collected survivor plan has no aggregate and no shuffle") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val (crafted, scoreOf) = nearBestCase
+    def heavyNodes(df: DataFrame): Seq[SparkPlan] = {
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      plan.collect { case n @ (_: BaseAggregateExec | _: ShuffleExchangeExec) => n }
+    }
+    val edges = 2 * Dedup.minhashPairs(crafted, 0.8).select("doc_a", "doc_b").distinct().count()
+    var collected: DataFrame = null
+    // two actions: the pair collect and the score collect of the clustered ids
+    val actions = actionsIn {
+      collected = Dedup.keepNearBest(crafted, 0.8, scoreOf = scoreOf, driverMaxEdges = edges)
+    }
+    assert(actions === 2)
+    assert(heavyNodes(collected).isEmpty, collected.queryExecution.executedPlan.toString)
+    // one edge under the cap: the dedupNearBest path with its aggregate
+    val over = Dedup.keepNearBest(crafted, 0.8, scoreOf = scoreOf, driverMaxEdges = edges - 1)
+    assert(heavyNodes(over).nonEmpty)
+    assert(sortedRows(over) == sortedRows(collected))
   }
 
   test("dedupNear default survives a chain deeper than propagation's 64-round budget") {

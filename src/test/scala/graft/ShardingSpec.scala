@@ -79,6 +79,43 @@ class ShardingSpec extends SparkSpec {
     assert(distributed.totalRows === 5000L)
   }
 
+  test("readBackReport: the footer schema is spark.read.parquet's, and every shard must carry it") {
+    val dir = s"$testOut/shard_footer_schema"
+    val df = spark
+      .range(40)
+      .select(
+        col("id"),
+        when(col("id") % 5 =!= 0, struct(col("id").as("a"), concat(lit("s"), col("id")).as("b"))).as("st"),
+        when(col("id") % 4 =!= 0, array(col("id"), lit(null).cast("long"))).as("arr"),
+        when(col("id") % 3 =!= 0, map(concat(lit("k"), col("id")), col("id") * 2)).as("m"),
+        when(col("id") % 2 =!= 0, (col("id") / 7).cast("decimal(12,3)")).as("dec"),
+        when(col("id") % 6 =!= 0, date_add(lit("2020-01-01").cast("date"), col("id").cast("int"))).as("d"),
+        when(col("id") % 7 =!= 0, timestamp_seconds(col("id") * 3600)).as("ts"),
+        when(col("id") % 8 =!= 0, col("id").cast("string").cast("binary")).as("bin"),
+        lit(1).as("not_null")
+      )
+      .repartition(3)
+    ShardedParquetSink.write(df, dir)
+    def report(threshold: Int) =
+      ShardedParquetSink.readBackReport(spark, dir, distributedThreshold = threshold)
+    val expected = spark.read.parquet(dir).schema.toDDL
+    assert(report(ShardedParquetSink.DistributedReportThreshold).schemaDdl === expected)
+    assert(report(1).schemaDdl === expected, "the distributed walk reads the same schema")
+    assert(report(1).totalRows === 40L)
+    // a shard with another schema makes the directory two datasets
+    spark.range(3).write.mode("append").parquet(dir)
+    for (threshold <- Seq(ShardedParquetSink.DistributedReportThreshold, 1)) {
+      val e = intercept[IllegalArgumentException](report(threshold))
+      assert(e.getMessage.contains("disagree on the schema"), e.getMessage)
+    }
+    // no shards: a named refusal, not UNABLE_TO_INFER_SCHEMA
+    val emptyDir = new java.io.File(s"$testOut/shard_no_files")
+    org.apache.commons.io.FileUtils.deleteDirectory(emptyDir)
+    emptyDir.mkdirs()
+    val e = intercept[IllegalArgumentException](ShardedParquetSink.readBackReport(spark, emptyDir.getPath))
+    assert(e.getMessage.contains("no parquet shards"), e.getMessage)
+  }
+
   test("sharding invariant: reference layout constant 2^19") {
     assert(ParquetLayout().maxRecordsPerFile == 524288L)
   }

@@ -12,4 +12,33 @@ trait SparkSpec extends AnyFunSuite {
   val Sf001 = "/root/testdata/sf0.01"
   val Sf01 = "/root/testdata/sf0.1"
   val testOut = "/root/repo/target/test-out"
+
+  /** ACTIONS `body` fires, not jobs: AQE materializes every shuffle stage
+    * as its own job, so a single collect over a join tree is many jobs —
+    * the QueryExecutionListener fires exactly once per action (collect /
+    * checkpoint). The listener bus posts async; settle until two
+    * consecutive reads agree (actions are blocking, so every event is
+    * queued when the body returns).
+    */
+  protected def actionsIn(body: => Unit): Int = {
+    val actions = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        actions.incrementAndGet()
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+        actions.incrementAndGet()
+    }
+    def settled(): Int = {
+      var last = -1
+      var cur = actions.get()
+      while (cur != last) { Thread.sleep(200); last = cur; cur = actions.get() }
+      cur
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val before = settled()
+      body
+      settled() - before
+    } finally spark.listenerManager.unregister(listener)
+  }
 }
