@@ -87,27 +87,17 @@ object Decontaminate {
       .agg(count(lit(1)).as("n_shared"))
   }
 
-  /** Driver cap for [[clean]]'s collected-index regime: when the
-    * benchmark's DISTINCT gram index has at most this many hashes it is
-    * collected once and membership runs as a row-local kernel; above it
-    * (or at 0 — disables) the distributed [[overlapReport]] subtree runs
-    * unchanged. Eval benchmarks are small by nature, so the collected
-    * regime is the production shape; the threshold keeps the fallback
-    * scale-safe for corpus-sized "benchmarks". Override with
-    * `-Dgraft.decon.driverMaxGrams=N`.
-    */
-  private def driverMaxGrams: Long =
-    sys.props.get("graft.decon.driverMaxGrams").map(_.toLong).getOrElse(1L << 20)
-
   /** The corpus with every contaminated document REMOVED — the admission
     * side of [[overlapReport]] (anti join on the contaminated id set).
     *
     * Two regimes for the contaminated-id subtree (the decision is which
     * PLAN computes the identical id set, never what it contains):
     *
-    *  - collected index (benchmark gram index ≤ [[driverMaxGrams]]): the
-    *    distinct hash index is collected and sorted once, and each corpus
-    *    document answers "shares any k-gram?" row-locally
+    *  - collected index (benchmark gram index within [[DriverRegime]]'s
+    *    cap, default 2^20 hashes; eval benchmarks are small by nature, so
+    *    this is the production shape): the distinct hash index is
+    *    collected and sorted once, and each corpus document answers
+    *    "shares any k-gram?" row-locally
     *    ([[graft.functions.Kernels.hasSharedGram]] — binary search with
     *    early exit) — no explode of the corpus into gram rows, no join
     *    probe per occurrence, no per-doc count aggregate. A document is
@@ -117,11 +107,10 @@ object Decontaminate {
     *    the filter), so the contaminated id set — and therefore the
     *    id-keyed anti join, duplicate ids included — is identical.
     *  - distributed (index above the cap, or cap 0): the
-    *    [[overlapReport]] broadcast-join shape, byte-identical to before.
+    *    [[overlapReport]] broadcast-join shape, scale-safe for
+    *    corpus-sized "benchmarks".
     *
-    * The regime probe is one capped `limit(max+1).collect()` job at
-    * compose time (complete under the cap — the set is deterministic;
-    * one row over — discarded, distributed regime).
+    * The regime probe runs at compose time.
     */
   def clean(
       corpus0: DataFrame,
@@ -133,20 +122,11 @@ object Decontaminate {
   ): DataFrame = {
     require(k > 0, s"need k > 0, got $k")
     val corpus = requireIds(corpus0, idCol, "Decontaminate.clean")
-    val max = driverMaxGrams
-    val collected =
-      if (max <= 0L) None
-      else {
-        val rows = benchmarkIndex(benchmark, k, textCol)
-          .limit(math.min(max + 1L, Int.MaxValue.toLong).toInt)
-          .collect()
-        if (rows.length.toLong > max) None
-        else {
-          val grams = rows.map(_.getLong(0))
-          java.util.Arrays.sort(grams)
-          Some(grams)
-        }
-      }
+    val collected = DriverRegime.collectIfSmall(benchmarkIndex(benchmark, k, textCol), 1L << 20).map { rows =>
+      val grams = rows.map(_.getLong(0))
+      java.util.Arrays.sort(grams)
+      grams
+    }
     val contaminatedIds = collected match {
       case Some(grams) =>
         corpus

@@ -453,8 +453,7 @@ object Dedup {
     */
   def componentsOf(
       edges0: DataFrame,
-      maxRounds: Int = 30,
-      driverMaxEdges: Long = driverComponentsMaxEdges
+      maxRounds: Int = 30
   ): DataFrame = {
 
     def sym(e: DataFrame): DataFrame =
@@ -487,40 +486,27 @@ object Dedup {
     // terminate early with silently wrong labels.)
     def subsetOf(a: DataFrame, b: DataFrame): Boolean = a.except(b).isEmpty
 
-    // Two-regime split, the broadcast-join analogy (guide §3.1/§8): the
-    // edge frame after banding is a tiny PROXY of the corpus (near-dup
-    // pairs, not documents), and when it fits comfortably on the driver
-    // the exact union-find answer costs microseconds — while every star
-    // round below is ~8 exchanges + 3 actions of almost pure scheduling
-    // overhead at that size (measured 3.9 s for 477 edges at sf0.1).
-    // Component labels are a graph invariant (min member id per
-    // component), so both regimes produce IDENTICAL frames — spec-pinned
-    // by DedupSpec's regime-equality law. Above the threshold (or for
-    // non-long ids) nothing changes: the O(log n) contraction runs as
-    // before. The threshold is conf-shaped like the broadcast threshold:
-    // `-Dgraft.components.driverMaxEdges=N` (0 disables the driver path).
-    //
-    // Small-regime entry is ONE job (VERDICT r18 "minor" item): the
-    // capped limit+collect replaces the former checkpoint → count →
-    // collect triple — three scheduled actions per cluster gate whose
-    // first materialized the edge frame only to read it straight back.
+    // Two-regime split ([[DriverRegime]]): the edge frame after banding
+    // is a tiny PROXY of the corpus (near-dup pairs, not documents), and
+    // every star round below is ~8 exchanges + 3 actions of almost pure
+    // scheduling overhead at that size (measured 3.9 s for 477 edges at
+    // sf0.1). Component labels are a graph invariant (min member id per
+    // component), so the driver union-find and the contraction produce
+    // IDENTICAL frames — spec-pinned by DedupSpec's regime-equality law.
+    // The cap counts symmetric edges (1M ≈ 16 MB of longs); non-long ids
+    // always contract.
     val symEdges = sym(edges0)
-    if (driverMaxEdges > 0L &&
-      symEdges.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType)) {
-      val capInt = math.min(driverMaxEdges, (Int.MaxValue - 1).toLong).toInt
-      val rows = symEdges.limit(capInt + 1).collect()
-      if (rows.nonEmpty && rows.length <= capInt)
-        return driverComponents(edges0.sparkSession, rows)
-      if (rows.isEmpty) {
-        // zero edges: the contraction would converge immediately to an
-        // empty label frame — produce it without the checkpoint round-trip
-        val spark = edges0.sparkSession
-        import spark.implicits._
-        return Seq.empty[(Long, Long)].toDF("doc_id", "cluster_id")
+    if (symEdges.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType))
+      DriverRegime.collectIfSmall(symEdges, 1L << 20) match {
+        case Some(rows) if rows.isEmpty =>
+          // zero edges: the contraction would converge immediately to an
+          // empty label frame — produce it without the checkpoint round-trip
+          val spark = edges0.sparkSession
+          import spark.implicits._
+          return Seq.empty[(Long, Long)].toDF("doc_id", "cluster_id")
+        case Some(rows) => return driverComponents(edges0.sparkSession, rows)
+        case None       => () // over the cap: the checkpoint below recomputes the frame
       }
-      // over threshold: fall through (one probe job wasted — the rare
-      // big-regime case; the checkpoint below recomputes the frame)
-    }
     // localCheckpoint, not persist: each round's plan embeds the previous
     // round's FULL logical plan (~12 subtree references through the
     // sym/star compositions), so without lineage truncation analysis cost
@@ -542,17 +528,6 @@ object Dedup {
     require(converged, s"large-star/small-star did not converge within $maxRounds rounds")
     minsOf(edges).select(col("u").as("doc_id"), col("m").as("cluster_id"))
   }
-
-  /** Edge-count ceiling for [[componentsOf]]'s driver union-find regime.
-    * 1M symmetric edges ≈ 16 MB of longs — the same order as a broadcast
-    * relation, which is the design precedent: a decision problem this
-    * small is solved where the data already is. Override with
-    * `-Dgraft.components.driverMaxEdges=N`; 0 disables the driver path
-    * (every call then runs the distributed contraction, which the
-    * regime-equality spec uses to pin identical labels).
-    */
-  private def driverComponentsMaxEdges: Long =
-    sys.props.get("graft.components.driverMaxEdges").map(_.toLong).getOrElse(1L << 20)
 
   /** Exact union-find over driver-held edges — the small regime of
     * [[componentsOf]] and [[keepNearBest]]. Roots are maintained as the
@@ -720,9 +695,9 @@ object Dedup {
     * survive, as the semi join drops them. Two regimes, one result
     * (DedupSpec's regime-equality law):
     *
-    *  - COLLECTED, when the verified pairs fit [[componentsOf]]'s driver cap
-    *    (`driverMaxEdges`, counted as symmetric edges): the pairs are
-    *    collected ONCE (capped limit, no persist or count), [[unionFind]]
+    *  - COLLECTED, when the verified pair rows fit [[DriverRegime]]'s cap
+    *    (default 2^19 rows, the 2^20 symmetric edges of [[componentsOf]]):
+    *    the pairs are collected ONCE (no persist or count), [[unionFind]]
     *    labels their ids, only those clustered ids are scored (one scan,
     *    broadcast semi join against the local id frame), the driver picks
     *    each cluster's winner, and the result is `docs` LEFT ANTI
@@ -739,24 +714,22 @@ object Dedup {
       threshold: Double,
       textCol: String = "text",
       idCol: String = "doc_id",
-      scoreOf: Column => Column = TextFunctions.qualityScoreFused,
-      driverMaxEdges: Long = driverComponentsMaxEdges
+      scoreOf: Column => Column = TextFunctions.qualityScoreFused
   ): DataFrame = {
     val key = "__graft_near_id"
     def distributed: DataFrame = {
       val reps = dedupNearBest(docs, threshold, textCol, idCol, scoreOf).select(col("doc_id").as(key))
       docs.join(reps, col(idCol) === col(key), "left_semi")
     }
-    if (driverMaxEdges <= 0L || docs.schema(idCol).dataType != org.apache.spark.sql.types.LongType)
-      return distributed
-    val cap = math.min(driverMaxEdges, (Int.MaxValue - 1).toLong).toInt
-    val rows = withSignatures(docs, textCol, idCol) { base =>
-      minhashPairsOf(base, threshold).select(col("doc_a"), col("doc_b")).limit(cap + 1).collect()
+    if (docs.schema(idCol).dataType != org.apache.spark.sql.types.LongType) return distributed
+    val collected = withSignatures(docs, textCol, idCol) { base =>
+      DriverRegime.collectIfSmall(minhashPairsOf(base, threshold).select(col("doc_a"), col("doc_b")), 1L << 19)
     }
-    // pairs are ordered (doc_a < doc_b), so each distinct one is two
-    // symmetric edges; duplicated ids can repeat a pair row
-    val pairs = rows.iterator.map(r => (r.getLong(0), r.getLong(1))).toSet
-    if (rows.length > cap || 2L * pairs.size > cap) return distributed
+    // duplicated ids can repeat a pair row
+    val pairs = collected match {
+      case Some(rows) => rows.iterator.map(r => (r.getLong(0), r.getLong(1))).toSet
+      case None       => return distributed
+    }
     val kept = docs.filter(col(idCol).isNotNull)
     if (pairs.isEmpty) return kept
     val label = unionFind(pairs.iterator)

@@ -72,7 +72,7 @@ object Mondrian {
     require(maxRounds >= 1 && maxRounds <= 62, s"need 1 <= maxRounds <= 62, got $maxRounds")
 
     val nullGuard = bandCols.map(c => col(c).isNull).reduce(_ || _)
-    // Two-regime split (the componentsOf/broadcast analogy, guide §8/§1.5):
+    // Two-regime split ([[DriverRegime]], cap in histogram cells):
     // grid-snapped Mondrian's every cut decision is a function of the
     // corpus ONLY through the banded JOINT histogram — per-partition
     // marginals, medians, allowability and the final boxes all derive
@@ -83,15 +83,13 @@ object Mondrian {
     // touched exactly twice: one aggregate (with the same scan-side NULL
     // raise) and one broadcast route-back join — versus ~2 jobs per cut
     // round plus a corpus re-checkpoint every chainCap rounds. Above the
-    // threshold (`-Dgraft.mondrian.driverMaxCells=N`, 0 disables) or for
-    // non-long band columns, the distributed loop below runs untouched —
-    // scale-safe by construction. Regime equality is spec-pinned
-    // (MondrianSpec: identical pid/box frames on the fixture).
-    val driverCap = sys.props.get("graft.mondrian.driverMaxCells").map(_.toLong).getOrElse(1L << 20)
+    // cap or for non-long band columns, the distributed loop below runs
+    // untouched — scale-safe by construction. Regime equality is
+    // spec-pinned (MondrianSpec: identical pid/box frames on the fixture).
     val allLong = bandCols.forall(c =>
       df.schema(c).dataType == org.apache.spark.sql.types.LongType
     )
-    if (driverCap > 0L && allLong) {
+    if (allLong) {
       val guardedHead =
         when(
           nullGuard,
@@ -102,16 +100,14 @@ object Mondrian {
         .select(guardedHead.as(bandCols.head) +: bandCols.tail.map(col): _*)
         .groupBy(bandCols.map(col): _*)
         .agg(count(lit(1)).as("__graft_n"))
-      val capInt = math.min(driverCap, (Int.MaxValue - 1).toLong).toInt
-      val rows = hist.limit(capInt + 1).collect()
-      if (rows.length <= capInt) {
-        val cells = rows.map { r =>
-          (bandCols.indices.map(r.getLong).toArray, r.getLong(bandCols.length))
-        }
-        return driverAnonymize(df, bandCols, k, maxRounds, cells)
+      DriverRegime.collectIfSmall(hist, 1L << 20) match {
+        case Some(rows) =>
+          val cells = rows.map { r =>
+            (bandCols.indices.map(r.getLong).toArray, r.getLong(bandCols.length))
+          }
+          return driverAnonymize(df, bandCols, k, maxRounds, cells)
+        case None => () // over the cap: one probe aggregate wasted
       }
-      // over threshold: fall through to the distributed loop (one probe
-      // aggregate wasted — the rare big-regime case)
     }
     // the CORPUS is materialized exactly once; each round's pid
     // assignment is derived by replaying the (tiny, checkpointed) cut

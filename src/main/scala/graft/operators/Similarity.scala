@@ -1034,8 +1034,8 @@ object Similarity {
       else
         e0.filter(col("vec_id") % lit(every.toLong) === 0)
           .select(expr(s"vec_id div $every").as("vec_id"), col("embedding"))
-    // Two-regime split (the componentsOf/Mondrian treatment, guide §8/
-    // §1.5): the PQ trainer's fit set is the (optionally sampled)
+    // Two-regime split ([[DriverRegime]], cap in vectors: 2^17 × 256 B ≈
+    // 32 MB): the PQ trainer's fit set is the (optionally sampled)
     // embedding table — when it fits the driver, the m Lloyd chains run
     // locally in the IDENTICAL arithmetic (Kernels.cosine's exact fold,
     // the (cos desc, cell asc) argmax, integer-quantized means) and the
@@ -1044,15 +1044,19 @@ object Similarity {
     // reference (~570 plan nodes / ~100 scan subtrees at m = 4 in the
     // q110 plan; the trainer alone measured 4.5 s of the gate's 5.6 s,
     // almost all scheduling + plan machinery over micro-data). Above the
-    // threshold (`-Dgraft.trainer.driverMaxVectors`, 0 disables) — or
-    // with negative ids, whose div/mod semantics the driver path does
-    // not replicate — the distributed chains run untouched; production
-    // deployments train on a bounded sample anyway (`every`), which is
-    // exactly the regime the threshold encodes. Spec-pinned equal
-    // (AnnRecallSpec regime-equality law).
-    collectVectorsIfSmall(e) match {
-      case Some(rows) => PqCodebooks(m, driverPqCodebooks(emb.sparkSession, rows, m, dsub))
-      case None =>
+    // cap — or with NULL or negative ids, whose div/mod semantics the
+    // driver path does not replicate, or ragged vectors, which the driver
+    // subspace copy zero-pads where `slice` truncates — the distributed
+    // chains run untouched; production deployments train on a bounded
+    // sample anyway (`every`), which is exactly the regime the cap
+    // encodes. Spec-pinned equal (AnnRecallSpec regime-equality law).
+    def driverSafe(r: org.apache.spark.sql.Row): Boolean =
+      !r.isNullAt(0) && r.getLong(0) >= 0L && r.getSeq[Float](1).length == Dim
+    DriverRegime.collectIfSmall(e, 1L << 17) match {
+      case Some(rows) if rows.forall(driverSafe) =>
+        val vecs = rows.map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+        PqCodebooks(m, driverPqCodebooks(emb.sparkSession, vecs, m, dsub))
+      case _ =>
         val subs = (0 until m).map { s =>
           trainedCentroids(
             e.select(col("vec_id"), slice(col("embedding"), s * dsub + 1, dsub).as("embedding")),
@@ -1060,40 +1064,6 @@ object Similarity {
           ).select(lit(s.toLong).as("sub"), col("cell"), col("c_emb"))
         }
         PqCodebooks(m, subs.reduce(_.unionByName(_)))
-    }
-  }
-
-  /** Vector-count ceiling for [[trainPq]]'s driver regime: 2^17 vectors
-    * × 256 B (64 float dims) ≈ 32 MB — the broadcast-relation order of
-    * magnitude, the componentsOf precedent. Override with
-    * `-Dgraft.trainer.driverMaxVectors=N`; 0 disables (the
-    * regime-equality spec pins identical codebooks that way).
-    */
-  private def trainerDriverMaxVectors: Long =
-    sys.props.get("graft.trainer.driverMaxVectors").map(_.toLong).getOrElse(1L << 17)
-
-  /** One collect of the fit set when it fits the driver regime —
-    * `(vec_id, embedding)` rows with every id non-negative (the seed's
-    * div/mod arithmetic is replicated for the non-negative case only),
-    * or None.
-    */
-  private def collectVectorsIfSmall(e: DataFrame): Option[Array[(Long, Array[Float])]] = {
-    val cap = trainerDriverMaxVectors
-    if (cap <= 0L) None
-    else {
-      val capInt = math.min(cap, (Int.MaxValue - 1).toLong).toInt
-      val rows = e.limit(capInt + 1).collect()
-      if (rows.length > capInt) None
-      else {
-        val out = rows.map { r =>
-          if (r.isNullAt(0)) return None
-          (r.getLong(0), r.getSeq[Float](1).toArray)
-        }
-        // negative ids (seed div/mod semantics) and ragged vectors (the
-        // driver subspace copy zero-pads where `slice` truncates the
-        // emitted rows) fall back to the distributed chains
-        if (out.exists(v => v._1 < 0L || v._2.length != Dim)) None else Some(out)
-      }
     }
   }
 

@@ -172,7 +172,7 @@ object Vocabulary {
     require(nMerges > 0, s"need nMerges > 0, got $nMerges")
     val spark = docs.sparkSession
     import spark.implicits._
-    collectWordsIfSmall(docs, textCol) match {
+    DriverRegime.collectIfSmall(wordTableLazy(docs, textCol), DriverMaxWords) match {
       case Some(local) => driverMergeTrain(spark, local, nMerges, likelihood = false)
       case None =>
         var words = wordTable(docs, textCol)
@@ -196,42 +196,14 @@ object Vocabulary {
     }
   }
 
-  /** Word-count ceiling for the merge trainers' driver regime — the
-    * [[graft.operators.Dedup.componentsOf]] two-regime split applied to
-    * BPE/WordPiece training (guide §8 decide-with-small-rows, §1.5):
-    * the word-frequency table is a tiny PROXY of the corpus (DISTINCT
-    * words, not occurrences — 1M words of ~16 chars ≈ tens of MB, the
-    * broadcast-relation order of magnitude), while every distributed
-    * merge round below is a full aggregate + driver argmax collect + an
-    * eager fold checkpoint of almost pure scheduling overhead at that
-    * size. Above the threshold (or with `0`, which disables the driver
-    * path — the regime-equality spec uses that to pin identical
-    * artifacts) the per-round distributed loop runs untouched, so the
-    * trainers stay scale-safe by construction at 100 TB word tables.
-    * Override with `-Dgraft.trainer.driverMaxWords=N`.
+  /** Default [[DriverRegime]] cap of the merge trainers, in DISTINCT
+    * words (1M words of ~16 chars ≈ tens of MB): the word-frequency table
+    * is a tiny PROXY of the corpus, while every distributed merge round is
+    * a full aggregate + driver argmax collect + an eager fold checkpoint
+    * of almost pure scheduling overhead at that size. Above the cap the
+    * per-round loop runs untouched, so the trainers stay scale-safe.
     */
-  private def trainerDriverMaxWords: Long =
-    sys.props.get("graft.trainer.driverMaxWords").map(_.toLong).getOrElse(1L << 20)
-
-  /** One collect of the word table when it fits the driver regime —
-    * `(w, syms, cnt)` rows, or None above the threshold. One job either
-    * way (the over-threshold probe wastes one aggregate, in exchange for
-    * the small regime never paying checkpoint + count + collect).
-    */
-  private def collectWordsIfSmall(
-      docs: DataFrame,
-      textCol: String
-  ): Option[Array[(String, Array[String], Long)]] = {
-    val cap = trainerDriverMaxWords
-    if (cap <= 0L) None
-    else {
-      val capInt = math.min(cap, (Int.MaxValue - 1).toLong).toInt
-      val rows = wordTableLazy(docs, textCol).limit(capInt + 1).collect()
-      if (rows.length > capInt) None
-      else
-        Some(rows.map(r => (r.getString(0), r.getSeq[String](1).toArray, r.getLong(2))))
-    }
-  }
+  private val DriverMaxWords = 1L << 20
 
   /** Spark's string ordering is unsigned UTF-8 byte order (UTF8String
     * binary compare) — Java's String.compareTo is UTF-16 code-unit
@@ -265,11 +237,12 @@ object Vocabulary {
     */
   private def driverMergeTrain(
       spark: org.apache.spark.sql.SparkSession,
-      words: Array[(String, Array[String], Long)],
+      rows: Array[org.apache.spark.sql.Row],
       nMerges: Int,
       likelihood: Boolean
   ): (DataFrame, DataFrame) = {
     import spark.implicits._
+    val words = rows.map(r => (r.getString(0), r.getSeq[String](1).toArray, r.getLong(2)))
     val syms: Array[Array[String]] = words.map(_._2)
     val merges = Seq.newBuilder[(Long, String, String, Long)]
     var i = 1
@@ -800,7 +773,7 @@ object Vocabulary {
     require(nMerges > 0, s"need nMerges > 0, got $nMerges")
     val spark = docs.sparkSession
     import spark.implicits._
-    collectWordsIfSmall(docs, textCol) match {
+    DriverRegime.collectIfSmall(wordTableLazy(docs, textCol), DriverMaxWords) match {
       case Some(local) => return driverMergeTrain(spark, local, nMerges, likelihood = true)
       case None => ()
     }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Similarity
+import graft.operators.{DriverRegime, Similarity}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
@@ -106,16 +106,9 @@ class AnnRecallSpec extends SparkSpec {
       .toSet
     val viaDriver = cb(Similarity.trainPq(emb).codebooks)
     val adcDriver = adc()
-    val prev = sys.props.put("graft.trainer.driverMaxVectors", "0")
-    try {
+    withConf(DriverRegime.MaxRowsKey -> "0") {
       assert(viaDriver === cb(Similarity.trainPq(emb).codebooks))
       assert(adcDriver === adc())
-    } finally {
-      prev match {
-        case Some(v) => sys.props.put("graft.trainer.driverMaxVectors", v)
-        case None    => sys.props.remove("graft.trainer.driverMaxVectors")
-      }
-      ()
     }
   }
 

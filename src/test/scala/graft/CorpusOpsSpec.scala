@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.{GraftExpressions, TextFunctions}
-import graft.operators.{Decontaminate, Repetition, Sampling, Sketch}
+import graft.operators.{Decontaminate, DriverRegime, Repetition, Sampling, Sketch}
 
 /** Laws of the corpus-hygiene operators added in round 5: benchmark
   * decontamination, within-document repetition metrics, the KMV
@@ -79,19 +79,16 @@ class CorpusOpsSpec extends SparkSpec {
   test("decontaminate: regime equality — collected-index clean == distributed clean, row for row") {
     // the collected regime answers membership row-locally against the
     // sorted driver copy of the benchmark index; cap 0 runs the former
-    // broadcast-join subtree — the kept frames must be identical
-    val viaKernel = Decontaminate.clean(corpus, benchmark, 4).collect().toSet
-    val prev = sys.props.put("graft.decon.driverMaxGrams", "0")
-    try {
-      val viaCluster = Decontaminate.clean(corpus, benchmark, 4).collect().toSet
-      assert(viaKernel === viaCluster)
-    } finally {
-      prev match {
-        case Some(v) => sys.props.put("graft.decon.driverMaxGrams", v)
-        case None    => sys.props.remove("graft.decon.driverMaxGrams")
-      }
-      ()
+    // broadcast-join subtree — the kept frames must be identical. The
+    // largest cap must collect the whole index, never read a clamped
+    // probe as an empty one (which would keep every document)
+    def cleanAt(cap: Long) = withConf(DriverRegime.MaxRowsKey -> cap.toString) {
+      Decontaminate.clean(corpus, benchmark, 4).collect().toSet
     }
+    val viaKernel = Decontaminate.clean(corpus, benchmark, 4).collect().toSet
+    assert(viaKernel.size < corpus.count())
+    assert(viaKernel === cleanAt(0L))
+    assert(viaKernel === cleanAt(Long.MaxValue))
     // and clean + overlapReport still partition the corpus in the kernel regime
     val contaminated = Decontaminate.overlapReport(corpus, benchmark, 4).select("doc_id")
     val kept = Decontaminate.clean(corpus, benchmark, 4).select("doc_id")
@@ -358,6 +355,35 @@ class CorpusOpsSpec extends SparkSpec {
     val seg = Vocabulary.wordpieceSegmentations(docs, 2)
     val prof = Vocabulary.bpeProfile(docs, seg).as[(Long, Long, Long)].head()
     assert(prof === ((1L, 2L, 2L))) // two words, each one fused symbol
+  }
+
+  test("bpe/wordpiece regime equality: driver merge loop == distributed merge rounds, artifact for artifact") {
+    import graft.operators.Vocabulary
+    // cap 0 runs the per-round distributed loop. The crafted corpus pins
+    // the driver argmax's tie-break: its tied pairs pit a supplementary-
+    // plane letter (UTF-16 surrogates, below U+FFFD in String order) against
+    // U+FFFD (below it in Spark's UTF-8 byte order); plus a NULL text and
+    // `aaaa`-style self-pairs for the non-overlapping fold
+    val astral = "\uD835\uDD18"
+    val fffd = "\uFFFD"
+    val crafted = Seq[(Long, String)](
+      (1L, s"x$astral x$fffd y$astral$astral y$fffd$fffd aaaa aaaa"),
+      (2L, null),
+      (3L, s"$astral$fffd $fffd$astral bbbb aaa ab ab")
+    ).toDF("doc_id", "text")
+    def segs(df: org.apache.spark.sql.DataFrame) =
+      df.select("w", "syms", "cnt").as[(String, Seq[String], Long)].collect().toSet
+    def artifacts(df: org.apache.spark.sql.DataFrame, n: Int) = (
+      Vocabulary.bpeMerges(df, n).as[(Long, String, String, Long)].collect().toSeq,
+      segs(Vocabulary.bpeSegmentations(df, n)),
+      Vocabulary.wordpieceMerges(df, n).as[(Long, String, String, Long)].collect().toSeq,
+      segs(Vocabulary.wordpieceSegmentations(df, n))
+    )
+    for ((df, n) <- Seq((crafted, 10), (docs.select("doc_id", "text"), 8))) {
+      val driver = artifacts(df, n)
+      assert(driver._1.nonEmpty && driver._3.nonEmpty)
+      assert(driver === withConf(DriverRegime.MaxRowsKey -> "0")(artifacts(df, n)))
+    }
   }
 
   test("benchmarkExposure: the reverse direction agrees with overlapReport's totals") {

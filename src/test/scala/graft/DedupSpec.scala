@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, DriverRegime}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -123,11 +123,9 @@ class DedupSpec extends SparkSpec {
     // clique (diameter 1), disjoint pairs, a hub star, and a seeded
     // random graph; ids deliberately non-contiguous and out of order.
     def labelsOf(edges: Seq[(Long, Long)], driverMax: Long): Map[Long, Long] =
-      Dedup
-        .componentsOf(edges.toDF("u", "v"), driverMaxEdges = driverMax)
-        .as[(Long, Long)]
-        .collect()
-        .toMap
+      withConf(DriverRegime.MaxRowsKey -> driverMax.toString) {
+        Dedup.componentsOf(edges.toDF("u", "v")).as[(Long, Long)].collect().toMap
+      }
     val chain = (0 until 80).map(i => (i * 7L + 3, (i + 1) * 7L + 3))
     val clique = for (a <- 0 until 12; b <- a + 1 until 12) yield (1000L + a, 1000L + b)
     val pairs = (0 until 20).map(i => (2000L + 2 * i, 2001L + 2 * i))
@@ -192,8 +190,10 @@ class DedupSpec extends SparkSpec {
   test("keepNearBest regime equality: collected pick == dedupNearBest semi join, row for row") {
     val (crafted, scoreOf) = nearBestCase
     def keep(df: DataFrame, cap: Long) =
-      sortedRows(Dedup.keepNearBest(df, 0.8, scoreOf = scoreOf, driverMaxEdges = cap))
-    val collected = keep(crafted, 1L << 20)
+      withConf(DriverRegime.MaxRowsKey -> cap.toString) {
+        sortedRows(Dedup.keepNearBest(df, 0.8, scoreOf = scoreOf))
+      }
+    val collected = keep(crafted, 1L << 19)
     assert(collected == keep(crafted, 0L), "regimes diverged")
     assert(
       collected.map(_._1.get) == Seq(2L, 10L, 30L, 41L, 51L, 60L, 60L, 70L, 80L),
@@ -201,8 +201,10 @@ class DedupSpec extends SparkSpec {
     )
     // the default quality score on the fixture corpus
     def fixture(cap: Long) =
-      sortedRows(Dedup.keepNearBest(docs.select("doc_id", "text"), 0.8, driverMaxEdges = cap))
-    assert(fixture(1L << 20) == fixture(0L))
+      withConf(DriverRegime.MaxRowsKey -> cap.toString) {
+        sortedRows(Dedup.keepNearBest(docs.select("doc_id", "text"), 0.8))
+      }
+    assert(fixture(1L << 19) == fixture(0L))
     // zero verified pairs: docs back without a scoring action (the one
     // action is the pair collect); the empty frame likewise
     val noPairs = crafted.filter(col("doc_id").isin(1L, 10L, 70L, 80L) || col("doc_id").isNull)
@@ -211,7 +213,7 @@ class DedupSpec extends SparkSpec {
     assert(sortedRows(kept) == keep(noPairs, 0L))
     assert(sortedRows(kept).map(_._1.get) == Seq(1L, 10L, 70L, 80L))
     val empty = crafted.filter(lit(false))
-    assert(keep(empty, 1L << 20).isEmpty && keep(empty, 0L).isEmpty)
+    assert(keep(empty, 1L << 19).isEmpty && keep(empty, 0L).isEmpty)
   }
 
   test("keepNearBest shape: the collected survivor plan has no aggregate and no shuffle") {
@@ -227,16 +229,18 @@ class DedupSpec extends SparkSpec {
       }
       plan.collect { case n @ (_: BaseAggregateExec | _: ShuffleExchangeExec) => n }
     }
-    val edges = 2 * Dedup.minhashPairs(crafted, 0.8).select("doc_a", "doc_b").distinct().count()
+    val pairRows = Dedup.minhashPairs(crafted, 0.8).count()
     var collected: DataFrame = null
     // two actions: the pair collect and the score collect of the clustered ids
-    val actions = actionsIn {
-      collected = Dedup.keepNearBest(crafted, 0.8, scoreOf = scoreOf, driverMaxEdges = edges)
+    val actions = withConf(DriverRegime.MaxRowsKey -> pairRows.toString) {
+      actionsIn { collected = Dedup.keepNearBest(crafted, 0.8, scoreOf = scoreOf) }
     }
     assert(actions === 2)
     assert(heavyNodes(collected).isEmpty, collected.queryExecution.executedPlan.toString)
-    // one edge under the cap: the dedupNearBest path with its aggregate
-    val over = Dedup.keepNearBest(crafted, 0.8, scoreOf = scoreOf, driverMaxEdges = edges - 1)
+    // one pair row under the cap: the dedupNearBest path with its aggregate
+    val over = withConf(DriverRegime.MaxRowsKey -> (pairRows - 1).toString) {
+      Dedup.keepNearBest(crafted, 0.8, scoreOf = scoreOf)
+    }
     assert(heavyNodes(over).nonEmpty)
     assert(sortedRows(over) == sortedRows(collected))
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Mondrian
+import graft.operators.{DriverRegime, Mondrian}
 
 /** Laws of grid-snapped Mondrian: the k guarantee, the hand-checked cut
   * tree on a line, widest-attr choice, strict-cut retirement, pid as a
@@ -103,19 +103,12 @@ class MondrianSpec extends SparkSpec {
     val viaDriver = Mondrian.anonymize(df, Seq("a", "b"), 7L, 6)
       .select("id", "pid", "cell_n", "a_lo", "a_hi", "b_lo", "b_hi", "ok")
       .collect().toSet
-    val prev = sys.props.put("graft.mondrian.driverMaxCells", "0")
-    try {
-      val viaCluster = Mondrian.anonymize(df, Seq("a", "b"), 7L, 6)
+    val viaCluster = withConf(DriverRegime.MaxRowsKey -> "0") {
+      Mondrian.anonymize(df, Seq("a", "b"), 7L, 6)
         .select("id", "pid", "cell_n", "a_lo", "a_hi", "b_lo", "b_hi", "ok")
         .collect().toSet
-      assert(viaDriver === viaCluster)
-    } finally {
-      prev match {
-        case Some(v) => sys.props.put("graft.mondrian.driverMaxCells", v)
-        case None    => sys.props.remove("graft.mondrian.driverMaxCells")
-      }
-      ()
     }
+    assert(viaDriver === viaCluster)
   }
 
   test("fail-fasts: NULL band, bad params") {

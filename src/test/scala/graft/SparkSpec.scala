@@ -13,6 +13,20 @@ trait SparkSpec extends AnyFunSuite {
   val Sf01 = "/root/testdata/sf0.1"
   val testOut = "/root/repo/target/test-out"
 
+  /** Runs `body` with the session conf `key` set to `value`, then
+    * restores the key's previous value, or unsets it if it had none.
+    */
+  protected def withConf[T](kv: (String, String))(body: => T): T = {
+    val (key, value) = kv
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
   /** ACTIONS `body` fires, not jobs: AQE materializes every shuffle stage
     * as its own job, so a single collect over a join tree is many jobs —
     * the QueryExecutionListener fires exactly once per action (collect /
