@@ -12,8 +12,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** True median (every mode reports it into `.stats.json`; median_of_N
-    * also reports it on the board line).
+  /** True median: the reported reading of a query's reps (board line
+    * and `.stats.json`).
     */
   def median(ts: Seq[Double]): Double = {
     val s = ts.sorted
@@ -115,6 +115,34 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    // args: [--reps N] [nameSubstring ...], parsed before the session
+    // starts so a bad argument fails before any work. `--reps N` /
+    // SPARK_GRAFT_BENCH_REPS overrides the rep count; every other argument
+    // is a query-name filter (QueryCost.selected) that re-times a subset,
+    // e.g. `--reps 8 q02_` for one gate. A trailing `--reps` with no value
+    // fails rather than silently running the default 3 reps (ADVICE r17).
+    require(
+      !args.lastOption.contains("--reps"),
+      "--reps requires a value (usage: --reps N)"
+    )
+    val repsAt = args.indexOf("--reps")
+    val reps = (if (repsAt >= 0) Some(args(repsAt + 1).toInt) else None)
+      .orElse(sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt))
+      .getOrElse(3)
+    require(reps >= 1, s"need --reps >= 1, got $reps")
+    val benchMode = s"median_of_$reps"
+    // adaptive ceiling (VERDICT r17 №5): up to 2 extra reps when the base
+    // reps read med > 2x min (a two-rep sticky window)
+    val maxReps = reps + 2
+    // cheap-first (QueryCost anchors): the run order is also the JSON dict
+    // order, so the driver's 2 KB TAIL-truncated artifact always retains the
+    // expensive families' readings (VERDICT r09 #8 — lexicographic order put
+    // q100+ in the truncated half); total/errors/n_failed/recall/summary
+    // still land last on the line, where the tail keeps them.
+    val ordered = QueryCost.selected(
+      if (repsAt >= 0) args.toSeq.patch(repsAt, Nil, 2) else args.toSeq
+    )
+
     // board-level host context bracket (№4): the warmup is inside the
     // bracket on purpose — a loaded window during warmup shifts first
     // readings too
@@ -211,40 +239,6 @@ object Bench {
     // still reads true. The first rep still pays one-shot codegen/cache
     // warmup the later reps don't, which is exactly why the median (not
     // the mean) is the steady-state number a cluster would see.
-    // `--best-of-2` (or SPARK_GRAFT_BENCH_MODE=best_of_2) keeps the
-    // pre-r17 mode for anchor-compatibility comparisons during cutover;
-    // `--reps N` / SPARK_GRAFT_BENCH_REPS overrides the rep count.
-    // cheap-first (QueryCost anchors): the run order is also the JSON dict
-    // order, so the driver's 2 KB TAIL-truncated artifact always retains the
-    // expensive families' readings (VERDICT r09 #8 — lexicographic order put
-    // q100+ in the truncated half); total/errors/n_failed/recall/summary
-    // still land last on the line, where the tail keeps them.
-    val bestOf2 = args.contains("--best-of-2") ||
-      sys.env.get("SPARK_GRAFT_BENCH_MODE").contains("best_of_2")
-    // a trailing `--reps` with no value never forms a sliding(2) window,
-    // so it used to be SILENTLY ignored and the run defaulted to 3 reps
-    // (ADVICE r17) — inconsistent with the loud conflicting-modes require
-    require(
-      !args.lastOption.contains("--reps"),
-      "--reps requires a value (usage: --reps N)"
-    )
-    val explicitReps = args.sliding(2).collectFirst { case Array("--reps", n) => n.toInt }
-      .orElse(sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt))
-    // conflicting modes must fail, not silently pick one (r17 review:
-    // `--best-of-2 --reps 5` used to run 2 reps with no warning)
-    require(
-      !(bestOf2 && explicitReps.isDefined),
-      "--best-of-2 and --reps are mutually exclusive (best-of-2 is exactly 2 reps, min)"
-    )
-    val reps = if (bestOf2) 2 else explicitReps.getOrElse(3)
-    require(reps >= 1, s"need --reps >= 1, got $reps")
-    val benchMode = if (bestOf2) "best_of_2" else s"median_of_$reps"
-    // adaptive ceiling (VERDICT r17 №5): median mode may add up to 2
-    // extra reps when the base reps read med > 2x min (a two-rep sticky
-    // window); best-of-2 keeps its legacy fixed pair (its min already
-    // ignores one stall, and anchor-compat comparisons need exactly 2)
-    val maxReps = if (bestOf2) reps else reps + 2
-    val ordered = QueryCost.orderedCheapFirst(SparkEntry.queries.keys)
     val queryFns = SparkEntry.queries
     // one measured reading per query: the reported number, the full rep
     // spread, the host context of the query's window, and any error
@@ -285,14 +279,14 @@ object Bench {
         if (e.isEmpty) runs += t
         i += 1
       }
-      // adaptive reps: only median mode, only on the stall signature.
+      // adaptive reps: only on the stall signature.
       // A failure HERE must not discard the complete base-rep
       // measurement (r18 review): the extra reps are diagnostic — the
       // query already measured successfully `reps` times, so log the
       // failure and report the runs that exist instead of turning a
       // flagged-but-valid reading into a board error.
       var extraFailed = false
-      while (err.isEmpty && !extraFailed && !bestOf2 && extraRepNeeded(runs.toSeq, maxReps)) {
+      while (err.isEmpty && !extraFailed && extraRepNeeded(runs.toSeq, maxReps)) {
         val (t, e) = once()
         if (e.isEmpty) runs += t
         else {
@@ -309,10 +303,7 @@ object Bench {
           f"[bench] $name: med>2x min after $reps reps — ran ${runs.length} total " +
             f"(spread ${runs.min}%.3f/${median(runs.toSeq)}%.3f/${runs.max}%.3f)"
         )
-      val reported =
-        if (runs.isEmpty) 0.0
-        else if (bestOf2) runs.min
-        else median(runs.toSeq)
+      val reported = if (runs.isEmpty) 0.0 else median(runs.toSeq)
       Reading(
         name, reported, runs.toSeq, err,
         hostBefore.load1, hostAfter.load1, iowaitPct(hostBefore, hostAfter))
@@ -352,13 +343,10 @@ object Bench {
     val hostEnd = sampleHost()
     val stats = ok
       .map { r =>
-        // "med" is the true median of the reps in EVERY mode — in
-        // best-of-2 the REPORTED number is the min, and writing that
-        // into "med" would hand a wrong median to anyone diagnosing
-        // rep spread from this file (r17 review). "reps_run" records
-        // adaptive extensions (№5); the load/iowait stamps are the
-        // query's own window (№4) so a flagged reading carries its
-        // machine evidence inline instead of needing a probe round.
+        // "reps_run" records adaptive extensions (№5); the load/iowait
+        // stamps are the query's own window (№4) so a flagged reading
+        // carries its machine evidence inline instead of needing a probe
+        // round.
         "\"" + r.name + "\":{" +
           f""""min":${r.runs.min}%.3f,"med":${median(r.runs)}%.3f,"max":${r.runs.max}%.3f""" +
           f""","reps_run":${r.runs.length},"load1_before":${r.load1Before}%.2f""" +

@@ -1,9 +1,8 @@
 package graft
 
 import graft.operators.OmopDump
-import graft.sources.{DumpAll, JdbcNoteSource, JdbcSourceConfig, NoteSource, ParquetLayout, ParquetNoteSource}
+import graft.sources.{DumpAll, DumpProgress, JdbcNoteSource, JdbcSourceConfig, NoteSource, ParquetLayout, ParquetNoteSource}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Runnable entry point for the parity dump pipeline — the equivalent of
@@ -33,8 +32,9 @@ import org.apache.spark.sql.SparkSession
   * `SPARK_GRAFT_SOURCE` names a DIRECTORY holding `<table>.parquet`
   * stand-ins; the JDBC env reads each table by name.
   *
-  * Progress surfaces through a SparkListener (the tqdm analog,
-  * `dump_table.py:209-213`): per-stage task completion logged as it happens.
+  * Progress surfaces through [[graft.sources.DumpProgress]] on stderr (the
+  * tqdm analog, `dump_table.py:209-213`): one tick per completed write
+  * task, on both paths; stdout carries only the `[dump]` report lines.
   */
 object DumpMain {
 
@@ -113,12 +113,6 @@ object DumpMain {
     val resume = args.contains("--resume")
 
     val spark = GraftSession.local("graft-dump", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        println(s"[dump] stage ${e.stageId}: task ${e.taskInfo.index} done (${e.taskInfo.duration} ms)")
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        println(s"[dump] stage ${e.stageInfo.stageId} complete: ${e.stageInfo.numTasks} tasks")
-    })
 
     tablesArg match {
       case Some(tables) =>
@@ -147,8 +141,9 @@ object DumpMain {
         val limit =
           if (grabEverything) None
           else Some(sys.env.get("GRAFT_LIMIT").map(_.toLong).getOrElse(2000000L))
+        val table = sys.env.getOrElse("GRAFT_TABLE", "NOTE")
         val source: NoteSource = JdbcSourceConfig.fromEnv() match {
-          case Some(cfg) => new JdbcNoteSource(cfg, sys.env.getOrElse("GRAFT_TABLE", "NOTE"))
+          case Some(cfg) => new JdbcNoteSource(cfg, table)
           case None =>
             val p = sys.env.getOrElse(
               "SPARK_GRAFT_SOURCE",
@@ -156,7 +151,9 @@ object DumpMain {
             )
             new ParquetNoteSource(p)
         }
-        val result = OmopDump.run(spark, source, outputPath, limit, ParquetLayout())
+        val (result, _) = DumpProgress.withProgress(spark, table) {
+          OmopDump.run(spark, source, outputPath, limit, ParquetLayout())
+        }
         // parity with the reference's read-back report (dump_table.py:235-248):
         // unified schema, per-file footer counts, total.
         println(s"[dump] schema: ${result.report.schemaDdl}")

@@ -19,8 +19,7 @@ object Verify {
     // args: sfDir outDir [nameSubstring ...] — the optional filters run a
     // subset while iterating locally; the driver passes exactly two args
     val (sfDir, outDir) = (args(0), args(1))
-    val only = args.drop(2)
-    def selected(name: String): Boolean = only.isEmpty || only.exists(name.contains)
+    val names = QueryCost.selected(args.drop(2).toSeq)
     val cpus = sys.env.getOrElse(
       "SPARK_GRAFT_CPUS",
       math.min(Runtime.getRuntime.availableProcessors, 32).toString
@@ -45,7 +44,6 @@ object Verify {
     // oracle map BEFORE the dump loop, emitted in the same cheap-first
     // order as the dumps (python dicts preserve insertion order, so a
     // budgeted compare phase also reaches the cheap gates first)
-    val names = QueryCost.orderedCheapFirst(SparkEntry.queries.keys.filter(selected))
     val oracle = SparkEntry.oracleSql
     val json = names
       .filter(oracle.contains)

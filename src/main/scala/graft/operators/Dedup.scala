@@ -36,8 +36,8 @@ object Dedup {
   val ShingleK = 3
   // winnowing defaults: window of 8 shingles -> guaranteed detection of any
   // copied run >= w+k-1 = 10 tokens; fingerprints in > WinnowMaxDf docs are
-  // boilerplate, not copy signal. Shared by q62's oracle SQL, ScaleSmoke,
-  // and the streaming detector — change here, not at call sites.
+  // boilerplate, not copy signal. Shared by q62's oracle SQL and the
+  // streaming detector — change here, not at call sites.
   val WinnowW = 8
   val WinnowMinShared = 2
   val WinnowMaxDf = 50
@@ -222,35 +222,6 @@ object Dedup {
         col(idCol).as("doc_id"),
         explode(TextFunctions.winnow(col(textCol), k, w)).as("fp")
       )
-
-  /** [[winnowedFingerprintRows]] persisted, for callers that read the frame
-    * more than once (an audit plus a pair pass, or repeated incremental
-    * checks). Same cache lifecycle contract as [[shingleSignatures]] —
-    * CacheManager dedups repeated plans; multi-corpus services should
-    * scope with [[withWinnowed]].
-    */
-  def winnowedFingerprints(
-      docs: DataFrame,
-      k: Int,
-      w: Int,
-      textCol: String = "text",
-      idCol: String = "doc_id"
-  ): DataFrame =
-    winnowedFingerprintRows(docs, k, w, textCol, idCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-  /** Scoped [[winnowedFingerprints]] cache — run actions inside `f`. */
-  def withWinnowed[T](
-      docs: DataFrame,
-      k: Int,
-      w: Int,
-      textCol: String = "text",
-      idCol: String = "doc_id"
-  )(f: DataFrame => T): T = {
-    val fps = winnowedFingerprints(docs, k, w, textCol, idCol)
-    try f(fps)
-    finally fps.unpersist()
-  }
 
   /** MOSS-style copy detection (Schleimer et al., SIGMOD 2003): document
     * pairs sharing ≥ `minShared` winnowed fingerprints — i.e. pairs with

@@ -4,17 +4,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Catalog of the fixture tables (TPC-H-ish star schema + events/documents/
+/** Loader for the fixture tables (TPC-H-ish star schema + events/documents/
   * embeddings, see TESTDATA.md). One parquet file per table; Spark's
   * vectorized parquet reader + Catalyst column pruning / predicate pushdown
   * make `load` the only scan primitive the whole engine needs for file data.
   */
 object Tables {
-  val dimensions: Seq[String] = Seq("region", "nation", "customer", "supplier", "part")
-  val facts: Seq[String] = Seq("orders", "lineitem", "events")
-  val llm: Seq[String] = Seq("documents", "embeddings")
-  val all: Seq[String] = dimensions ++ facts ++ llm
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, dir) else spark.read.parquet(s"$dir/$name.parquet")
 
@@ -71,10 +66,4 @@ object Tables {
       raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else raw
   }
-
-  /** Register every table as a temp view so `spark.sql` mirrors the DuckDB
-    * oracle's view of the data exactly.
-    */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

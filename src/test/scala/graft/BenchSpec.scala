@@ -80,6 +80,24 @@ class BenchSpec extends AnyFunSuite {
     assert(tail.contains("q300_synthetic") && !tail.contains("\"q001_synthetic\""))
   }
 
+  test("QueryCost.selected: no filter runs every query cheap-first, a filter keeps its matches in that order, an unmatched filter is refused by name") {
+    val all = QueryCost.selected(Nil)
+    assert(all.size === SparkEntry.queries.size && all.toSet === SparkEntry.queries.keySet)
+    // cheap-first: (anchor seconds, name) never decreases along the run order
+    val keys = all.map(n => (QueryCost.of(n), n))
+    assert(keys === keys.sorted)
+    val q02 = QueryCost.selected(Seq("q02_"))
+    assert(q02.nonEmpty && q02 === all.filter(_.contains("q02_")))
+    val two = QueryCost.selected(Seq("q02_", "q01_"))
+    assert(two === all.filter(n => n.contains("q02_") || n.contains("q01_")))
+    // a typo must not become an empty run that exits 0
+    val refused = intercept[IllegalArgumentException] {
+      QueryCost.selected(Seq("q01_", "no_such_query"))
+    }
+    assert(refused.getMessage.contains("'no_such_query'"), refused.getMessage)
+    assert(!refused.getMessage.contains("'q01_'"), "only the unmatched filter is named")
+  }
+
   test("sampleHost reads live /proc on Linux (non-negative, monotone totals) and never throws") {
     val s1 = Bench.sampleHost()
     val s2 = Bench.sampleHost()

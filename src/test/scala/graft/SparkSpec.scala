@@ -11,7 +11,9 @@ trait SparkSpec extends AnyFunSuite {
   val Sf0001 = "/root/testdata/sf0.001"
   val Sf001 = "/root/testdata/sf0.01"
   val Sf01 = "/root/testdata/sf0.1"
-  val testOut = "/root/repo/target/test-out"
+  // relative to the checkout the suite runs from (sbt forks tests in the
+  // project directory), so two checkouts never share an output tree
+  val testOut: String = java.nio.file.Paths.get("target", "test-out").toAbsolutePath.toString
 
   /** Runs `body` with the session conf `key` set to `value`, then
     * restores the key's previous value, or unsets it if it had none.

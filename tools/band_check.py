@@ -8,7 +8,7 @@ Reproduces the verdict's perf table with one command:
 For every query in the bench reading it finds
   - the ANCHOR: the rightmost recorded dev-column number in the
     BASELINE.md query table, else the `QueryProbe median of 5 = X`
-    figure from the row's Notes;
+    figure from the row's Notes (historical re-probe anchors);
   - the FAMILY BAND: parsed from the "Variance bands" family table
     (members column), with explicit overrides for queries the prose
     assigns elsewhere and a shuffle/agg default for unlisted ones;
@@ -16,8 +16,9 @@ and prints one line per query with the ratio and an IN-BAND /
 OUT-OF-BAND / FAST / NO-ANCHOR verdict, then the out-of-band summary.
 
 Per the repo's standing rule (BASELINE.md "Variance bands"): a single
-driver reading outside its band is evidence to RE-PROBE (QueryProbe >= 8
-cache-cleared runs), not a regression verdict by itself.
+driver reading outside its band is evidence to RE-PROBE
+(`graft.Bench --reps 8 <name>`: the median of >= 8 same-JVM runs of the
+matching queries), not a regression verdict by itself.
 """
 import json
 import re
