@@ -389,10 +389,8 @@ object SparkEntry {
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(out), true)
       val source = new graft.sources.ParquetNoteSource(s"$dir/customer.parquet")
-      val b = source.scan(s).agg(min(col("c_custkey")), max(col("c_custkey"))).head()
-      val bounds = (b.getAs[Number](0).longValue(), b.getAs[Number](1).longValue())
       def run() = graft.sources.ResumableDump.run(
-        s, source, "c_custkey", bounds, out, 4,
+        s, source, "c_custkey", out, 4,
         graft.sources.ParquetLayout(maxRecordsPerFile = 500L)
       )
       val fresh = run()

@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Whole-CDM extraction orchestration — the production shape of the
   * reference's per-table CLI (`dump_table.py` is invoked once per table;
@@ -31,14 +30,13 @@ import org.apache.spark.sql.functions._
 object DumpAll {
 
   /** One table's extraction contract. `keyCol = None` marks a small
-    * unkeyed dimension (single write, whole-table skip on re-entry);
-    * `bounds = None` computes min/max of the key at run time.
+    * unkeyed dimension (single write, whole-table skip on re-entry); a
+    * keyed table's key bounds come from its source.
     */
   final case class TableSpec(
       table: String,
       source: NoteSource,
       keyCol: Option[String] = None,
-      bounds: Option[(Long, Long)] = None,
       chunks: Int = 1
   )
 
@@ -73,12 +71,7 @@ object DumpAll {
         DumpProgress.withProgress(spark, spec.table) {
           spec.keyCol match {
             case Some(key) =>
-              val bounds = spec.bounds.getOrElse {
-                val r = spec.source.scan(spark).agg(min(col(key)), max(col(key))).head()
-                require(!r.isNullAt(0), s"${spec.table}: empty table or all-NULL key '$key'")
-                (r.getAs[Number](0).longValue(), r.getAs[Number](1).longValue())
-              }
-              val res = ResumableDump.run(spark, spec.source, key, bounds, dir, spec.chunks, layout)
+              val res = ResumableDump.run(spark, spec.source, key, dir, spec.chunks, layout)
               TableOutcome(spec.table, res.report.totalRows, res.report.numFiles,
                 res.ranChunks.size, res.skippedChunks.size, None)
             case None =>

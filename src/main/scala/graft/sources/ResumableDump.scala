@@ -1,8 +1,7 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Offset-checkpointed, RE-ENTRANT dump — the resumability the reference
   * is only "in spirit" about: its cursor loop (`dump_table.py:81-111`)
@@ -15,9 +14,12 @@ import org.apache.spark.sql.functions._
   *
   * Design — the source key range IS the checkpoint:
   *
-  *   - `[lo, hi]` on `keyCol` (the NOTE_ID-style primary key) splits into
-  *     `chunks` contiguous ranges; chunk i dumps
-  *     `scan.filter(lo_i <= key < hi_i)` to `outputDir/chunk_i`.
+  *   - `[lo, hi]` on `keyCol` (the NOTE_ID-style primary key, read with
+  *     [[NoteSource.keyBounds]] on a fresh start) splits into `chunks`
+  *     contiguous [[KeyRange]]s; chunk i dumps `source.rangeScan` of range
+  *     i to `outputDir/chunk_i`. Chunk 0 also holds the NULL keys, so every
+  *     row lands in exactly one chunk; a table with no non-NULL key is one
+  *     chunk holding the whole table (bounds `(0, 0)`).
   *   - A chunk directory with the committer's `_SUCCESS` marker is
   *     COMPLETE and is skipped on re-entry — its source rows are never
   *     re-read (the range filter pushes down, so the skipped range never
@@ -26,15 +28,15 @@ import org.apache.spark.sql.functions._
   *     whole — per-chunk idempotence, the same unit-of-retry discipline
   *     as [[graft.streaming.StreamingOps.admitIngest]]'s batches.
   *   - A `_resume.json` manifest pins (keyCol, lo, hi, chunks); re-entry
-  *     with DIFFERENT parameters fails fast — resuming under a different
-  *     chunking would silently mis-cover the key space.
+  *     takes the bounds from it, and with a DIFFERENT keyCol or chunk
+  *     count fails fast — resuming under a different chunking would
+  *     silently mis-cover the key space.
   *
   * What this does NOT promise, stated honestly: rows inserted into the
   * source between attempts land only if their key falls in a not-yet-
   * complete chunk (the reference has the same count/scan race,
   * SURVEY §3.4 — a dump of a live table is a fuzzy snapshot in both
-  * engines); rows with NULL keys are outside every range and are not
-  * dumped (the OMOP NOTE_ID contract — primary keys are non-null).
+  * engines).
   *
   * Scale shape: each chunk is an independent partitioned scan → write
   * (shuffle-free); `chunks` bounds the blast radius of one failure to
@@ -53,94 +55,94 @@ object ResumableDump {
       spark: SparkSession,
       source: NoteSource,
       keyCol: String,
-      bounds: (Long, Long),
       outputDir: String,
       chunks: Int,
       layout: ParquetLayout = ParquetLayout()
   ): Result = {
-    val (lo, hi) = bounds
     require(chunks >= 1, s"need chunks >= 1, got $chunks")
-    require(lo <= hi, s"empty key range [$lo, $hi]")
-    val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(outputDir)
-    val fs = root.getFileSystem(conf)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(root)
-
-    // the manifest pins the chunking; a mismatched re-entry fails fast
-    val manifest = s"""{"keyCol":"$keyCol","lo":$lo,"hi":$hi,"chunks":$chunks}"""
     val manifestPath = new Path(root, "_resume.json")
-    if (fs.exists(manifestPath)) {
-      val in = fs.open(manifestPath)
-      val prior =
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
+    val bounds =
+      if (fs.exists(manifestPath)) {
+        val in = fs.open(manifestPath)
+        try resumeBounds(new String(in.readAllBytes(), "UTF-8"), keyCol, chunks)
         finally in.close()
-      require(
-        prior == manifest,
-        s"resume manifest mismatch: dump was started as $prior, asked to resume as $manifest"
-      )
-    } else {
-      val out = fs.create(manifestPath, true)
-      try out.write(manifest.getBytes("UTF-8"))
-      finally out.close()
-    }
-
-    // chunk i covers [lo + i*step, lo + (i+1)*step), last chunk closed at
-    // hi inclusive — contiguous, disjoint, covering [lo, hi]
-    val span = hi - lo + 1L
-    val step = math.max(1L, (span + chunks - 1) / chunks)
-    val ran = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val skipped = scala.collection.mutable.ArrayBuffer.empty[Int]
-    (0 until chunks).foreach { i =>
-      val cLo = lo + i * step
-      val cHi = math.min(lo + (i + 1) * step - 1, hi)
-      val dir = new Path(root, f"chunk_$i%05d")
-      if (cLo > hi) {
-        // degenerate tail when chunks > span: nothing to cover
-        skipped += i
-      } else if (fs.exists(new Path(dir, "_SUCCESS"))) {
-        skipped += i
       } else {
-        val slice = source
-          .scan(spark)
-          .filter(col(keyCol) >= cLo && col(keyCol) <= cHi)
-        ShardedParquetSink.write(slice, dir.toString, layout)
-        ran += i
+        // a table with no non-NULL key plans one range: the whole table
+        val b = source.keyBounds(spark, keyCol).getOrElse((0L, 0L))
+        val out = fs.create(manifestPath, true)
+        try out.write(manifest(keyCol, b, chunks).getBytes("UTF-8"))
+        finally out.close()
+        b
       }
+
+    val (skipped, ran) = plan(bounds, chunks).zipWithIndex.partition { case (_, i) =>
+      fs.exists(new Path(root, f"chunk_$i%05d/_SUCCESS"))
+    }
+    ran.foreach { case (range, i) =>
+      val dir = new Path(root, f"chunk_$i%05d").toString
+      ShardedParquetSink.write(source.rangeScan(spark, keyCol, range), dir, layout)
     }
 
     // read-back over every chunk dir (readBackReport lists one directory
     // non-recursively, so walk the chunk dirs and concatenate)
-    val chunkDirs = fs
-      .listStatus(root)
-      .toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("chunk_"))
-      .sortBy(_.getPath.getName)
-    require(chunkDirs.nonEmpty, s"no chunk directories under $outputDir")
-    val reports = chunkDirs.map(d => ShardedParquetSink.readBackReport(spark, d.getPath.toString))
+    val reports = chunkDirs(fs, root).map(d => ShardedParquetSink.readBackReport(spark, d.toString))
     val schemas = reports.map(_.schemaDdl).distinct
     require(schemas.size == 1, s"chunk schemas diverge: $schemas")
-    Result(DumpReport(schemas.head, reports.flatMap(_.shards)), ran.toSeq, skipped.toSeq)
+    Result(DumpReport(schemas.head, reports.flatMap(_.shards)), ran.map(_._2), skipped.map(_._2))
+  }
+
+  /** The chunk plan: up to `chunks` contiguous ranges of equal key width
+    * over `[lo, hi]` (one when `lo == hi`), the first open below and
+    * holding the NULL keys, the last open above.
+    */
+  private def plan(bounds: (Long, Long), chunks: Int): Seq[KeyRange] = {
+    val (lo, hi) = bounds
+    val step = math.max(1L, (hi - lo + chunks) / chunks)
+    val starts = (0 until chunks).map(lo + _ * step).takeWhile(_ <= hi)
+    starts.zipWithIndex.map { case (s, i) => KeyRange(s, math.min(s + step - 1, hi), i == 0, i == starts.size - 1) }
+  }
+
+  // `nullKeys` names the chunk holding the NULL-key rows; a manifest
+  // without it comes from a plan that left them out
+  private def manifest(keyCol: String, bounds: (Long, Long), chunks: Int): String =
+    s"""{"keyCol":"$keyCol","lo":${bounds._1},"hi":${bounds._2},"chunks":$chunks,"nullKeys":"chunk_00000"}"""
+  private val Manifest = """\{"keyCol":"(.*)","lo":(-?\d+),"hi":(-?\d+),"chunks":(\d+),"nullKeys":"chunk_00000"\}""".r
+
+  private def resumeBounds(prior: String, keyCol: String, chunks: Int): (Long, Long) =
+    prior match {
+      case Manifest(k, lo, hi, c) =>
+        require(
+          k == keyCol && c.toInt == chunks,
+          s"resume manifest mismatch: dump was started as $prior, asked to resume on '$keyCol' in $chunks chunks"
+        )
+        (lo.toLong, hi.toLong)
+      case _ =>
+        throw new IllegalArgumentException(
+          s"resume manifest $prior names no chunk for the NULL-key rows: its plan did not dump " +
+            "them, so resuming it would skip them — dump into a fresh directory"
+        )
+    }
+
+  private def chunkDirs(fs: FileSystem, root: Path): Seq[Path] = {
+    val dirs = fs.listStatus(root).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("chunk_"))
+      .map(_.getPath).sortBy(_.getName)
+    require(dirs.nonEmpty, s"no chunk directories under $root")
+    dirs
   }
 
   /** Open a completed resumable dump as one frame (union of chunk dirs —
     * a plain multi-path parquet scan; no partition-discovery column is
-    * introduced because the chunk index is layout, not data).
+    * introduced because the chunk index is layout, not data). Every
+    * committed chunk holds at least one shard: an empty range writes a
+    * schema-only one.
     */
   def read(spark: SparkSession, outputDir: String): DataFrame = {
     val root = new Path(outputDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = fs
-      .listStatus(root)
-      .toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("chunk_"))
-      .sortBy(_.getPath.getName)
-      .map(_.getPath.toString)
-    require(dirs.nonEmpty, s"no chunk directories under $outputDir")
-    // skip empty chunk dirs (a range with no rows writes only _SUCCESS)
-    val nonEmpty = dirs.filter(d =>
-      fs.listStatus(new Path(d)).exists(_.getPath.getName.endsWith(".parquet"))
-    )
-    if (nonEmpty.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(nonEmpty: _*)
+    spark.read.parquet(chunkDirs(fs, root).map(_.toString): _*)
   }
 }

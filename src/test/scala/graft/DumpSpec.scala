@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.OmopDump
-import graft.sources.{NoteSource, ParquetLayout, ParquetNoteSource, ResumableDump}
+import graft.sources.{KeyRange, NoteSource, ParquetLayout, ParquetNoteSource, ResumableDump}
 import org.apache.spark.sql.functions._
 
 /** The parity pipeline end-to-end (dump_table.py:175-248 semantics):
@@ -98,22 +98,18 @@ class DumpSpec extends SparkSpec {
   // ------------------------------------------------------ resumable ingest
 
   private def docsTable = spark.read.parquet(s"$Sf0001/documents.parquet")
-  private def docBounds = {
-    val r = docsTable.agg(min(col("doc_id")), max(col("doc_id"))).head()
-    (r.getLong(0), r.getLong(1))
-  }
   private def sameContent(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Boolean =
     a.except(b).isEmpty && b.except(a).isEmpty
 
   test("resumable dump, fresh run: full coverage, per-chunk _SUCCESS, read == table") {
     val dir = s"$testOut/resume_fresh"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    val res = ResumableDump.run(spark, src(), "doc_id", docBounds, dir, 4, ParquetLayout(maxRecordsPerFile = 64L))
+    val res = ResumableDump.run(spark, src(), "doc_id", dir, 4, ParquetLayout(maxRecordsPerFile = 64L))
     assert(res.ranChunks == (0 until 4) && res.skippedChunks.isEmpty)
     assert(res.report.totalRows == total)
     assert(sameContent(ResumableDump.read(spark, dir), docsTable))
     // idempotent re-entry: everything complete, NOTHING re-runs
-    val again = ResumableDump.run(spark, src(), "doc_id", docBounds, dir, 4, ParquetLayout(maxRecordsPerFile = 64L))
+    val again = ResumableDump.run(spark, src(), "doc_id", dir, 4, ParquetLayout(maxRecordsPerFile = 64L))
     assert(again.ranChunks.isEmpty && again.skippedChunks == (0 until 4))
     assert(again.report.totalRows == total)
   }
@@ -121,14 +117,14 @@ class DumpSpec extends SparkSpec {
   test("resume equals fresh: a crashed chunk (no _SUCCESS) and a missing chunk re-run; complete chunks skip") {
     val dir = s"$testOut/resume_crash"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    ResumableDump.run(spark, src(), "doc_id", docBounds, dir, 4, ParquetLayout())
+    ResumableDump.run(spark, src(), "doc_id", dir, 4, ParquetLayout())
     // crash state A: chunk 1's marker never landed (mid-write kill) —
     // delete its _SUCCESS and corrupt its content to prove the rewrite
     assert(new java.io.File(s"$dir/chunk_00001/_SUCCESS").delete())
     new java.io.File(s"$dir/chunk_00001").listFiles().filter(_.getName.endsWith(".parquet")).foreach(_.delete())
     // crash state B: chunk 3 never started
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/chunk_00003"))
-    val res = ResumableDump.run(spark, src(), "doc_id", docBounds, dir, 4, ParquetLayout())
+    val res = ResumableDump.run(spark, src(), "doc_id", dir, 4, ParquetLayout())
     assert(res.ranChunks == Seq(1, 3), s"only the incomplete chunks re-run, got ${res.ranChunks}")
     assert(res.skippedChunks == Seq(0, 2))
     assert(res.report.totalRows == total)
@@ -138,23 +134,24 @@ class DumpSpec extends SparkSpec {
   test("kill mid-run, then resume: completed chunks survive, the rest complete") {
     val dir = s"$testOut/resume_kill"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    // a source that dies on its 3rd scan — chunks 0 and 1 land, 2 kills
+    // a source that dies on its 3rd chunk scan — chunks 0 and 1 land, 2 kills
     val killing = new NoteSource {
       var calls = 0
-      def scan(s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
+      def scan(s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = src().scan(s)
+      def countAtSource(s: org.apache.spark.sql.SparkSession): Long = src().countAtSource(s)
+      override def rangeScan(s: org.apache.spark.sql.SparkSession, key: String, r: KeyRange) = {
         calls += 1
         if (calls == 3) throw new RuntimeException("connection reset (simulated)")
-        src().scan(s)
+        super.rangeScan(s, key, r)
       }
-      def countAtSource(s: org.apache.spark.sql.SparkSession): Long = src().countAtSource(s)
     }
     val died = intercept[RuntimeException] {
-      ResumableDump.run(spark, killing, "doc_id", docBounds, dir, 4, ParquetLayout())
+      ResumableDump.run(spark, killing, "doc_id", dir, 4, ParquetLayout())
     }
     assert(died.getMessage.contains("simulated"))
     assert(new java.io.File(s"$dir/chunk_00001/_SUCCESS").exists(), "completed chunks are durable")
     assert(!new java.io.File(s"$dir/chunk_00002").exists() || !new java.io.File(s"$dir/chunk_00002/_SUCCESS").exists())
-    val res = ResumableDump.run(spark, src(), "doc_id", docBounds, dir, 4, ParquetLayout())
+    val res = ResumableDump.run(spark, src(), "doc_id", dir, 4, ParquetLayout())
     assert(res.ranChunks == Seq(2, 3) && res.skippedChunks == Seq(0, 1))
     assert(sameContent(ResumableDump.read(spark, dir), docsTable))
   }
@@ -162,17 +159,54 @@ class DumpSpec extends SparkSpec {
   test("resume manifest pins the chunking: mismatched re-entry fails fast") {
     val dir = s"$testOut/resume_manifest"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    ResumableDump.run(spark, src(), "doc_id", docBounds, dir, 4, ParquetLayout())
+    ResumableDump.run(spark, src(), "doc_id", dir, 4, ParquetLayout())
     intercept[IllegalArgumentException] {
-      ResumableDump.run(spark, src(), "doc_id", docBounds, dir, 8, ParquetLayout())
+      ResumableDump.run(spark, src(), "doc_id", dir, 8, ParquetLayout())
     }
-    intercept[IllegalArgumentException] {
-      ResumableDump.run(spark, src(), "doc_id", (docBounds._1, docBounds._2 + 1), dir, 4, ParquetLayout())
+    val otherKey = intercept[IllegalArgumentException] {
+      ResumableDump.run(spark, src(), "n_chars", dir, 4, ParquetLayout())
     }
+    assert(otherKey.getMessage.contains("resume manifest mismatch") && otherKey.getMessage.contains("'n_chars'"))
+  }
+
+  test("a manifest from the plan that dropped NULL-key rows fails fast, naming the difference") {
+    val dir = s"$testOut/resume_manifest_old"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    ResumableDump.run(spark, src(), "doc_id", dir, 4, ParquetLayout())
+    // the same chunking as written before NULL-key rows rode chunk 0,
+    // through the Hadoop file system as the dump writes it (checksum too)
+    val manifest = new org.apache.hadoop.fs.Path(dir, "_resume.json")
+    val out = manifest.getFileSystem(spark.sparkContext.hadoopConfiguration).create(manifest, true)
+    try out.write("""{"keyCol":"doc_id","lo":0,"hi":499,"chunks":4}""".getBytes("UTF-8"))
+    finally out.close()
+    val refused = intercept[IllegalArgumentException] {
+      ResumableDump.run(spark, src(), "doc_id", dir, 4, ParquetLayout())
+    }
+    assert(refused.getMessage.contains("NULL-key rows"), refused.getMessage)
+  }
+
+  test("NULL-key rows ride chunk 0 exactly once; a table with no non-NULL key is one chunk") {
+    import spark.implicits._
+    val keyed = s"$testOut/resume_nullkey_src"
+    Seq[(Option[Long], String)]((Some(5L), "a"), (None, "b"), (Some(9L), "c"), (None, "d"), (Some(1L), "e"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(keyed)
+    val dir = s"$testOut/resume_nullkey"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    val res = ResumableDump.run(spark, new ParquetNoteSource(keyed), "doc_id", dir, 3, ParquetLayout())
+    assert(res.ranChunks == (0 until 3) && res.report.totalRows == 5L)
+    assert(spark.read.parquet(s"$dir/chunk_00000").filter(col("doc_id").isNull).count() == 2L)
+    assert(sameContent(ResumableDump.read(spark, dir), spark.read.parquet(keyed)))
+    val allNull = s"$testOut/resume_allnull_src"
+    Seq[(Option[Long], String)]((None, "a"), (None, "b")).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(allNull)
+    val nullDir = s"$testOut/resume_allnull"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(nullDir))
+    val whole = ResumableDump.run(spark, new ParquetNoteSource(allNull), "doc_id", nullDir, 4, ParquetLayout())
+    assert(whole.ranChunks == Seq(0) && whole.report.totalRows == 2L)
   }
 
   test("the chunk range filter reaches the source scan (pushdown — skipped ranges never cross the wire)") {
-    val slice = src().scan(spark).filter(col("doc_id") >= 10L && col("doc_id") <= 20L)
+    val slice = src().rangeScan(spark, "doc_id", KeyRange(10L, 20L, first = false, last = false))
     val plan = slice.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("GreaterThanOrEqual(doc_id"), s"range not pushed:\n$plan")
   }
@@ -267,7 +301,7 @@ class DumpSpec extends SparkSpec {
     val tiny = s"$testOut/resume_tiny_src"
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(tiny)
-    val res = ResumableDump.run(spark, new ParquetNoteSource(tiny), "doc_id", (1L, 3L), dir, 8, ParquetLayout())
+    val res = ResumableDump.run(spark, new ParquetNoteSource(tiny), "doc_id", dir, 8, ParquetLayout())
     assert(res.report.totalRows == 3L)
     assert(sameContent(ResumableDump.read(spark, dir), spark.read.parquet(tiny)))
   }

@@ -49,6 +49,19 @@ class JdbcConfigSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](parseTables("a,,b"))
   }
 
+  test("fromEnv: a malformed ORACLE_PORT fails naming the variable") {
+    val e = intercept[IllegalArgumentException](JdbcSourceConfig.fromEnv(env + ("ORACLE_PORT" -> "15x21")))
+    assert(e.getMessage.contains("ORACLE_PORT") && e.getMessage.contains("15x21"))
+  }
+
+  test("DumpMain limit: GRAB_EVERYTHING drops it, GRAFT_LIMIT sets it, a malformed GRAFT_LIMIT fails naming the variable") {
+    assert(DumpMain.limitFromEnv(Map.empty) == Some(2000000L))
+    assert(DumpMain.limitFromEnv(Map("GRAFT_LIMIT" -> "500")) == Some(500L))
+    assert(DumpMain.limitFromEnv(Map("GRAB_EVERYTHING" -> "1", "GRAFT_LIMIT" -> "oops")).isEmpty)
+    val e = intercept[IllegalArgumentException](DumpMain.limitFromEnv(Map("GRAFT_LIMIT" -> "2e6")))
+    assert(e.getMessage.contains("GRAFT_LIMIT") && e.getMessage.contains("2e6"))
+  }
+
   test("credentials never leak through toString/logs") {
     val cfg = JdbcSourceConfig.fromEnv(env).get
     assert(!cfg.toString.contains("s3cret"))

@@ -1,7 +1,10 @@
 package graft
 
 import graft.operators.OmopDump
-import graft.sources.{JdbcNoteSource, JdbcSource, JdbcSourceConfig, ParquetLayout}
+import graft.sources.{DumpAll, JdbcNoteSource, JdbcSource, JdbcSourceConfig, KeyRange, NoteSource, ParquetLayout, ResumableDump}
+import org.apache.spark.GraftTestBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, TimestampType}
 import java.sql.DriverManager
@@ -75,6 +78,36 @@ class JdbcIntegrationSpec extends SparkSpec {
       ps.executeBatch()
     } finally conn.close()
   }
+
+  /** Runs `body`; returns, per stage it ran in stage order, the rows each
+    * task read from the source (by task index), and the number of jobs.
+    */
+  private def taskRowsIn(body: => Unit): (Seq[Seq[Long]], Int) = {
+    val rows = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        rows.add((e.stageId, e.taskInfo.index, e.taskMetrics.inputMetrics.recordsRead))
+    }
+    GraftTestBridge.drainListeners(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      GraftTestBridge.drainListeners(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val perStage = rows.asScala.toSeq.groupBy(_._1).toSeq.sortBy(_._1).map(_._2.sortBy(_._2).map(_._3))
+    (perStage, jobs.get())
+  }
+
+  private def fresh(dir: String): String = {
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    dir
+  }
+
+  private def keyedNote(table: String, source: NoteSource) =
+    Seq(DumpAll.TableSpec(table, source, keyCol = Some("NOTE_ID"), chunks = 4))
 
   test("O2: count-at-source pushes the scalar count to the database") {
     db
@@ -171,24 +204,128 @@ class JdbcIntegrationSpec extends SparkSpec {
     // filter on the JDBC scan (Spark's JDBCRelation compiles it into the
     // source query's WHERE clause — only the chunk's rows leave Derby)
     val slicePlan = source
-      .scan(spark)
-      .filter(col("NOTE_ID") >= 25L && col("NOTE_ID") <= 49L)
+      .rangeScan(spark, "NOTE_ID", KeyRange(25L, 49L, first = false, last = false))
       .queryExecution.executedPlan.toString
     assert(
       slicePlan.contains("PushedFilters") && slicePlan.contains("GreaterThanOrEqual(NOTE_ID"),
       s"range must push into the JDBC source query:\n$slicePlan"
     )
-    val fresh = graft.sources.ResumableDump
-      .run(spark, source, "NOTE_ID", (0L, NRows - 1L), out, 4, ParquetLayout())
-    assert(fresh.ranChunks == (0 until 4) && fresh.report.totalRows == NRows.toLong)
+    val first = ResumableDump.run(spark, source, "NOTE_ID", out, 4, ParquetLayout())
+    assert(first.ranChunks == (0 until 4) && first.report.totalRows == NRows.toLong)
     // crash chunk 2, resume: only it re-reads; content == the table
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$out/chunk_00002"))
-    val resumed = graft.sources.ResumableDump
-      .run(spark, source, "NOTE_ID", (0L, NRows - 1L), out, 4, ParquetLayout())
+    val resumed = ResumableDump.run(spark, source, "NOTE_ID", out, 4, ParquetLayout())
     assert(resumed.ranChunks == Seq(2) && resumed.skippedChunks == Seq(0, 1, 3))
-    val back = graft.sources.ResumableDump.read(spark, out)
+    val back = ResumableDump.read(spark, out)
     assert(back.count() == NRows.toLong)
     assert(back.select(sum(col("NOTE_ID"))).head().getLong(0) == NRows.toLong * (NRows - 1) / 2)
     assert(back.schema("NOTE_TEXT").dataType == StringType, "dialect rewrite survives the chunked dump")
+  }
+
+  test("keyed DumpAll: every range task of every chunk reads inside its chunk; re-entry runs no job and no bounds query") {
+    db
+    val root = fresh(s"$testOut/jdbc_dumpall_ranges")
+    val jdbc = new JdbcNoteSource(cfg(4), "NOTE")
+    var boundsQueries = 0
+    val counted = new NoteSource {
+      def scan(s: SparkSession): DataFrame = jdbc.scan(s)
+      def countAtSource(s: SparkSession): Long = jdbc.countAtSource(s)
+      override def keyBounds(s: SparkSession, key: String) = { boundsQueries += 1; jdbc.keyBounds(s, key) }
+      override def rangeScan(s: SparkSession, key: String, r: KeyRange) = jdbc.rangeScan(s, key, r)
+    }
+    val (stages, jobs) = taskRowsIn(DumpAll.run(spark, keyedNote("NOTE", counted), root))
+    // one write job per chunk, each in numPartitions range tasks over the
+    // chunk's own 25 keys: 6,6,6,7 rows, where a filter over the
+    // whole-span scan reads 0,0,0,25
+    info(s"per-chunk task rows: $stages")
+    assert(jobs == 4 && stages.size == 4, s"$jobs jobs, per-stage task rows $stages")
+    stages.foreach(t => assert(t.size == 4 && t.forall(_ >= 1), s"a chunk's range tasks read $t"))
+    assert(stages.flatten.sum == NRows.toLong && boundsQueries == 1)
+    val back = ResumableDump.read(spark, s"$root/NOTE").agg(count(lit(1)), sum(col("NOTE_ID"))).head()
+    assert(back.getLong(0) == NRows.toLong && back.getLong(1) == NRows.toLong * (NRows - 1) / 2)
+    // a completed table re-enters from its manifest alone
+    var again: Seq[DumpAll.TableOutcome] = Nil
+    val (_, reentryJobs) = taskRowsIn { again = DumpAll.run(spark, keyedNote("NOTE", counted), root) }
+    assert(reentryJobs == 0 && boundsQueries == 1, s"re-entry ran $reentryJobs jobs, $boundsQueries bounds queries")
+    assert(again.head.ranChunks == 0 && again.head.skippedChunks == 4 && again.head.rows == NRows.toLong)
+  }
+
+  test("keyed DumpAll re-entry after a key above the old max was inserted: completed chunks skip, the last chunk takes it") {
+    db
+    val conn = DriverManager.getConnection(url)
+    try {
+      val st = conn.createStatement()
+      st.executeUpdate("CREATE TABLE NOTE_GROW (NOTE_ID BIGINT NOT NULL PRIMARY KEY, NOTE_TEXT CLOB)")
+      st.executeUpdate(s"INSERT INTO NOTE_GROW SELECT NOTE_ID, NOTE_TEXT FROM NOTE")
+    } finally conn.close()
+    val root = fresh(s"$testOut/jdbc_dumpall_grow")
+    def run() = DumpAll.run(spark, keyedNote("NOTE_GROW", new JdbcNoteSource(cfg(4), "NOTE_GROW")), root).head
+    assert(run().ranChunks == 4)
+    val ins = DriverManager.getConnection(url)
+    try ins.createStatement().executeUpdate(s"INSERT INTO NOTE_GROW VALUES ($NRows, 'late note')")
+    finally ins.close()
+    val again = run()
+    assert(again.ok && again.ranChunks == 0 && again.skippedChunks == 4 && again.rows == NRows.toLong, s"$again")
+    // the plan's last chunk is open above its bounds: re-running it lands the late key
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$root/NOTE_GROW/chunk_00003"))
+    val redo = run()
+    assert(redo.ranChunks == 1 && redo.rows == NRows + 1L, s"$redo")
+  }
+
+  test("keyed DumpAll on a nullable key: NULL-key rows are dumped exactly once") {
+    robustnessDb
+    val root = fresh(s"$testOut/jdbc_dumpall_nullkey")
+    val o = DumpAll.run(spark, keyedNote("NOTE_NULLKEY", new JdbcNoteSource(cfg(4), "NOTE_NULLKEY")), root).head
+    assert(o.ok && o.rows == 40L, s"$o")
+    val back = ResumableDump.read(spark, s"$root/NOTE_NULLKEY")
+    assert(back.count() == 40L && back.filter(col("NOTE_ID").isNull).count() == 20L)
+    assert(back.select("PERSON_ID").distinct().count() == 40L)
+  }
+
+  test("keyed DumpAll on an empty table dumps one chunk and reads back 0 rows") {
+    robustnessDb
+    val root = fresh(s"$testOut/jdbc_dumpall_empty")
+    val o = DumpAll.run(spark, keyedNote("NOTE_EMPTY", new JdbcNoteSource(cfg(4), "NOTE_EMPTY")), root).head
+    assert(o.ok && o.rows == 0L && o.ranChunks == 1, s"$o")
+    assert(ResumableDump.read(spark, s"$root/NOTE_EMPTY").count() == 0L)
+  }
+
+  test("the env-configured dump range-partitions on an integral primary key, and scans a table without one whole") {
+    robustnessDb
+    assert(JdbcSource.integralKeyAtSource(cfg(1), "NOTE") == Some("NOTE_ID"))
+    assert(JdbcSource.integralKeyAtSource(cfg(1), "note") == Some("NOTE_ID"), "unquoted names match as stored")
+    val note = DumpMain.jdbcSource(spark, cfg(1))("NOTE").scan(spark)
+    assert(note.rdd.getNumPartitions == spark.sparkContext.defaultParallelism && note.rdd.getNumPartitions > 1)
+    assert(note.count() == NRows.toLong)
+    assert(JdbcSource.integralKeyAtSource(cfg(1), "NOTE_NULLKEY").isEmpty)
+    val noKey = DumpMain.jdbcSource(spark, cfg(1))("NOTE_NULLKEY").scan(spark)
+    assert(noKey.rdd.getNumPartitions == 1 && noKey.count() == 40L)
+  }
+
+  test("the env-configured dump with a row cap reads at most the cap from the source") {
+    db
+    val out = fresh(s"$testOut/jdbc_dumpmain_capped")
+    val source = DumpMain.jdbcSource(spark, cfg(1), Some(10L))("NOTE")
+    var res: OmopDump.Result = null
+    // Spark's JDBC relation runs the limit inside each scan task, so a
+    // source split into 4 range tasks would read 10 rows in every one
+    val (stages, _) = taskRowsIn { res = OmopDump.run(spark, source, out, Some(10L)) }
+    assert(stages.flatten.sum <= 10L, s"source rows read per task, per stage: $stages")
+    assert(res.report.totalRows == 10L && res.sourceCount == NRows.toLong)
+  }
+
+  test("the primary-key lookup stays in the table's own schema and skips a key that needs quoting") {
+    robustnessDb
+    val conn = DriverManager.getConnection(url)
+    try {
+      val st = conn.createStatement()
+      // a same-named table in another schema, keyed where APP.NOTE_NULLKEY is not
+      st.executeUpdate("CREATE SCHEMA OTHER")
+      st.executeUpdate("CREATE TABLE OTHER.NOTE_NULLKEY (NOTE_ID BIGINT NOT NULL PRIMARY KEY)")
+      st.executeUpdate("CREATE TABLE NOTE_QUOTED (\"note_id\" BIGINT NOT NULL PRIMARY KEY)")
+    } finally conn.close()
+    assert(JdbcSource.integralKeyAtSource(cfg(1), "NOTE_NULLKEY").isEmpty)
+    assert(JdbcSource.integralKeyAtSource(cfg(1), "other.note_nullkey") == Some("NOTE_ID"))
+    assert(JdbcSource.integralKeyAtSource(cfg(1), "NOTE_QUOTED").isEmpty)
   }
 }

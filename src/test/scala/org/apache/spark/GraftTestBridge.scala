@@ -28,6 +28,9 @@ object GraftTestBridge {
 
   def success: TaskEndReason = Success
 
+  /** Blocks until the listener bus has delivered every posted event. */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
   /** The reason a speculative or preempted attempt reports — it may have
     * written rows before dying, and its retry reports them again.
     */
