@@ -817,12 +817,13 @@ object SparkEntry {
     "q28_embedding_neardup" -> ((s, dir) => {
       Dedup.embeddingPairs(tk(s, dir, "embeddings"), 0.4).orderBy(col("vec_a"), col("vec_b"))
     }),
+    // one clusterer, gated over both loaders: q32 reads the spread scan,
+    // q38 the plain one (the plan inside is componentsOf's choice)
     "q32_dedup_clusters" -> ((s, dir) => {
       Dedup.clusters(tk(s, dir, "documents"), 0.8).orderBy(col("doc_id"))
     }),
-    // same components, O(log n)-round algorithm — both formulations gated
     "q38_dedup_clusters_star" -> ((s, dir) => {
-      Dedup.clustersScalable(t(s, dir, "documents"), 0.8).orderBy(col("doc_id"))
+      Dedup.clusters(t(s, dir, "documents"), 0.8).orderBy(col("doc_id"))
     }),
     // centrality-based cluster representative: 3 integer-exact damped
     // power-iteration rounds over the near-dup graph, keep = per-cluster

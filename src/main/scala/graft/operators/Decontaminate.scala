@@ -18,9 +18,7 @@ import graft.functions.TextFunctions
   * broadcasts — the corpus side stays a scan + explode with NO shuffle
   * until the per-document count aggregation, whose key (doc id) is as
   * well-distributed as the corpus itself. The corpus is never self-joined
-  * and never shuffled on n-gram (where boilerplate grams would skew);
-  * with `broadcastIndex = false` the join falls back to a shuffled
-  * equi-join on the hash for the rare giant-benchmark case.
+  * and never shuffled on n-gram (where boilerplate grams would skew).
   *
   * Determinism: n-grams are compared through the engine-wide `poly_hash`
   * (DuckDB-mirrorable; a hash collision could flag a clean document, at
@@ -75,14 +73,13 @@ object Decontaminate {
       benchmark: DataFrame,
       k: Int = DefaultK,
       textCol: String = "text",
-      idCol: String = "doc_id",
-      broadcastIndex: Boolean = true
+      idCol: String = "doc_id"
   ): DataFrame = {
     require(k > 0, s"need k > 0, got $k")
     val idx = benchmarkIndex(benchmark, k, textCol)
     corpus
       .select(col(idCol), explode(TextFunctions.shingleHashes(col(textCol), k)).as("gh"))
-      .join(if (broadcastIndex) broadcast(idx) else idx, Seq("gh"))
+      .join(broadcast(idx), Seq("gh"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_shared"))
   }
@@ -107,8 +104,7 @@ object Decontaminate {
     *    the filter), so the contaminated id set — and therefore the
     *    id-keyed anti join, duplicate ids included — is identical.
     *  - distributed (index above the cap, or cap 0): the
-    *    [[overlapReport]] broadcast-join shape, scale-safe for
-    *    corpus-sized "benchmarks".
+    *    [[overlapReport]] broadcast-join shape.
     *
     * The regime probe runs at compose time.
     */
@@ -117,8 +113,7 @@ object Decontaminate {
       benchmark: DataFrame,
       k: Int = DefaultK,
       textCol: String = "text",
-      idCol: String = "doc_id",
-      broadcastIndex: Boolean = true
+      idCol: String = "doc_id"
   ): DataFrame = {
     require(k > 0, s"need k > 0, got $k")
     val corpus = requireIds(corpus0, idCol, "Decontaminate.clean")
@@ -133,7 +128,7 @@ object Decontaminate {
           .filter(graft.functions.GraftExpressions.has_shared_gram(col(textCol), k, grams))
           .select(col(idCol))
       case None =>
-        overlapReport(corpus, benchmark, k, textCol, idCol, broadcastIndex).select(col(idCol))
+        overlapReport(corpus, benchmark, k, textCol, idCol).select(col(idCol))
     }
     corpus.join(contaminatedIds, Seq(idCol), "left_anti")
   }
@@ -159,8 +154,7 @@ object Decontaminate {
       benchmark: DataFrame,
       k: Int = DefaultK,
       textCol: String = "text",
-      idCol: String = "doc_id",
-      broadcastIndex: Boolean = true
+      idCol: String = "doc_id"
   ): DataFrame = {
     require(k > 0, s"need k > 0, got $k")
     val bench = benchmark.select(
@@ -169,7 +163,7 @@ object Decontaminate {
     )
     corpus
       .select(col(idCol), explode(TextFunctions.shingleHashes(col(textCol), k)).as("gh"))
-      .join(if (broadcastIndex) broadcast(bench) else bench, Seq("gh"))
+      .join(broadcast(bench), Seq("gh"))
       .groupBy(col("bench_id"))
       .agg(
         countDistinct(col(idCol)).as("n_corpus_docs"),
@@ -202,8 +196,7 @@ object Decontaminate {
       benchmark: DataFrame,
       k: Int = DefaultK,
       textCol: String = "text",
-      idCol: String = "doc_id",
-      broadcastIndex: Boolean = true
+      idCol: String = "doc_id"
   ): DataFrame = {
     require(k > 0, s"need k > 0, got $k")
     val corpusChecked = requireIds(corpus, idCol, "redactOverlaps")
@@ -213,7 +206,7 @@ object Decontaminate {
         col(idCol),
         posexplode(TextFunctions.positionalShingleHashes(col(textCol), k)).as(Seq("i", "gh"))
       )
-      .join(if (broadcastIndex) broadcast(idx) else idx, Seq("gh"))
+      .join(broadcast(idx), Seq("gh"))
       .groupBy(col(idCol))
       .agg(array_sort(collect_list(col("i").cast("long"))).as("__cuts"))
     SegmentDedup.rebuildWithoutCuts(
@@ -255,8 +248,7 @@ object Decontaminate {
       benchmark: DataFrame,
       k: Int = DefaultK,
       textCol: String = "text",
-      idCol: String = "doc_id",
-      broadcastIndex: Boolean = true
+      idCol: String = "doc_id"
   ): DataFrame = {
     require(k > 0, s"need k > 0, got $k")
     import org.apache.spark.sql.expressions.Window
@@ -267,7 +259,7 @@ object Decontaminate {
         col(idCol),
         posexplode(TextFunctions.positionalShingleHashes(col(textCol), k)).as(Seq("i", "gh"))
       )
-      .join(if (broadcastIndex) broadcast(idx) else idx, Seq("gh"))
+      .join(broadcast(idx), Seq("gh"))
     val runs = hits
       .withColumn(
         "__grp",

@@ -275,102 +275,18 @@ object Dedup {
   /** Near-duplicate CLUSTERS: connected components over the MinHash pair
     * graph, labels = min reachable doc_id. Pairs alone don't dedup a corpus
     * — transitive near-dups (a~b, b~c) must collapse to one cluster before
-    * a representative can be kept.
+    * a representative can be kept. Every doc gets a row; singletons label
+    * themselves.
     *
-    * Implementation is iterative min-label propagation: each round joins
-    * labels across edges and keeps the per-vertex minimum, terminating when
-    * a round changes nothing. Rounds are bounded by the cluster DIAMETER —
-    * near-dup clusters are short chains in practice, so a handful of
-    * shuffles total; each round is one equi-join + one partial-aggregated
-    * groupBy, both broadcast-free and skew-tolerant. (At adversarial scale,
-    * the large-star/small-star variant bounds rounds by O(log n) — same
-    * join shape, different edge rewriting — and is the drop-in upgrade.)
-    * Every doc gets a row; singletons label themselves.
+    * The verified pairs are persisted once and handed to
+    * [[clustersFromPairs]], so [[componentsOf]] picks the plan: a driver
+    * union-find when the edges fit [[DriverRegime]]'s cap, else
+    * alternating LARGE-STAR / SMALL-STAR edge rewriting (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond"), which converges in
+    * O(log n) rounds regardless of component DIAMETER (a 1000-revision
+    * near-dup chain is ~10 rounds, not 1000).
     */
   def clusters(
-      docs: DataFrame,
-      threshold: Double,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      maxRounds: Int = 64
-  ): DataFrame = {
-    // verified pairs persist BEFORE the direction-doubling union — without
-    // this the whole band+verify pipeline would evaluate once per union arm.
-    // Materializing them inside the withSignatures scope lets the signature
-    // cache be released here instead of outliving the clustering.
-    val pairs = withSignatures(docs, textCol, idCol) { base =>
-      val p = minhashPairsOf(base, threshold)
-        .select(col("doc_a"), col("doc_b"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    }
-    val edges = pairs
-      .union(pairs.select(col("doc_b"), col("doc_a")))
-      .toDF("src", "dst")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = docs
-      .select(col(idCol).as("doc_id"), col(idCol).as("label"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < maxRounds) {
-      val propagated = edges
-        .join(labels, edges("dst") === labels("doc_id"))
-        .groupBy(col("src"))
-        .agg(min(col("label")).as("nbr_label"))
-      // the improvement set is tiny (≤ vertices still converging), so the
-      // convergence check counts IT, not a self-join of the full label frame
-      val improvements = propagated
-        .join(labels, propagated("src") === labels("doc_id"))
-        .filter(col("nbr_label") < col("label"))
-        .select(col("src").as("doc_id"), col("nbr_label").as("label"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      changed = improvements.count()
-      if (changed > 0) {
-        // localCheckpoint truncates lineage — each round otherwise embeds
-        // every prior round's plan and analysis cost grows with round count
-        val next = labels
-          .withColumnRenamed("label", "old_label")
-          .join(improvements.withColumnRenamed("label", "new_label"), Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(col("new_label"), col("old_label")).as("label"))
-          .localCheckpoint(true)
-        labels.unpersist()
-        labels = next
-      }
-      improvements.unpersist()
-      rounds += 1
-    }
-    // truncated propagation would emit multiple labels for one true
-    // component — wrong clusters, silently. Fail loudly instead; chains
-    // deeper than maxRounds need the large-star/small-star formulation.
-    require(
-      changed == 0,
-      s"cluster label propagation did not converge within $maxRounds rounds; " +
-        "raise maxRounds or switch to large-star/small-star for deep chains"
-    )
-    // labels are materialized (counted) — the working frames can go; a
-    // cache-evicted labels frame recomputes through unpersisted lineage,
-    // which is slow but correct
-    edges.unpersist()
-    pairs.unpersist()
-    labels.select(col("doc_id"), col("label").as("cluster_id"))
-  }
-
-  /** Connected components via alternating LARGE-STAR / SMALL-STAR edge
-    * rewriting (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond") — converges in O(log n) rounds regardless of component
-    * DIAMETER, where [[clusters]]' plain min-label propagation needs
-    * diameter rounds (a 1000-revision near-dup chain = 1000 shuffles
-    * there, ~10 here). Each half-round is one groupBy(min) + one join —
-    * the same shuffle shapes, just a rewiring of which edges survive:
-    *  - large-star: every neighbor v > u re-attaches to m(u) = min(N(u)∪u)
-    *  - small-star: every neighbor v ≤ u (and u itself) attaches to m(u)
-    * Fixpoint = the edge set is a union of stars centered at component
-    * minima; labels read off as m(u). Prefer this form whenever chains may
-    * run deep; results are identical to [[clusters]] on the same pairs.
-    */
-  def clustersScalable(
       docs: DataFrame,
       threshold: Double,
       textCol: String = "text",
@@ -537,46 +453,19 @@ object Dedup {
     unionFind(rows.iterator.map(r => (r.getLong(0), r.getLong(1)))).toSeq.toDF("doc_id", "cluster_id")
   }
 
-  /** Clustering strategy selector for [[dedupNear]]. Both produce
-    * IDENTICAL labels (min doc_id per connected component); they differ
-    * only in round complexity.
-    */
-  sealed trait ClusterAlgo
-  object ClusterAlgo {
-
-    /** Large-star/small-star contraction — O(log n) rounds regardless of
-      * component diameter. The production default: a 1000-revision chain
-      * dedups instead of blowing the propagation round budget.
-      */
-    case object Star extends ClusterAlgo
-
-    /** Diameter-bounded min-label propagation — fewer shuffles on the
-      * shallow clusters typical of web-corpus near-dups, but
-      * `require`-fails on chains deeper than its round budget.
-      */
-    case object Propagate extends ClusterAlgo
-  }
-
   /** End-to-end near-dedup: the corpus with one representative per
     * near-dup cluster (the min-id member). This is the operator a training
     * pipeline actually calls — pairs and clusters are its building blocks.
     * One extra semi-join over the clustering; emits the surviving rows
     * with their cluster id and the size of the group they represent.
-    * Defaults to the O(log n) star-contraction clusterer so adversarially
-    * deep chains complete (the propagation variant stays available for
-    * corpora known to be shallow).
     */
   def dedupNear(
       docs: DataFrame,
       threshold: Double,
       textCol: String = "text",
-      idCol: String = "doc_id",
-      algo: ClusterAlgo = ClusterAlgo.Star
+      idCol: String = "doc_id"
   ): DataFrame = {
-    val cl = algo match {
-      case ClusterAlgo.Star      => clustersScalable(docs, threshold, textCol, idCol)
-      case ClusterAlgo.Propagate => clusters(docs, threshold, textCol, idCol)
-    }
+    val cl = clusters(docs, threshold, textCol, idCol)
     val sizes = cl.groupBy(col("cluster_id")).agg(count(lit(1)).as("n_members"))
     cl.filter(col("doc_id") === col("cluster_id"))
       .join(sizes, "cluster_id")
@@ -636,13 +525,9 @@ object Dedup {
       threshold: Double,
       textCol: String = "text",
       idCol: String = "doc_id",
-      scoreOf: Column => Column = TextFunctions.qualityScoreFused,
-      algo: ClusterAlgo = ClusterAlgo.Star
+      scoreOf: Column => Column = TextFunctions.qualityScoreFused
   ): DataFrame = {
-    val cl = algo match {
-      case ClusterAlgo.Star      => clustersScalable(docs, threshold, textCol, idCol)
-      case ClusterAlgo.Propagate => clusters(docs, threshold, textCol, idCol)
-    }
+    val cl = clusters(docs, threshold, textCol, idCol)
     val scored = docs.select(col(idCol).as("doc_id"), scoreOf(col(textCol)).as("score"))
     cl.join(scored, "doc_id")
       .groupBy(col("cluster_id"))
@@ -821,7 +706,7 @@ object Dedup {
     * side — reproducible across runs, engines, partitionings, and stable
     * under re-clustering as long as the cluster membership is stable.
     *
-    * Scale shape: one clustering (the O(log n) star default), then one
+    * Scale shape: one clustering ([[clusters]]), then one
     * equi-join of labels against the representatives' hashes on
     * cluster_id — skew bounded by the largest cluster, which AQE splits;
     * no windows, no sorts.
@@ -831,14 +716,10 @@ object Dedup {
       threshold: Double,
       trainPct: Int = 80,
       textCol: String = "text",
-      idCol: String = "doc_id",
-      algo: ClusterAlgo = ClusterAlgo.Star
+      idCol: String = "doc_id"
   ): DataFrame = {
     require(trainPct >= 0 && trainPct <= 100, s"trainPct out of [0,100]: $trainPct")
-    val cl = algo match {
-      case ClusterAlgo.Star      => clustersScalable(docs, threshold, textCol, idCol)
-      case ClusterAlgo.Propagate => clusters(docs, threshold, textCol, idCol)
-    }
+    val cl = clusters(docs, threshold, textCol, idCol)
     // the representative IS the doc whose id equals the cluster label
     val repHash = docs.select(
       col(idCol).as("cluster_id"),

@@ -107,12 +107,6 @@ object LangId {
     )
   }
 
-  /** Score every document under EVERY language: one row per
-    * (document, language) — `(idCol, lang, n_grams, rarity_avg)`, lower
-    * rarity = more plausible under that language's char model. The
-    * audit/debug frame behind [[assign]] (margins between the top two
-    * languages are the standard langid confidence signal).
-    */
   /** The STATELESS half of scoring (the [[NgramLM.scoredGrams]] split,
     * for the streaming twin): one row per (char-trigram occurrence,
     * language) — `(idCol, lang, rarity)` after the broadcast model
@@ -124,14 +118,12 @@ object LangId {
       docs: DataFrame,
       model: Model,
       textCol: String = "text",
-      idCol: String = "doc_id",
-      broadcastModel: Boolean = true
+      idCol: String = "doc_id"
   ): DataFrame = {
-    def side(df: DataFrame): DataFrame = if (broadcastModel) broadcast(df) else df
     gramPairs(docs, textCol, idCol)
       .crossJoin(broadcast(model.vocab))
-      .join(side(model.grams), Seq("lang", "g"), "left")
-      .join(side(model.prefixes), Seq("lang", "p"), "left")
+      .join(broadcast(model.grams), Seq("lang", "g"), "left")
+      .join(broadcast(model.prefixes), Seq("lang", "p"), "left")
       .select(
         col(idCol),
         col("lang"),
@@ -139,14 +131,19 @@ object LangId {
       )
   }
 
+  /** Score every document under EVERY language: one row per
+    * (document, language) — `(idCol, lang, n_grams, rarity_avg)`, lower
+    * rarity = more plausible under that language's char model. The
+    * audit/debug frame behind [[assign]] (margins between the top two
+    * languages are the standard langid confidence signal).
+    */
   def scoreByLang(
       docs: DataFrame,
       model: Model,
       textCol: String = "text",
-      idCol: String = "doc_id",
-      broadcastModel: Boolean = true
+      idCol: String = "doc_id"
   ): DataFrame =
-    scoredPairs(docs, model, textCol, idCol, broadcastModel)
+    scoredPairs(docs, model, textCol, idCol)
       .groupBy(col(idCol), col("lang"))
       .agg(
         count(lit(1)).as("n_grams"),
@@ -165,10 +162,9 @@ object LangId {
       docs: DataFrame,
       model: Model,
       textCol: String = "text",
-      idCol: String = "doc_id",
-      broadcastModel: Boolean = true
+      idCol: String = "doc_id"
   ): DataFrame =
-    scoreByLang(docs, model, textCol, idCol, broadcastModel)
+    scoreByLang(docs, model, textCol, idCol)
       .groupBy(col(idCol))
       .agg(min(struct(col("rarity_avg"), col("lang"))).as("m"))
       .select(col(idCol), col("m.lang").as("lang_pred"), col("m.rarity_avg").as("rarity_avg"))
@@ -184,10 +180,9 @@ object LangId {
       model: Model,
       textCol: String = "text",
       idCol: String = "doc_id",
-      sourceCol: String = "source",
-      broadcastModel: Boolean = true
+      sourceCol: String = "source"
   ): DataFrame = {
-    val pred = assign(docs, model, textCol, idCol, broadcastModel)
+    val pred = assign(docs, model, textCol, idCol)
       .select(col(idCol), col("lang_pred"))
     Report.corpusCard(
       docs.drop("lang").join(pred, Seq(idCol)).withColumnRenamed("lang_pred", "lang"),

@@ -31,12 +31,10 @@ import graft.functions.TextFunctions
   * the exploded gram stream (map-side combine absorbs hot grams — "of
   * the" collapses to one partial per partition before the shuffle).
   * Scoring joins the corpus gram stream to the model on the gram hash;
-  * with `broadcastModel = true` (the default — a bigram model over a
-  * trusted reference is millions of rows, not billions) both lookups are
-  * broadcast hash joins and the corpus side never shuffles until the
-  * per-document aggregate, whose doc-id key is as well-distributed as
-  * the corpus itself. Set it false for a giant model and the joins fall
-  * back to shuffled equi-joins on the hash keys.
+  * both lookups are broadcast hash joins (a bigram model over a trusted
+  * reference is millions of rows, not billions), so the corpus side
+  * never shuffles until the per-document aggregate, whose doc-id key is
+  * as well-distributed as the corpus itself.
   *
   * Overflow headroom: the PER-GRAM product `(c_prefix + V) * 1e6` must
   * stay under 2^63 — fine to ~9e12 reference tokens (a ~36 TB text
@@ -130,13 +128,11 @@ object NgramLM {
       docs: DataFrame,
       model: Model,
       textCol: String = "text",
-      idCol: String = "doc_id",
-      broadcastModel: Boolean = true
+      idCol: String = "doc_id"
   ): DataFrame = {
-    def side(df: DataFrame): DataFrame = if (broadcastModel) broadcast(df) else df
     gramPairs(docs, textCol, idCol)
-      .join(side(model.grams), Seq("g"), "left")
-      .join(side(model.prefixes), Seq("p"), "left")
+      .join(broadcast(model.grams), Seq("g"), "left")
+      .join(broadcast(model.prefixes), Seq("p"), "left")
       .crossJoin(broadcast(model.vocab))
       .select(
         col(idCol),
@@ -154,10 +150,9 @@ object NgramLM {
       docs: DataFrame,
       model: Model,
       textCol: String = "text",
-      idCol: String = "doc_id",
-      broadcastModel: Boolean = true
+      idCol: String = "doc_id"
   ): DataFrame =
-    scoredGrams(docs, model, textCol, idCol, broadcastModel)
+    scoredGrams(docs, model, textCol, idCol)
       .groupBy(col(idCol))
       .agg(
         count(lit(1)).as("n_grams"),
@@ -203,11 +198,10 @@ object NgramLM {
       model: Model,
       sampleMod: Int = 4,
       textCol: String = "text",
-      idCol: String = "doc_id",
-      broadcastModel: Boolean = true
+      idCol: String = "doc_id"
   ): DataFrame = {
     require(sampleMod >= 1, s"need sampleMod >= 1, got $sampleMod")
-    val scored = score(docs, model, textCol, idCol, broadcastModel)
+    val scored = score(docs, model, textCol, idCol)
     val sample = scored.filter(
       graft.functions.GraftExpressions.poly_hash(col(idCol).cast("string")) % sampleMod === 0
     )
@@ -241,11 +235,10 @@ object NgramLM {
       model: Model,
       maxRarityAvg: Long,
       textCol: String = "text",
-      idCol: String = "doc_id",
-      broadcastModel: Boolean = true
+      idCol: String = "doc_id"
   ): DataFrame =
     docs.join(
-      score(docs, model, textCol, idCol, broadcastModel)
+      score(docs, model, textCol, idCol)
         .filter(col("rarity_avg") <= maxRarityAvg)
         .select(col(idCol)),
       Seq(idCol),

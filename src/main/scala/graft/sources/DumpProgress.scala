@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Per-batch dump progress — the reference's tqdm analog
@@ -17,27 +17,31 @@ import org.apache.spark.sql.SparkSession
   *
   * Scale shape: one atomic add per task completion on the driver's
   * listener bus — no executor-side work, no extra action, zero effect on
-  * the write path itself. The listener is SESSION-wide: it counts every
-  * task that wrote rows while attached, so attach it around exactly one
-  * dump at a time (the `DumpAll` usage — tables run sequentially);
-  * concurrent unrelated writes on the same session would tick into the
-  * same counter. Attach around an action with
-  * [[DumpProgress.withProgress]]; the listener is removed afterward even
-  * on failure, and the bus is drained before totals are read, so
-  * [[rowsWritten]] is deterministic the moment the block returns.
+  * the write path itself. The listener counts only the stages of jobs
+  * carrying its `jobTag`: [[DumpProgress.withProgress]] tags the jobs its
+  * calling thread starts, so writes other threads run on the same session
+  * (a query pool, a second dump) never tick into this dump's counter. The
+  * listener is removed afterward even on failure, and the bus is drained
+  * before totals are read, so [[rowsWritten]] is deterministic the moment
+  * the block returns.
   */
-final class DumpProgress(table: String, report: String => Unit)
+final class DumpProgress(table: String, jobTag: String, report: String => Unit)
     extends SparkListener {
   private val rows = new AtomicLong(0L)
   private val tasks = new AtomicLong(0L)
   private val counted =
     java.util.concurrent.ConcurrentHashMap.newKeySet[(Int, Int, Int)]()
+  private val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 
   /** Cumulative rows written by completed tasks (exact once drained). */
   def rowsWritten: Long = rows.get
 
   /** Completed tasks that wrote at least one row. */
   def writeTasksCompleted: Long = tasks.get
+
+  override def onJobStart(start: SparkListenerJobStart): Unit =
+    if (org.apache.spark.sql.classic.GraftBridge.jobTags(start.properties).contains(jobTag))
+      start.stageIds.foreach(stages.add)
 
   override def onTaskEnd(end: SparkListenerTaskEnd): Unit = {
     val m = end.taskMetrics
@@ -48,7 +52,7 @@ final class DumpProgress(table: String, report: String => Unit)
     // speculation an original and a speculative attempt can BOTH finish
     // with Success, so successes are deduped per
     // (stageId, stageAttemptId, task index) — first one counts.
-    if (end.reason == org.apache.spark.Success && m != null && m.outputMetrics != null) {
+    if (stages.contains(end.stageId) && end.reason == org.apache.spark.Success && m != null && m.outputMetrics != null) {
       val firstSuccess = end.taskInfo == null ||
         counted.add((end.stageId, end.stageAttemptId, end.taskInfo.index))
       val w = m.outputMetrics.recordsWritten
@@ -65,8 +69,10 @@ object DumpProgress {
 
   /** Run `f` (typically a dump action) with a progress listener attached;
     * returns `f`'s result plus the listener with its final totals. The
-    * async listener bus is drained before returning, so the totals are
-    * exact, and the listener is detached in all cases.
+    * jobs this thread (and any thread it starts inside `f`) runs carry a
+    * fresh job tag, and the listener counts only those. The async
+    * listener bus is drained before returning, so the totals are exact,
+    * and the listener and the tag are removed in all cases.
     */
   def withProgress[T](
       spark: SparkSession,
@@ -75,12 +81,18 @@ object DumpProgress {
       // (one JSON line), and a dump gate runs inside both harnesses
       report: String => Unit = s => Console.err.println(s)
   )(f: => T): (T, DumpProgress) = {
-    val listener = new DumpProgress(table, report)
-    spark.sparkContext.addSparkListener(listener)
+    val sc = spark.sparkContext
+    val tag = s"graft-dump-progress-${java.util.UUID.randomUUID()}"
+    val listener = new DumpProgress(table, tag, report)
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
     try {
       val result = f
-      org.apache.spark.sql.classic.GraftBridge.drainListenerBus(spark.sparkContext)
+      org.apache.spark.sql.classic.GraftBridge.drainListenerBus(sc)
       (result, listener)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
   }
 }

@@ -86,12 +86,10 @@ object ResumableDump {
       ShardedParquetSink.write(source.rangeScan(spark, keyCol, range), dir, layout)
     }
 
-    // read-back over every chunk dir (readBackReport lists one directory
-    // non-recursively, so walk the chunk dirs and concatenate)
-    val reports = chunkDirs(fs, root).map(d => ShardedParquetSink.readBackReport(spark, d.toString))
-    val schemas = reports.map(_.schemaDdl).distinct
-    require(schemas.size == 1, s"chunk schemas diverge: $schemas")
-    Result(DumpReport(schemas.head, reports.flatMap(_.shards)), ran.map(_._2), skipped.map(_._2))
+    // one footer walk over every chunk's shards; it refuses a chunk whose
+    // schema differs from the others by its shard path
+    val report = ShardedParquetSink.footerReport(spark, chunkDirs(fs, root).map(_.toString))
+    Result(report, ran.map(_._2), skipped.map(_._2))
   }
 
   /** The chunk plan: up to `chunks` contiguous ranges of equal key width

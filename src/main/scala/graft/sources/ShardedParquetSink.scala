@@ -147,14 +147,29 @@ object ShardedParquetSink {
       spark: SparkSession,
       outputDir: String,
       distributedThreshold: Int = DistributedReportThreshold
+  ): DumpReport = footerReport(spark, Seq(outputDir), distributedThreshold)
+
+  /** [[readBackReport]] over the shards of every directory in `dirs`, in
+    * (directory, shard index) order: one footer walk for a dump written
+    * to several directories (a resumable dump's chunks). Each directory
+    * must hold at least one shard, and `distributedThreshold` counts the
+    * shards of all of them.
+    */
+  private[sources] def footerReport(
+      spark: SparkSession,
+      dirs: Seq[String],
+      distributedThreshold: Int = DistributedReportThreshold
   ): DumpReport = {
     val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val files = listParquetFiles(hadoopConf, outputDir)
-    require(files.nonEmpty, s"read-back: no parquet shards in $outputDir")
+    val files = dirs.flatMap { dir =>
+      val shards = listParquetFiles(hadoopConf, dir)
+      require(shards.nonEmpty, s"read-back: no parquet shards in $dir")
+      shards
+    }
     // the session's SQL confs carry the schema converter's settings
     val sqlConfs = spark.conf.getAll
     // Footer reads are independent metadata IO — concurrent driver pool
-    // up to the threshold, executor job past it
+    // up to the threshold, executor job past it; both keep `files`' order
     val footers =
       if (files.size <= distributedThreshold) {
         val read = footerReader(hadoopConf, sqlConfs)
@@ -171,7 +186,8 @@ object ShardedParquetSink {
         // serializable; executors overlay the driver's entries on their
         // own defaults), fan the path list out ~1k paths per task, and
         // collect one tiny footer summary per shard — driver memory stays
-        // O(shards), the IO runs cluster-wide
+        // O(shards), the IO runs cluster-wide, and collect returns the
+        // partitions' slices of the list in order
         val entries = {
           val it = hadoopConf.iterator()
           val b = Seq.newBuilder[(String, String)]
@@ -189,10 +205,6 @@ object ShardedParquetSink {
           }
           .collect()
           .toSeq
-          .sortBy { f =>
-            val name = new Path(f.path).getName
-            (shardIndex(name), name) // same order listParquetFiles yields
-          }
       }
     val schema = footers.head.schema
     val other = footers.find(_.schema != schema)

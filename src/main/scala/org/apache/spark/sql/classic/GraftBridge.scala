@@ -19,4 +19,12 @@ object GraftBridge {
     */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** The tags `SparkContext.addJobTag` put on a job, read from the
+    * job's properties (the property key is private[spark]).
+    */
+  def jobTags(props: java.util.Properties): Set[String] =
+    Option(props)
+      .flatMap(p => Option(p.getProperty(org.apache.spark.SparkContext.SPARK_JOB_TAGS)))
+      .fold(Set.empty[String])(_.split(org.apache.spark.SparkContext.SPARK_JOB_TAGS_SEP).toSet)
 }

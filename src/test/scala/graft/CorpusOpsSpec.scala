@@ -459,12 +459,6 @@ class CorpusOpsSpec extends SparkSpec {
     assert(out.length === 1 && out.head.getString(1) === "alpha beta gamma delta epsilon zeta")
   }
 
-  test("decontaminate: shuffled-join fallback matches the broadcast path") {
-    val b = Decontaminate.overlapReport(corpus, benchmark, 4, broadcastIndex = true)
-    val s = Decontaminate.overlapReport(corpus, benchmark, 4, broadcastIndex = false)
-    assert(b.except(s).count() === 0L && s.except(b).count() === 0L)
-  }
-
   test("decontaminate: benchmark index broadcasts in the physical plan") {
     val p = Decontaminate
       .overlapReport(corpus, benchmark, 4)
@@ -1150,13 +1144,6 @@ class CorpusOpsSpec extends SparkSpec {
     val expected = scored.filter(col("rarity_avg") <= thr).select("doc_id")
     assert(kept.count() === expected.count())
     assert(kept.select("doc_id").except(expected).count() === 0L)
-  }
-
-  test("ngramLM: shuffled-join fallback matches the broadcast path") {
-    val model = operators.NgramLM.train(corpus)
-    val b = operators.NgramLM.score(benchmark, model, broadcastModel = true)
-    val s = operators.NgramLM.score(benchmark, model, broadcastModel = false)
-    assert(b.except(s).count() === 0L && s.except(b).count() === 0L)
   }
 
   test("ngramLM: model broadcasts — the corpus side never shuffles on gram") {
@@ -1883,9 +1870,6 @@ class CorpusOpsSpec extends SparkSpec {
     val a = LangId.assign(langHeldOut, model).collect().toSet
     val b = LangId.assign(langHeldOut.repartition(7), model).collect().toSet
     assert(a === b)
-    // broadcastModel=false plans shuffled joins but computes identically
-    val c = LangId.assign(langHeldOut, model, broadcastModel = false).collect().toSet
-    assert(c === a)
   }
 
   test("langId: deterministic tie-break, model bounds, derived-card composition, plan gate") {
@@ -1917,8 +1901,8 @@ class CorpusOpsSpec extends SparkSpec {
     val direct = Report.corpusCard(docs.join(pred, Seq("doc_id"))).collect().toSet
     val composed = LangId.corpusCardDerived(docs, model).collect().toSet
     assert(composed === direct)
-    // plan gate: with broadcastModel=true the candidate side never
-    // sort-merge-joins — model lookups broadcast
+    // plan gate: the candidate side never sort-merge-joins — model
+    // lookups broadcast
     val plan = LangId.assign(langHeldOut, model).queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"model lookups must broadcast:\n$plan")
     assert(!plan.contains("SortMergeJoin"), s"corpus must not shuffle for lookups:\n$plan")

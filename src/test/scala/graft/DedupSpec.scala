@@ -93,25 +93,26 @@ class DedupSpec extends SparkSpec {
     assert(got(7L) == 7L, "singleton keeps its own label")
   }
 
-  test("large-star/small-star == plain propagation; deep chains need it") {
+  test("deep chain: one min-id component in both regimes; 1 round fails") {
     // a 150-doc revision chain: doc i = tokens w_i..w_59+i, so docs within
     // 6 positions are near-dups — component diameter ~25 edge hops
     val chain = (0 until 150).map { i =>
       (i.toLong, (i until i + 60).map(j => s"w$j").mkString(" "))
     }.toDF("doc_id", "text")
-    val scalable = Dedup.clustersScalable(chain, 0.8, maxRounds = 15)
-      .as[(Long, Long)].collect().toMap
-    assert(scalable.values.forall(_ == 0L), "one component, labeled by min id 0")
-    // plain propagation agrees when given enough rounds...
-    val plain = Dedup.clusters(chain, 0.8, maxRounds = 64).as[(Long, Long)].collect().toMap
-    assert(plain == scalable)
-    // ...but FAILS LOUDLY (not silently wrong) when the diameter exceeds its budget
-    intercept[IllegalArgumentException] {
-      Dedup.clusters(chain, 0.8, maxRounds = 5).collect()
+    val driver = Dedup.clusters(chain, 0.8).as[(Long, Long)].collect().toMap
+    assert(driver.size == 150 && driver.values.forall(_ == 0L), "one component, labeled by min id 0")
+    withConf(DriverRegime.MaxRowsKey -> "0") {
+      val star = Dedup.clusters(chain, 0.8, maxRounds = 15).as[(Long, Long)].collect().toMap
+      assert(star == driver, "the star contraction gives the union-find's labels")
+      // one round cannot contract a chain this deep: FAIL LOUDLY, never
+      // emit a truncated (silently wrong) labelling
+      intercept[IllegalArgumentException] {
+        Dedup.clusters(chain, 0.8, maxRounds = 1).collect()
+      }
     }
-    // equivalence on the real fixture corpus too
-    val a = Dedup.clustersScalable(docs, 0.8).as[(Long, Long)].collect().toSet
-    val b = Dedup.clusters(docs, 0.8).as[(Long, Long)].collect().toSet
+    // both regimes agree on the real fixture corpus too
+    val a = Dedup.clusters(docs, 0.8).as[(Long, Long)].collect().toSet
+    val b = withConf(DriverRegime.MaxRowsKey -> "0")(Dedup.clusters(docs, 0.8).as[(Long, Long)].collect().toSet)
     assert(a == b)
   }
 
@@ -290,7 +291,7 @@ class DedupSpec extends SparkSpec {
     import org.apache.spark.sql.expressions.Window
     val best = Dedup.dedupNearBest(docs, 0.8)
     // independent oracle: clustering + window argmax (score DESC, doc_id ASC)
-    val cl = Dedup.clustersScalable(docs, 0.8)
+    val cl = Dedup.clusters(docs, 0.8)
     val scored = docs.select(col("doc_id"), TextFunctions.qualityScoreFused(col("text")).as("score"))
     val w = Window.partitionBy(col("cluster_id")).orderBy(col("score").desc, col("doc_id"))
     val expected = cl
@@ -464,7 +465,7 @@ class DedupSpec extends SparkSpec {
       assert(members.count(_._3) === 1, s"cluster $c keep count")
     }
     // cluster labels agree with the gated clustering path
-    val labels = Dedup.clustersScalable(crafted, 0.8)
+    val labels = Dedup.clusters(crafted, 0.8)
       .as[(Long, Long)].collect().toMap
     out.foreach { case (id, (c, _, _)) => assert(labels(id) === c) }
   }

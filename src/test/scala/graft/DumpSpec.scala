@@ -58,6 +58,40 @@ class DumpSpec extends SparkSpec {
     assert(lines.asScala.last.contains(f"${res.report.totalRows}%,d"))
   }
 
+  test("DumpProgress: a concurrent writer thread's rows do not tick into the dump's count") {
+    // the writer thread exists before withProgress, so it does not carry
+    // the dump's job tag; it writes once before the dump starts (while the
+    // listener is attached) and keeps writing until the dump returns
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val firstWrite = new java.util.concurrent.CountDownLatch(1)
+    @volatile var stop = false
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val writer = new Thread(() =>
+      try {
+        go.await()
+        while (!stop) {
+          spark.range(0L, 500L, 1L, 2).write.mode("overwrite").parquet(s"$testOut/dump_progress_other")
+          firstWrite.countDown()
+        }
+      } catch { case t: Throwable => failure.set(t); firstWrite.countDown() }
+    )
+    writer.start()
+    val (res, progress) =
+      try
+        graft.sources.DumpProgress.withProgress(spark, "omop_notes", _ => ()) {
+          go.countDown()
+          assert(firstWrite.await(120, java.util.concurrent.TimeUnit.SECONDS), "writer never wrote")
+          OmopDump.run(spark, src(), s"$testOut/dump_progress_own", None, ParquetLayout(maxRecordsPerFile = 11L))
+        }
+      finally {
+        stop = true
+        go.countDown()
+        writer.join()
+      }
+    assert(failure.get == null, s"writer failed: ${failure.get}")
+    assert(progress.rowsWritten === res.report.totalRows)
+  }
+
   test("DumpProgress: a killed attempt's rows are not counted — the retry counts once (ADVICE r15)") {
     // a speculative/preempted attempt reports the rows it wrote before
     // dying; counting it AND its retry would overcount vs totalRows.
@@ -65,7 +99,8 @@ class DumpSpec extends SparkSpec {
     // delivers (GraftTestBridge builds the private[spark] payloads).
     import org.apache.spark.GraftTestBridge
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val p = new graft.sources.DumpProgress("t", s => { lines.add(s); () })
+    val p = new graft.sources.DumpProgress("t", "t-dump", s => { lines.add(s); () })
+    p.onJobStart(GraftTestBridge.jobStart("t-dump"))
     p.onTaskEnd(GraftTestBridge.taskEnd(GraftTestBridge.success, 100L, index = 0))
     p.onTaskEnd(GraftTestBridge.taskEnd(GraftTestBridge.killed, 50L, index = 1)) // dies mid-write
     p.onTaskEnd(GraftTestBridge.taskEnd(GraftTestBridge.success, 50L, index = 1, attemptNumber = 1)) // its retry
@@ -80,7 +115,8 @@ class DumpSpec extends SparkSpec {
     // reason-filtering alone still double-counts; successes dedupe per
     // (stageId, stageAttemptId, task index)
     import org.apache.spark.GraftTestBridge
-    val p = new graft.sources.DumpProgress("t", _ => ())
+    val p = new graft.sources.DumpProgress("t", "t-dump", _ => ())
+    p.onJobStart(GraftTestBridge.jobStart("t-dump"))
     p.onTaskEnd(GraftTestBridge.taskEnd(GraftTestBridge.success, 100L, index = 0))
     p.onTaskEnd(GraftTestBridge.taskEnd(GraftTestBridge.success, 100L, index = 0,
       attemptNumber = 1, speculative = true)) // the speculative twin also succeeds
@@ -112,6 +148,30 @@ class DumpSpec extends SparkSpec {
     val again = ResumableDump.run(spark, src(), "doc_id", dir, 4, ParquetLayout(maxRecordsPerFile = 64L))
     assert(again.ranChunks.isEmpty && again.skippedChunks == (0 until 4))
     assert(again.report.totalRows == total)
+  }
+
+  test("resumable read-back: one report over every chunk == the per-chunk reports, concatenated in chunk order") {
+    val dir = s"$testOut/resume_readback"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    val res = ResumableDump.run(spark, src(), "doc_id", dir, 4, ParquetLayout(maxRecordsPerFile = 40L))
+    val perChunk = (0 until 4).map(i => graft.sources.ShardedParquetSink.readBackReport(spark, f"$dir/chunk_$i%05d"))
+    assert(perChunk.forall(_.numFiles > 1), "every chunk holds several shards, so shard order is pinned")
+    assert(res.report.schemaDdl == perChunk.head.schemaDdl)
+    assert(res.report.shards == perChunk.flatMap(_.shards))
+  }
+
+  test("resumable read-back: a chunk rewritten with a different schema is refused by name") {
+    import spark.implicits._
+    val dir = s"$testOut/resume_schema"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    ResumableDump.run(spark, src(), "doc_id", dir, 4, ParquetLayout())
+    // a committed rewrite (with _SUCCESS), so re-entry skips every chunk
+    Seq((1L, 2L)).toDF("doc_id", "other").write.mode("overwrite").parquet(s"$dir/chunk_00002")
+    val refused = intercept[IllegalArgumentException] {
+      ResumableDump.run(spark, src(), "doc_id", dir, 4, ParquetLayout())
+    }
+    assert(refused.getMessage.contains("disagree on the schema"), refused.getMessage)
+    assert(refused.getMessage.contains("chunk_00002"), refused.getMessage)
   }
 
   test("resume equals fresh: a crashed chunk (no _SUCCESS) and a missing chunk re-run; complete chunks skip") {

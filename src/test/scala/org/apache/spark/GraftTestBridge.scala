@@ -1,7 +1,7 @@
 package org.apache.spark
 
 import org.apache.spark.executor.TaskMetrics
-import org.apache.spark.scheduler.SparkListenerTaskEnd
+import org.apache.spark.scheduler.{SparkListenerJobStart, SparkListenerTaskEnd, StageInfo}
 
 /** Test-only shim inside `org.apache.spark` (the GraftBridge pattern):
   * builds the `private[spark]`-guarded listener events a retry/
@@ -24,6 +24,16 @@ object GraftTestBridge {
       index.toLong * 10 + attemptNumber, index, attemptNumber, index, 0L,
       "exec-1", "host-1", org.apache.spark.scheduler.TaskLocality.ANY, speculative)
     SparkListenerTaskEnd(0, 0, "ResultTask", reason, info, null, tm)
+  }
+
+  /** The start of a job tagged `tag` whose one stage is stage 0, the
+    * stage every [[taskEnd]] event belongs to.
+    */
+  def jobStart(tag: String): SparkListenerJobStart = {
+    val props = new java.util.Properties()
+    props.setProperty(SparkContext.SPARK_JOB_TAGS, tag)
+    val stage = new StageInfo(0, 0, "write", 2, Seq.empty, Seq.empty, "", TaskMetrics.empty, Seq.empty, None, 0, false, 0)
+    SparkListenerJobStart(0, 0L, Seq(stage), props)
   }
 
   def success: TaskEndReason = Success
