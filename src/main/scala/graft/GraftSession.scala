@@ -8,7 +8,9 @@ import org.apache.spark.sql.SparkSession
   * would set on a real cluster: AQE on (runtime re-planning, skew-join
   * splitting, partition coalescing), shuffle partitions sized to the
   * parallelism actually available instead of the 200 default, UTC session
-  * time zone so timestamp semantics match the DuckDB oracle bit-for-bit.
+  * time zone so timestamp semantics match the DuckDB oracle bit-for-bit,
+  * and a `file:` filesystem that sets permissions without starting a
+  * `chmod` process ([[graft.sources.PosixLocalFileSystem]]).
   */
 object GraftSession {
 
@@ -28,6 +30,7 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.PosixLocalFileSystem].getName)
       // bucketed writes go through saveAsTable; root the warehouse in
       // tmpdir so managed tables never land in the (possibly read-only /
       // non-repo) current working directory

@@ -103,8 +103,12 @@ object Decontaminate {
     *    shapes — the explode dropped it, the NULL predicate drops it from
     *    the filter), so the contaminated id set — and therefore the
     *    id-keyed anti join, duplicate ids included — is identical.
-    *  - distributed (index above the cap, or cap 0): the
-    *    [[overlapReport]] broadcast-join shape.
+    *  - distributed (index above the cap, or cap 0): the corpus's
+    *    `(id, gram)` rows semi-join the index in a SHUFFLED hash join
+    *    (`shuffle_hash` on the index side). An index too big to collect
+    *    is too big to broadcast too: [[overlapReport]]'s broadcast would
+    *    gather it on the driver all the same. Same id set: a document
+    *    has a row in the semi join iff it shares ≥ 1 gram.
     *
     * The regime probe runs at compose time.
     */
@@ -128,7 +132,10 @@ object Decontaminate {
           .filter(graft.functions.GraftExpressions.has_shared_gram(col(textCol), k, grams))
           .select(col(idCol))
       case None =>
-        overlapReport(corpus, benchmark, k, textCol, idCol).select(col(idCol))
+        corpus
+          .select(col(idCol), explode(TextFunctions.shingleHashes(col(textCol), k)).as("gh"))
+          .join(benchmarkIndex(benchmark, k, textCol).hint("shuffle_hash"), Seq("gh"), "left_semi")
+          .select(col(idCol))
     }
     corpus.join(contaminatedIds, Seq(idCol), "left_anti")
   }

@@ -88,9 +88,10 @@ object DumpAll {
       } catch {
         // NonFatal ONLY (VERDICT r13 №2): an OOM / LinkageError must kill
         // the run, not become a per-table "outcome" the strict check
-        // reports as retryable
+        // reports as retryable. An exception without a message is named
+        // by its class, never recorded as "null"
         case scala.util.control.NonFatal(e) =>
-          TableOutcome(spec.table, 0L, 0, 0, 0, Some(e.getMessage))
+          TableOutcome(spec.table, 0L, 0, 0, 0, Some(Option(e.getMessage).getOrElse(e.toString)))
       }
     }
     val failed = outcomes.filter(!_.ok)

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -170,6 +171,7 @@ object ShardedParquetSink {
     val sqlConfs = spark.conf.getAll
     // Footer reads are independent metadata IO — concurrent driver pool
     // up to the threshold, executor job past it; both keep `files`' order
+    // and both fail with the failing footer read's own exception
     val footers =
       if (files.size <= distributedThreshold) {
         val read = footerReader(hadoopConf, sqlConfs)
@@ -179,7 +181,10 @@ object ShardedParquetSink {
           val futures = files.map(p => pool.submit(new java.util.concurrent.Callable[ShardFooter] {
             def call(): ShardFooter = read(p)
           }))
-          futures.map(_.get())
+          futures.map { f =>
+            try f.get()
+            catch { case e: java.util.concurrent.ExecutionException if e.getCause != null => throw e.getCause }
+          }
         } finally pool.shutdown()
       } else {
         // ship the hadoop conf as its entry map (Configuration is not
@@ -195,16 +200,18 @@ object ShardedParquetSink {
           b.result()
         }
         val tasks = math.max(1, math.min(files.size / 1024 + 1, 10000))
-        spark.sparkContext
-          .parallelize(files.map(_.toString), tasks)
-          .mapPartitions { paths =>
-            val c = new Configuration()
-            entries.foreach { case (k, v) => c.set(k, v) }
-            val read = footerReader(c, sqlConfs)
-            paths.map(p => read(new Path(p)))
-          }
-          .collect()
-          .toSeq
+        try
+          spark.sparkContext
+            .parallelize(files.map(_.toString), tasks)
+            .mapPartitions { paths =>
+              val c = new Configuration()
+              entries.foreach { case (k, v) => c.set(k, v) }
+              val read = footerReader(c, sqlConfs)
+              paths.map(p => read(new Path(p)))
+            }
+            .collect()
+            .toSeq
+        catch { case e: org.apache.spark.SparkException if e.getCause != null => throw e.getCause }
       }
     val schema = footers.head.schema
     val other = footers.find(_.schema != schema)
@@ -221,13 +228,17 @@ object ShardedParquetSink {
 
   /** A footer reader: opens a shard's footer once for its row count and
     * nullable Spark schema, converted under the session's `sqlConfs`.
+    * The read options are built once from `conf`: `open` without them
+    * loads a default Hadoop `Configuration` per footer (a scan of the
+    * classpath for `core-site.xml`, about 10 ms a file).
     */
   private def footerReader(conf: Configuration, sqlConfs: Map[String, String]): Path => ShardFooter = {
     val sqlConf = new SQLConf
     sqlConfs.foreach { case (k, v) => sqlConf.setConfString(k, v) }
     val converter = new ParquetToSparkSchemaConverter(sqlConf)
+    val options = HadoopReadOptions.builder(conf).build()
     file => {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf), options)
       try {
         val footer = reader.getFooter
         ShardFooter(

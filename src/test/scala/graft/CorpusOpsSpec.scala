@@ -96,6 +96,16 @@ class CorpusOpsSpec extends SparkSpec {
     assert(kept.count() + contaminated.count() === corpus.count())
   }
 
+  test("decontaminate: over the cap, clean joins the grams shuffled — the index it did not collect is not broadcast") {
+    withConf(DriverRegime.MaxRowsKey -> "0") {
+      val kept = Decontaminate.clean(corpus, benchmark, 4)
+      kept.collect()
+      val p = kept.queryExecution.executedPlan.toString
+      assert("""BroadcastHashJoin \[gh#""".r.findFirstIn(p).isEmpty, s"gram index broadcast over the cap:\n$p")
+      assert("""ShuffledHashJoin \[gh#""".r.findFirstIn(p).isDefined, s"no shuffled gram join:\n$p")
+    }
+  }
+
   test("decontaminate: empty benchmark contaminates nothing") {
     val none = Decontaminate.overlapReport(corpus, benchmark.limit(0), 4)
     assert(none.count() === 0L)

@@ -306,6 +306,39 @@ class DumpSpec extends SparkSpec {
     }
   }
 
+  test("DumpAll: a failure without a message is named by its exception class, never 'null'") {
+    val root = s"$testOut/dumpall_nomsg"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    val mute = new NoteSource {
+      def scan(s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame =
+        throw new RuntimeException()
+      def countAtSource(s: org.apache.spark.sql.SparkSession): Long = 0L
+    }
+    val died = intercept[IllegalStateException] {
+      graft.sources.DumpAll.run(spark, Seq(graft.sources.DumpAll.TableSpec("mute", mute)), root)
+    }
+    assert(died.getMessage.contains("mute (java.lang.RuntimeException)"), died.getMessage)
+  }
+
+  test("read-back of a truncated shard fails with the footer read's own exception, naming it, on both branches") {
+    import graft.sources.ShardedParquetSink
+    val dir = s"$testOut/dump_truncated"
+    ShardedParquetSink.write(src().scan(spark).repartition(4), dir)
+    val shards = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    assert(shards.length === 4)
+    val bad = shards(1)
+    val raf = new java.io.RandomAccessFile(bad, "rw")
+    try raf.setLength(raf.length / 2)
+    finally raf.close()
+    val pooled = intercept[Exception](ShardedParquetSink.readBackReport(spark, dir))
+    val distributed = intercept[Exception](ShardedParquetSink.readBackReport(spark, dir, distributedThreshold = 0))
+    for (e <- Seq(pooled, distributed)) {
+      assert(!e.isInstanceOf[java.util.concurrent.ExecutionException] && !e.isInstanceOf[org.apache.spark.SparkException], e)
+      assert(e.getMessage.contains(bad.getName), e)
+    }
+    assert(pooled.getClass === distributed.getClass)
+  }
+
   test("DumpAll: a FATAL error propagates — never a per-table 'outcome' (VERDICT r13)") {
     val root = s"$testOut/dumpall_fatal"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
