@@ -49,15 +49,11 @@ object TextFunctions {
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  def distinctTokenCount(text: Column): Column = size(array_distinct(tokens(text)))
-
-  /** BPE-ish subword count: runs of letters, runs of digits, or a single
-    * other non-space character each count as one token. Same RE semantics in
+  /** BPE-ish subword pattern: runs of letters, runs of digits, or a single
+    * other non-space character each match as one token. Same RE semantics in
     * Java regex and DuckDB's RE2 for this class-only pattern.
     */
   val BpeRegex = "[a-z]+|[A-Z]+|[0-9]+|[^a-zA-Z0-9 ]"
-  def bpeTokenCount(text: Column): Column =
-    size(regexp_extract_all(text, lit(BpeRegex), lit(0)))
 
   val PunctRegex = "[.,!?;:]"
   def punctCount(text: Column): Column =
@@ -69,13 +65,6 @@ object TextFunctions {
   def stopwordRatio(text: Column): Column =
     stopwordHits(text, StopwordsEn).cast("double") /
       greatest(tokenCount(text), lit(1)).cast("double")
-
-  /** Mean token length in characters: non-space chars / token count, both
-    * exact integers before the one double division.
-    */
-  def avgTokenLength(text: Column): Column =
-    (length(text) - (tokenCount(text) - lit(1))).cast("double") /
-      tokenCount(text).cast("double")
 
   /** Quality score in [0,1]: length saturation + stopword signal − punctuation
     * penalty. The formula is the contract; weights are part of it.

@@ -33,9 +33,6 @@ object VectorFunctions {
     fold(prods) / (sqrt(fold(sqA)) * sqrt(fold(sqB)))
   }
 
-  def l2Norm(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")), lit(0.0), (s, x) => s + x))
-
   /** The deterministic hyperplane weight `w(p, j)` shared with the LSH
     * kernel ([[Kernels.planeWeight]] / `OracleFragments.planeWeight`) as
     * pure Column arithmetic: two multiplicative rounds with xor-shift

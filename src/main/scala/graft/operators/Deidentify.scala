@@ -417,8 +417,8 @@ object Deidentify {
   /** The geometric mechanism over an ALREADY-MAINTAINED census frame in
     * [[cellCounts]] shape (`__graft_q_<c>` quasi columns +
     * `__graft_cell_n`) — the streaming composition point: a census kept
-    * live by [[graft.streaming.StreamingOps.maintainCensus]] releases a
-    * DP histogram with `dpFromCounts(currentCensus(...), ...)`, and the
+    * live by [[graft.streaming.StreamingOps.Lsm.census]] releases a
+    * DP histogram with `dpFromCounts(census.current(...), ...)`, and the
     * result is bit-identical to [[dpCellCounts]] over everything ever
     * streamed (counts merge exactly, the draw is a pure function of
     * cell key + salt — no noise state to maintain, which is what makes
@@ -532,8 +532,8 @@ object Deidentify {
     * streaming tier can LSM-maintain it: the row-level clamp commutes
     * with batching and clipped sums ADD exactly across shards, so
     * per-batch cellSums frames merge-on-read into the census of
-    * everything streamed ([[graft.streaming.StreamingOps
-    * .maintainSumCensus]]), and [[dpSumsFromTotals]] over the merged
+    * everything streamed ([[graft.streaming.StreamingOps.Lsm
+    * .sumCensus]]), and [[dpSumsFromTotals]] over the merged
     * view is bit-identical to [[dpCellSums]] over the concatenation.
     */
   def cellSums(df: DataFrame, quasiCols: Seq[String], valueCol: String, clip: Long): DataFrame = {

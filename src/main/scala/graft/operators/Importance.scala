@@ -102,20 +102,14 @@ object Importance {
       )
   }
 
-  /** Score `docs` under `weights`: one row per document,
-    * `(idCol, n_toks, imp_avg)` — token count and mean bucket weight
-    * (`sum div count`; HIGHER = more target-like). All BIGINT; the sum
-    * runs in decimal(38,0) for the same reason [[NgramLM.score]]'s does
-    * (a long sum wraps silently at reference scale; DuckDB's promotes).
-    */
   /** The STATELESS half of [[score]]: one row per feature occurrence,
     * `(idCol, w)` — the occurrence's bucket weight after the broadcast
-    * lookup (unseen buckets score the neutral `Scale`). Split out so the
-    * streaming twin ([[graft.streaming.StreamingOps.scoreImportanceAgainst]])
-    * can run it as a pure projection: a `groupBy` on a stream would plan
-    * a StateStore aggregation, while a document's features arrive WITH
-    * the document, so the per-doc aggregate belongs in `foreachBatch`
-    * (where [[score]] on the batch frame computes exactly that).
+    * lookup (unseen buckets score the neutral `Scale`). Split out so a
+    * streaming frame can run it as it is, a pure projection: a `groupBy`
+    * on a stream would plan a StateStore aggregation, while a document's
+    * features arrive WITH the document, so the per-doc aggregate belongs
+    * in `foreachBatch` (where [[score]] on the batch frame computes
+    * exactly that).
     */
   def scoredFeatures(
       docs: DataFrame,
@@ -129,6 +123,12 @@ object Importance {
       .join(broadcast(weights), Seq("b"), "left")
       .select(col(idCol), coalesce(col("w"), lit(Scale)).as("w"))
 
+  /** Score `docs` under `weights`: one row per document,
+    * `(idCol, n_toks, imp_avg)` — token count and mean bucket weight
+    * (`sum div count`; HIGHER = more target-like). All BIGINT; the sum
+    * runs in decimal(38,0) for the same reason [[NgramLM.score]]'s does
+    * (a long sum wraps silently at reference scale; DuckDB's promotes).
+    */
   def score(
       docs: DataFrame,
       weights: DataFrame,

@@ -120,7 +120,7 @@ object NgramLM {
     * `docs`, `(idCol, rarity, unseen)` — the model lookups and the
     * integer rarity arithmetic, no aggregation. This is the frame a
     * STREAMING scorer can build (explode + broadcast joins plan with no
-    * streaming state — see `StreamingOps.scoreRarityAgainst`); the
+    * streaming state, so it applies to a stream frame as it is); the
     * per-document aggregate then runs in batch land (`foreachBatch`),
     * where it is exact.
     */

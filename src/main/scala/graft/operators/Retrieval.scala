@@ -63,8 +63,8 @@ object Retrieval {
   /** Per-(doc, term) integer BM25 term scores against a (broadcast)
     * [[bm25Model]] frame — `(doc_id, tok, term_score)`. STATELESS except
     * for the per-doc tf aggregate, which groups only on (doc, query-term)
-    * keys that arrive together; the streaming twin
-    * ([[graft.streaming.StreamingOps]]) therefore computes tf per
+    * keys that arrive together; a streaming consumer therefore runs
+    * [[matchedTerms]] on the stream frame and computes tf per
     * document inside `foreachBatch` (micro-batch-exact, since a doc's
     * tokens arrive with the doc) and shares THIS arithmetic.
     */
@@ -84,7 +84,7 @@ object Retrieval {
   /** The STATELESS front half of [[termScores]]: explode tokens, keep
     * query-term hits, attach the broadcast model row — one projection,
     * no aggregate, which is what a streaming plan can run without a
-    * StateStore ([[graft.streaming.StreamingOps.scoreBm25Against]]).
+    * StateStore (applied to the stream frame as it is).
     */
   def matchedTerms(docs: DataFrame, model: DataFrame, textCol: String): DataFrame = {
     val toks = TextFunctions.tokens(col(textCol))

@@ -655,7 +655,7 @@ object Similarity {
     * form: both sides' bucket rows are final at compute time
     * (data-independent hyperplanes), so a pipeline that maintains its
     * LSH artifacts (ingest-time [[lshIndex]] writes, or streaming
-    * [[graft.streaming.StreamingOps.maintainLshIndex]] appends) joins
+    * [[graft.streaming.StreamingOps.Lsm.lsh]] appends) joins
     * them directly with zero signature computation — the q125/q129
     * artifact discipline applied to the corpus×corpus join. Identical
     * to [[annJoin]] over the source frames (spec-pinned: the in-plan

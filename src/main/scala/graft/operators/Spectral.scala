@@ -91,7 +91,7 @@ object Spectral {
     * merged sums). [[mergeMoments]] + [[secondMomentFromSketch]] ==
     * [[secondMoment]] of the concatenated corpus, bit for bit
     * (spec-pinned); the streaming face is
-    * [[graft.streaming.StreamingOps.maintainMoments]].
+    * [[graft.streaming.StreamingOps.Lsm.moments]].
     */
   def momentSketch(emb: DataFrame): DataFrame = {
     // the d² products are ROW-LOCAL on the array — no self-join, no

@@ -30,10 +30,7 @@ object Layouts {
     df.write
       .mode("overwrite")
       .partitionBy(partitionCols: _*)
-      .option("maxRecordsPerFile", layout.maxRecordsPerFile)
-      .option("parquet.block.size", layout.rowGroupBytes)
-      .option("parquet.page.size", layout.pageBytes)
-      .option("compression", layout.codec)
+      .options(layout.writerOptions)
       .parquet(dir)
 
   /** Bucketed + sorted table write (bucketing lives in the catalog, so

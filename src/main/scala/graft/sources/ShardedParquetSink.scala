@@ -36,7 +36,16 @@ final case class ParquetLayout(
     rowGroupBytes: Long = 128L * 1024 * 1024,
     pageBytes: Long = 1048576L, // 2^20, dump_table.py:189
     codec: String = "snappy"
-)
+) {
+
+  /** The four writer options every layout-driven parquet write sets. */
+  def writerOptions: Map[String, String] = Map(
+    "maxRecordsPerFile" -> maxRecordsPerFile.toString,
+    "parquet.block.size" -> rowGroupBytes.toString,
+    "parquet.page.size" -> pageBytes.toString,
+    "compression" -> codec
+  )
+}
 
 object ParquetLayout {
 
@@ -90,10 +99,7 @@ object ShardedParquetSink {
   def write(df: DataFrame, outputDir: String, layout: ParquetLayout = ParquetLayout()): Unit =
     df.write
       .mode("overwrite")
-      .option("maxRecordsPerFile", layout.maxRecordsPerFile)
-      .option("parquet.block.size", layout.rowGroupBytes)
-      .option("parquet.page.size", layout.pageBytes)
-      .option("compression", layout.codec)
+      .options(layout.writerOptions)
       .parquet(outputDir)
 
   /** [[write]] plus the reference's EXACT shard naming

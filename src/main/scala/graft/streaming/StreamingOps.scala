@@ -1,7 +1,8 @@
 package graft.streaming
 
+import graft.operators.{Deidentify, Retrieval, Similarity, Sketch, Spectral}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import java.time.Instant
 
@@ -15,6 +16,15 @@ import java.time.Instant
   * Design for scale: state is keyed (user_id / window), so it partitions
   * across executors; the watermark bounds state size — without it an
   * unbounded-lateness stream would accumulate state forever.
+  *
+  * The batch scorers whose stream side is a per-row projection plus a
+  * broadcast lookup (`NgramLM.scoredGrams`, `Importance.scoredFeatures`,
+  * `Retrieval.matchedTerms`, `Classifier.scoredFeatures`,
+  * `LangId.scoredPairs`) run on a streaming frame as they are and stay
+  * stateless; their per-doc aggregate belongs in `foreachBatch`, where the
+  * batch `score` is micro-batch-exact (a document's rows arrive with the
+  * document). Artifacts that grow with the stream are maintained as
+  * [[Lsm]]s.
   */
 object StreamingOps {
 
@@ -114,20 +124,6 @@ object StreamingOps {
       }
   }
 
-  /** Streaming exact dedup: drop rows whose `keyCols` were already seen,
-    * with state bounded by the watermark (`dropDuplicatesWithinWatermark`
-    * evicts keys once no duplicate can still arrive). The streaming face of
-    * [[graft.operators.Dedup.exact]] for at-least-once ingest pipelines,
-    * where replayed batches re-deliver documents.
-    */
-  def dedupStream(
-      rows: DataFrame,
-      tsCol: String,
-      watermark: String,
-      keyCols: Seq[String]
-  ): DataFrame =
-    rows.withWatermark(tsCol, watermark).dropDuplicatesWithinWatermark(keyCols)
-
   /** Streaming NEAR-dedup within the stream itself: drops any arriving
     * document whose 32-bit SimHash fingerprint was already admitted inside
     * the watermark. SimHash collision is a locality-sensitive near-dup
@@ -153,14 +149,6 @@ object StreamingOps {
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(Seq("fp"))
       .drop("fp")
-
-  /** Stream-static enrichment: each micro-batch broadcast-joins a static
-    * dimension frame — no state, no stream-stream alignment; the static
-    * side is re-broadcast per batch. The standard shape for decorating an
-    * event stream with slowly-changing reference data.
-    */
-  def enrich(stream: DataFrame, dim: DataFrame, key: String): DataFrame =
-    stream.join(broadcast(dim), Seq(key), "left")
 
   /** Streaming near-duplicate detection against a STATIC reference corpus —
     * the in-flight ingest filter of an LLM data pipeline: each arriving
@@ -294,78 +282,6 @@ object StreamingOps {
       .select(col("doc_id"), col("gh"))
   }
 
-  /** Streaming LM-RARITY scoring — [[graft.operators.NgramLM.score]]
-    * applied to in-flight documents against a model trained once on a
-    * static reference ([[graft.operators.NgramLM.train]]): the crawl-time
-    * fluency gate, scoring each arriving page before it lands.
-    *
-    * Same discipline as [[decontaminateAgainst]]: the model's count
-    * tables are static frames (train once with `NgramLM.train`, persist
-    * with `NgramLM.persistModel` — the CALLER owns that lifecycle and
-    * releases with `releaseModel`, so a service scoring against many
-    * references does not leak one cached model per reference) and the
-    * stream side is ONE stateless projection — explode the gram pairs,
-    * broadcast-join the lookups — returning `(doc_id, rarity, unseen)`
-    * per gram occurrence with NO streaming state. A groupBy here would
-    * plan a StateStore aggregation (and never emit in append mode);
-    * instead the per-doc aggregate belongs in `foreachBatch`, where it
-    * is micro-batch-exact because a document's grams arrive with the
-    * document:
-    * {{{
-    *   .foreachBatch { (b, _) =>
-    *     b.groupBy("doc_id").agg(count("*"), sum("unseen"), sum("rarity"))...
-    *   }
-    * }}}
-    * (`NgramLM.score` on the batch frame computes exactly that.)
-    */
-  def scoreRarityAgainst(
-      model: graft.operators.NgramLM.Model,
-      stream: DataFrame
-  ): DataFrame =
-    graft.operators.NgramLM.scoredGrams(stream, model)
-
-  /** Streaming DSIR importance scoring — the in-flight form of the
-    * mixing pipeline's selection signal: each arriving page's hashed
-    * n-gram features looked up against a STATIC weight table (train once
-    * with `Importance.train` off a batch corpus; at most `numBuckets`
-    * rows, always broadcast — the CALLER owns its lifecycle, same
-    * discipline as [[scoreRarityAgainst]]'s model tables).
-    *
-    * The stream side is ONE stateless projection — explode the feature
-    * buckets, broadcast-join the weights — returning `(doc_id, w)` per
-    * feature occurrence with NO streaming state. A groupBy here would
-    * plan a StateStore aggregation (and never emit in append mode);
-    * the per-doc mean belongs in `foreachBatch`, where it is
-    * micro-batch-exact because a document's features arrive with the
-    * document (`Importance.score` on the batch frame computes exactly
-    * that; `filterImportant` is the admission form).
-    */
-  def scoreImportanceAgainst(
-      weights: DataFrame,
-      stream: DataFrame,
-      numBuckets: Int = graft.operators.Importance.DefaultBuckets,
-      k: Int = 1
-  ): DataFrame =
-    graft.operators.Importance.scoredFeatures(stream, weights, numBuckets, k)
-
-  /** Streaming BM25 scoring — in-flight relevance against a STATIC query
-    * model ([[graft.operators.Retrieval.bm25Model]], trained once off the
-    * batch corpus; <= |Q| rows, always broadcast). The stream side is the
-    * STATELESS front half only — explode tokens, keep query-term hits,
-    * attach the model row — because tf and the per-doc score sum are
-    * aggregates: on the stream they would plan a StateStore and never
-    * emit in append mode, while in `foreachBatch` they are
-    * micro-batch-exact (a document's tokens arrive with the document —
-    * run `Retrieval.bm25ScoreAgainst` on the batch frame; the
-    * StreamingSpec law pins streaming == batch through that path).
-    */
-  def scoreBm25Against(
-      model: DataFrame,
-      stream: DataFrame,
-      textCol: String = "text"
-  ): DataFrame =
-    graft.operators.Retrieval.matchedTerms(stream, model, textCol)
-
   /** Streaming MEMORIZATION profiling — the in-flight form of q154:
     * each arriving document's positional k-gram hits against the STATIC
     * broadcast benchmark index
@@ -395,43 +311,6 @@ object StreamingOps {
       )
       .join(broadcast(benchmarkIdx), Seq("gh"))
       .select(col(idCol), col("i"))
-
-  /** Streaming LEARNED-quality scoring — the in-flight form of the
-    * q150 classifier: each arriving page's hashed features looked up
-    * against the STATIC trained weight table
-    * ([[graft.operators.Classifier.train]] off labeled batch slices;
-    * exactly `numBuckets` rows, always broadcast, caller-owned
-    * lifecycle). The stream side is the stateless
-    * [[graft.operators.Classifier.scoredFeatures]] projection —
-    * `(doc_id, w)` per feature occurrence, zero streaming state; the
-    * per-doc mean (and any keep decision) belongs in `foreachBatch`,
-    * where `Classifier.score` on the batch frame is micro-batch-exact
-    * (a document's features arrive with the document).
-    */
-  def scoreQualityAgainst(
-      model: DataFrame,
-      stream: DataFrame,
-      numBuckets: Int = graft.operators.Importance.DefaultBuckets,
-      k: Int = 1
-  ): DataFrame =
-    graft.operators.Classifier.scoredFeatures(stream, model, numBuckets, k)
-
-  /** Streaming LANGUAGE identification — the in-flight form of q148:
-    * each arriving document's char-trigram stream scored against every
-    * language of the STATIC trained profile
-    * ([[graft.operators.LangId.train]] off a labeled batch slice;
-    * alphabet-bounded, always broadcast). The stream side is the
-    * stateless [[graft.operators.LangId.scoredPairs]] projection —
-    * `(doc_id, lang, rarity)` per (occurrence, language), zero
-    * streaming state; the per-(doc, lang) mean and the argmin belong in
-    * `foreachBatch`, where `LangId.assign` on the batch frame is
-    * micro-batch-exact.
-    */
-  def assignLangAgainst(
-      model: graft.operators.LangId.Model,
-      stream: DataFrame
-  ): DataFrame =
-    graft.operators.LangId.scoredPairs(stream, model)
 
   /** Streaming SEMANTIC decontamination — the stateless twin of
     * [[graft.operators.Decontaminate.semanticOverlap]]: a vector
@@ -544,16 +423,13 @@ object StreamingOps {
       dir: String,
       checkpointDir: String,
       layout: graft.sources.ParquetLayout = graft.sources.ParquetLayout()
-  ): org.apache.spark.sql.streaming.StreamingQuery =
+  ): StreamingQuery =
     stream.writeStream
       .format("parquet")
       .option("path", dir)
       .option("checkpointLocation", checkpointDir)
-      .option("maxRecordsPerFile", layout.maxRecordsPerFile)
-      .option("parquet.block.size", layout.rowGroupBytes)
-      .option("parquet.page.size", layout.pageBytes)
-      .option("compression", layout.codec)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .options(layout.writerOptions)
+      .trigger(Trigger.AvailableNow())
       .start()
 
   /** Composed streaming INGEST ADMISSION — the streaming twin of
@@ -589,7 +465,7 @@ object StreamingOps {
       minQuality: Double = 0.4275,
       threshold: Double = 0.8,
       layout: graft.sources.ParquetLayout = graft.sources.ParquetLayout()
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
+  ): StreamingQuery = {
     import graft.functions.TextFunctions
     import graft.operators.Dedup
     val gated = stream
@@ -611,10 +487,7 @@ object StreamingOps {
             .dedupAgainst(exact, corpus, threshold)
             .write
             .mode("append")
-            .option("maxRecordsPerFile", layout.maxRecordsPerFile)
-            .option("parquet.block.size", layout.rowGroupBytes)
-            .option("parquet.page.size", layout.pageBytes)
-            .option("compression", layout.codec)
+            .options(layout.writerOptions)
             .parquet(dir)
         finally {
           // dedupAgainst persisted a signature frame for THIS batch's
@@ -628,200 +501,163 @@ object StreamingOps {
         ()
       }
       .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
   }
 
-  /** STREAMING INDEX MAINTENANCE — the always-on face of
-    * [[graft.operators.Retrieval.mergeIndexes]] (the batch daily-crawl
-    * path): each micro-batch is tokenized ONCE into its partial inverted
-    * index, merged with the persisted artifact through the same
-    * posting-row re-aggregation, and the result becomes the new
-    * artifact. The law gated in StreamingSpec: after the stream drains,
-    * the persisted index == rebuilding from every document ever
-    * streamed, EXACTLY — the base corpus is never re-tokenized, so each
-    * batch costs its own tokens plus a posting-row merge.
+  /** A MAINTAINED ARTIFACT over a stream, in the append-only LSM shape:
+    * each micro-batch writes ONLY its own `part=<batchId>`, built from
+    * the batch by `part` (O(batch) work; a retry overwrites the same
+    * directory with identical content, so at-least-once replay is
+    * idempotent), and readers merge on read through `fold`. Every family
+    * below folds EXACTLY — postings re-aggregate, counts and sums add,
+    * bucket rows union — so [[current]] equals the family's one-pass
+    * batch build over everything ever streamed, and [[compact]] folds the
+    * parts into one without changing it (both spec-pinned per family):
+    * read cost stays bounded by the parts-since-last-compaction count
+    * while write cost stays O(batch).
     *
-    * Artifact layout: generation directories `gen=<batchId>` under
-    * `indexDir` — read the latest PRIOR generation, write the merged
-    * index as this batch's generation, then retire everything older
-    * than the base just read. The base survives until its successor is
-    * fully written, so a crash between write and checkpoint replays the
-    * batch against the SAME base and overwrites the same generation
-    * with identical content (deterministic merge ⇒ idempotent retry;
-    * the `< batchId` filter keeps a retry from reading its own partial
-    * output). Readers pick `max(gen=)` — always a complete directory.
+    * `fold` takes an EXPLICIT part-path set, so the live view and the
+    * compaction fold share one implementation — compacting can never
+    * produce a frame the view would not have served.
     *
-    * Contract mirror of the batch operator: admission upstream must
-    * keep the same text from being indexed twice ([[admitIngest]]);
-    * text SPLIT across batches merges correctly (tf sums, df exact).
-    *
-    * COST SHAPE: each batch rewrites the merged base — O(corpus-so-far)
-    * per batch. Right when the index is small and read constantly
-    * (queries pay zero merge); past the point where the base dwarfs
-    * the deltas, use [[maintainIndexPartials]] (O(delta) writes,
-    * merge-on-read, explicit [[compactIndex]]) — the LSM trade, both
-    * ends law-gated equal to the full rebuild.
+    * Contract mirror of the batch operators: admission upstream must
+    * keep the same document from being streamed twice ([[admitIngest]]);
+    * a document's text SPLIT across batches still merges exactly (tf and
+    * dl sum, df stays exact).
     */
-  def maintainIndex(
-      stream: DataFrame,
-      indexDir: String,
-      checkpointDir: String,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        advanceGeneration(indexDir, batchId, batch.sparkSession) { base =>
-          val delta = graft.operators.Retrieval.invertedIndex(batch, textCol, idCol)
-          base.fold(delta)(b => graft.operators.Retrieval.mergeIndexes(b, delta))
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+  final case class Lsm(
+      kind: String,
+      part: DataFrame => DataFrame,
+      fold: (SparkSession, Seq[String]) => DataFrame
+  ) {
 
-  /** [[maintainIndex]] PLUS the norms table — the complete streaming
-    * retrieval deployment: each micro-batch advances BOTH artifacts
-    * ([[graft.operators.Retrieval.invertedIndex]] postings and
-    * [[graft.operators.Retrieval.docLengths]], dl summing per doc like
-    * tf does), so [[graft.operators.Retrieval.bm25TopKIndexed]] against
-    * the current generations == [[graft.operators.Retrieval.bm25TopK]]
-    * over every document ever streamed, EXACTLY (the law StreamingSpec
-    * pins). Ranked retrieval over a live crawl costs each batch its own
-    * tokens; queries never touch corpus text.
-    */
-  def maintainRetrieval(
-      stream: DataFrame,
-      indexDir: String,
-      normsDir: String,
-      checkpointDir: String,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        advanceGeneration(indexDir, batchId, sp) { base =>
-          val delta = graft.operators.Retrieval.invertedIndex(batch, textCol, idCol)
-          base.fold(delta)(b => graft.operators.Retrieval.mergeIndexes(b, delta))
-        }
-        advanceGeneration(normsDir, batchId, sp) { base =>
-          val delta = graft.operators.Retrieval.docLengths(batch, textCol, idCol)
-          base.fold(delta)(
-            _.unionByName(delta).groupBy(col("doc_id")).agg(sum(col("dl")).as("dl"))
-          )
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    /** [[Lsm.maintainAll]] with this artifact as the only target. */
+    def maintain(
+        stream: DataFrame,
+        dir: String,
+        checkpointDir: String,
+        autoCompactEvery: Int = 0,
+        trigger: Trigger = Trigger.AvailableNow()
+    ): StreamingQuery =
+      Lsm.maintainAll(stream, checkpointDir, Seq(this -> dir), autoCompactEvery, trigger)
 
-  /** One generation step of a [[maintainIndex]]-style artifact: read the
-    * latest PRIOR generation (strictly `< batchId` — a retry must never
-    * read its own partial output), build the successor from it, write it
-    * as `gen=<batchId>`, then retire everything older than the base just
-    * consumed (the base survives until its successor is durable, so a
-    * replayed batch re-merges against the SAME base and idempotently
-    * overwrites the same generation).
-    */
-  private def advanceGeneration(dir: String, batchId: Long, sp: SparkSession)(
-      make: Option[DataFrame] => DataFrame
-  ): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(sp.sparkContext.hadoopConfiguration)
-    val prior =
-      if (fs.exists(root))
-        fs.listStatus(root)
-          .map(_.getPath.getName)
-          .collect { case s if s.startsWith("gen=") => s.stripPrefix("gen=").toLong }
-          .filter(_ < batchId)
-      else Array.empty[Long]
-    val base = if (prior.isEmpty) None else Some(sp.read.parquet(s"$dir/gen=${prior.max}"))
-    make(base).write.mode("overwrite").parquet(s"$dir/gen=$batchId")
-    prior.filter(_ < prior.maxOption.getOrElse(Long.MinValue)).foreach { g =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/gen=$g"), true)
-      ()
+    /** The merge-on-read view: ONE multi-path scan over the live parts,
+      * folded once — a single FileScan node at any part count, where a
+      * per-part union tree grows the plan linearly in the batch count.
+      * "Live" honors an in-flight compaction's marker
+      * ([[livePartPaths]]), so the view is complete at every crash point
+      * of [[compact]].
+      */
+    def current(spark: SparkSession, dir: String): DataFrame = {
+      val paths = livePartPaths(spark, dir)
+      require(paths.nonEmpty, s"no $kind parts under $dir")
+      fold(spark, paths)
     }
+
+    /** Fold every part into one through [[compactLsm]]'s crash-safe
+      * protocol. Run it QUIESCED — with the maintaining stream stopped —
+      * like every compaction ([[graft.sources.Layouts.compact]] included).
+      */
+    def compact(spark: SparkSession, dir: String): Unit = compactLsm(spark, dir, fold)
   }
 
-  /** APPEND-ONLY index maintenance — the LSM shape, and the one that
-    * holds on a GROWING corpus: each micro-batch writes ONLY its own
-    * partial index as `part=<batchId>` (O(batch) work per batch; a
-    * retry overwrites the same directory with identical content, so
-    * at-least-once replay is idempotent) and queries merge-on-read via
-    * [[currentIndexMerged]]. Contrast [[maintainIndex]], which folds
-    * every batch into one merged base — O(corpus-so-far) REWRITTEN per
-    * batch: right for a small hot index read constantly (reads pay
-    * nothing), wrong past the point where the base dwarfs the deltas.
-    * The crossover is the classic LSM trade, and [[compactIndex]] is
-    * the knob between them: an explicit maintenance pass (run it
-    * quiesced — the single-maintainer contract of every compaction,
-    * [[graft.sources.Layouts.compact]] included) folding accumulated
-    * partials into one, so read cost stays bounded by the parts-since-
-    * last-compaction count while write cost stays O(delta).
-    */
-  def maintainIndexPartials(
-      stream: DataFrame,
-      indexDir: String,
-      checkpointDir: String,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      autoCompactEvery: Int = 0,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        maybeAutoCompact(sp, indexDir, autoCompactEvery, batchId, indexFold)
-        writeLsmPart(
-          graft.operators.Retrieval.invertedIndex(batch, textCol, idCol),
-          indexDir, batchId, lineageOf(sp, checkpointDir))
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+  object Lsm {
 
-  /** The merged view of a [[maintainIndexPartials]] artifact: all
-    * LIVE partials re-aggregated through the q115 merge — == rebuilding
-    * from every document ever streamed (spec-pinned). Read cost grows
-    * with the partial count; [[compactIndex]] resets it. "Live" honors
-    * an in-flight compaction's marker, so the view is complete at EVERY
-    * crash point of [[compactIndex]].
-    */
-  def currentIndexMerged(spark: SparkSession, indexDir: String): DataFrame = {
-    // one multi-path scan feeds the q115 merge (r16): the per-part
-    // explode projections used to union-tree k scan nodes before the
-    // re-aggregate, growing the plan linearly in the part count; the
-    // merge algebra is row-set equal on the concatenated frame, so a
-    // single scan + ONE explode + the same groupBy is the identical
-    // index with an O(1) plan
-    val paths = livePartPaths(spark, indexDir)
-    require(paths.nonEmpty, s"no index partials under $indexDir")
-    graft.operators.Retrieval.mergeIndexes(spark.read.parquet(paths: _*))
+    /** ONE streaming query and ONE checkpoint feeding several artifacts:
+      * each micro-batch runs every target's auto-compaction hook
+      * ([[maybeAutoCompact]], when `autoCompactEvery > 0`), then writes
+      * the target's part through [[writeLsmPart]]'s guards. The targets
+      * share the checkpoint's lineage and batch ids, so a replayed batch
+      * rewrites all of its parts together.
+      */
+    def maintainAll(
+        stream: DataFrame,
+        checkpointDir: String,
+        targets: Seq[(Lsm, String)],
+        autoCompactEvery: Int = 0,
+        trigger: Trigger = Trigger.AvailableNow()
+    ): StreamingQuery =
+      stream.writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val sp = batch.sparkSession
+          val lineage = lineageOf(sp, checkpointDir)
+          targets.foreach { case (lsm, dir) =>
+            maybeAutoCompact(sp, dir, autoCompactEvery, batchId, lsm.fold)
+            writeLsmPart(lsm.part(batch), dir, batchId, lineage)
+          }
+        }
+        .option("checkpointLocation", checkpointDir)
+        .trigger(trigger)
+        .start()
+
+    /** A fold that is one multi-path scan plus the family's merge. */
+    private def scan(merge: DataFrame => DataFrame)(spark: SparkSession, paths: Seq[String]): DataFrame =
+      merge(spark.read.parquet(paths: _*))
+
+    /** The inverted index ([[Retrieval.invertedIndex]]): partials merge
+      * through the q115 posting re-aggregation.
+      */
+    def index(textCol: String = "text", idCol: String = "doc_id"): Lsm =
+      Lsm("index", Retrieval.invertedIndex(_, textCol, idCol), scan(Retrieval.mergeIndexes(_)))
+
+    /** The BM25 norms table ([[Retrieval.docLengths]]): dl sums per doc
+      * like tf does. Maintained with [[index]] by one query
+      * ([[maintainAll]]), `bm25TopKIndexed` over the two views ==
+      * `bm25TopK` over every document ever streamed — ranked retrieval
+      * over a live crawl whose queries never touch corpus text.
+      */
+    def norms(textCol: String = "text", idCol: String = "doc_id"): Lsm =
+      Lsm("norms", Retrieval.docLengths(_, textCol, idCol),
+        scan(_.groupBy(col("doc_id")).agg(sum(col("dl")).as("dl"))))
+
+    /** The ANN bucket index ([[Similarity.lshIndex]]): the hyperplanes are
+      * data-independent, so a vector's bucket rows are final when computed
+      * and the union of parts IS the index.
+      */
+    val lsh: Lsm = Lsm("LSH index", Similarity.lshIndex, scan(identity))
+
+    /** A count-min sketch ([[Sketch.cmsSketch]]): counter grids add. */
+    def cms(keyCol: String, depth: Int = 4, width: Int = 1024): Lsm =
+      Lsm("CMS", Sketch.cmsSketch(_, keyCol, depth, width), scan(Sketch.cmsMerge(_)))
+
+    /** The k-anonymity release census ([[Deidentify.cellCounts]]): cell
+      * counts add, so a live de-identified feed judges arrivals with
+      * `suppressAgainstCounts` against the census-so-far with no stateful
+      * streaming aggregation (that state would be cell-cardinality-sized
+      * and unbounded).
+      */
+    def census(quasiCols: Seq[String]): Lsm = {
+      require(quasiCols.nonEmpty, "need at least one quasi-identifier column")
+      Lsm("census", Deidentify.cellCounts(_, quasiCols), censusFold("__graft_cell_n", "census"))
+    }
+
+    /** The clipped-sum census ([[Deidentify.cellSums]]): the clamp is
+      * per-row and clipped sums add, so `dpSumsFromTotals` over the view
+      * == `dpCellSums` of everything streamed.
+      */
+    def sumCensus(quasiCols: Seq[String], valueCol: String, clip: Long): Lsm = {
+      require(quasiCols.nonEmpty, "need at least one quasi-identifier column")
+      Lsm("sum census", Deidentify.cellSums(_, quasiCols, valueCol, clip),
+        censusFold("__graft_cell_s", "sum census"))
+    }
+
+    /** The spectral moment sketch ([[Spectral.momentSketch]]): centering
+      * does not commute with micro-batching, so parts hold RAW moment
+      * sums, which add; `secondMomentFromSketch` centers once, globally,
+      * and the streamed principal component equals the batch one bit for
+      * bit.
+      */
+    val moments: Lsm = Lsm("moment-sketch", Spectral.momentSketch, scan(Spectral.mergeMoments(_)))
   }
 
-  /** The live part frames of an LSM dir under the [[compactIndex]]
-    * marker protocol: with no marker, the `part=<n>` dirs; with a
-    * marker naming fold boundary `hi` and the staged
-    * `part=<hi>.compacted` dir still present, that dir is authoritative
-    * for every part ≤ hi (they are mid-delete) plus the parts > hi; a
-    * marker whose staged dir is GONE means the rename already landed —
-    * plain parts again.
-    */
   /** The live part PATHS of an LSM dir under the compaction marker
-    * protocol — the live-part resolver for readers
-    * that can consume all live parts through ONE multi-path scan
-    * ([[currentCensus]]/[[currentSumCensus]]): the plan then carries a
-    * single FileScan node regardless of part count, instead of one scan
-    * node per micro-batch part glued by a linear union tree (VERDICT
-    * r15 — at thousands of parts the PLAN itself became the bottleneck).
+    * protocol ([[Lsm.current]] reads them in ONE multi-path scan): with
+    * no marker, the `part=<n>` dirs; with a marker naming fold boundary
+    * `hi` and the staged `part=<hi>.compacted` dir still present, that
+    * dir is authoritative for every part ≤ hi (they are mid-delete) plus
+    * the parts > hi; a marker whose staged dir is GONE means the rename
+    * already landed — plain parts again.
     *
     * Resolution is a STABLE-SNAPSHOT loop (r17 review): the marker read
     * and the part listing are two filesystem reads, and a compaction
@@ -1069,14 +905,8 @@ object StreamingOps {
   ): Option[Long] =
     readUtf8IfExists(fs, compactMarkerPath(indexDir)).map(_.trim.toLong)
 
-  /** Fold all partials into one (named for the highest batch folded).
-    * Run QUIESCED — with the maintaining stream stopped — like every
-    * compaction; the merge is the spec-pinned q115 re-aggregation, so
-    * [[currentIndexMerged]] is identical before and after.
-    *
-    * Crash-safe at every point (ADVICE r10 — the old form deleted every
-    * part BEFORE renaming the staged fold into place, so a crash in the
-    * window stranded the only copy in a hidden dir):
+  /** The stage→commit→swap compaction under every [[Lsm]], crash-safe
+    * at every point:
     *  1. stage the fold as `part=<hi>.compacted` (invisible to
     *     [[listParts]] — a crash here leaves the old parts untouched);
     *  2. COMMIT by writing the `_compacting` marker naming `hi` —
@@ -1086,59 +916,8 @@ object StreamingOps {
     *  3. delete the superseded parts, atomically rename the staged dir
     *     to `part=<hi>`, drop the marker.
     * A crashed compaction RESUMES: re-invoking with the marker present
-    * skips the merge and finishes steps 3 (all idempotent).
-    */
-  def compactIndex(spark: SparkSession, indexDir: String): Unit =
-    compactLsm(spark, indexDir, indexFold)
-
-  /** The index LSM's fold of an explicit part-path set — the q115
-    * re-aggregation [[currentIndexMerged]] applies to the live set.
-    */
-  private def indexFold(spark: SparkSession, paths: Seq[String]): DataFrame =
-    graft.operators.Retrieval.mergeIndexes(spark.read.parquet(paths: _*))
-
-  /** [[compactIndex]]'s protocol for the k-anonymity release census
-    * (VERDICT r15 №2): fold every [[maintainCensus]] partial into one,
-    * so [[currentCensus]]'s read cost stays bounded by the
-    * parts-since-last-compaction count instead of growing one part dir
-    * per micro-batch forever — the gap a long-lived streamed DP release
-    * (the census LSM feeds [[deidFeed]] and the dp serve path) would
-    * otherwise hit. Quiesced, crash-safe at every point, and a no-op on
-    * the view: the folded part IS the merged census (counts add), so
-    * the view is identical before/after — law-gated like the index.
-    */
-  def compactCensus(spark: SparkSession, dir: String): Unit =
-    compactLsm(spark, dir, censusFold(dir, "__graft_cell_n", "census"))
-
-  /** [[compactCensus]] for the clipped-sum census ([[maintainSumCensus]]
-    * artifacts) — clipped sums add, so the fold is exact the same way.
-    */
-  def compactSumCensus(spark: SparkSession, dir: String): Unit =
-    compactLsm(spark, dir, censusFold(dir, "__graft_cell_s", "sum census"))
-
-  private def censusFold(dir: String, cellCol: String, kind: String)(
-      spark: SparkSession,
-      paths: Seq[String]
-  ): DataFrame = mergedCensusViewOf(spark, dir, paths, cellCol, kind)
-
-  /** [[compactCensus]] for the moment-sketch LSM ([[maintainMoments]]
-    * artifacts) — raw moment sums add cell-wise, so one folded sketch
-    * replaces the per-batch partials exactly.
-    */
-  def compactMoments(spark: SparkSession, dir: String): Unit =
-    compactLsm(spark, dir, momentsFold)
-
-  private def momentsFold(spark: SparkSession, paths: Seq[String]): DataFrame =
-    graft.operators.Spectral.mergeMoments(spark.read.parquet(paths: _*))
-
-  /** The shared stage→commit→swap compaction under every exact-merge
-    * LSM in this module ([[compactIndex]]'s crash-safety argument,
-    * verbatim — `merged` is the only thing that varies): stage the fold
-    * (invisible to [[listParts]]), COMMIT via the `_compacting` marker
-    * (readers switch to the staged dir for parts ≤ hi), then delete the
-    * superseded parts, rename, and uncommit. Resumable at every crash
-    * point; the marker is never dropped while the staged fold is still
-    * present.
+    * skips the merge and finishes step 3 (all idempotent); the marker is
+    * never dropped while the staged fold is still present.
     *
     * `merged` folds an EXPLICIT part-path set (not the whole live view):
     * the auto-compaction path (VERDICT r16 №4) must fold only parts
@@ -1218,7 +997,7 @@ object StreamingOps {
     * the threshold, fold them through the maintainer family's own
     * [[compactLsm]] — same stage→commit→swap protocol, same crash
     * safety, so a long-lived streamed release is self-bounding instead
-    * of relying on an operator remembering to call `compact*`.
+    * of relying on an operator remembering to call `compact`.
     *
     * Replay-safety is positional, not incidental: the fold considers
     * only parts `< batchId` — batches whose checkpoint commit is
@@ -1247,74 +1026,11 @@ object StreamingOps {
         compactLsm(spark, dir, merged, below = batchId)
     }
 
-  /** Streaming maintenance of the [[graft.operators.Similarity.lshIndex]]
-    * ANN artifact — the degenerate-and-therefore-ideal case of the index
-    * LSM: the hyperplanes are DATA-INDEPENDENT, so a new vector's bucket
-    * rows are final the moment they are computed. No merge, no
-    * re-aggregation, no compaction pressure: each micro-batch writes its
-    * OWN `part=<batchId>` of bucket rows (O(batch) work,
-    * retry-idempotent overwrite like [[maintainIndexPartials]]) and the
-    * union of parts IS the index — [[currentLshIndex]] == a from-scratch
-    * [[graft.operators.Similarity.lshIndex]] over everything ever
-    * streamed, EXACTLY (spec-pinned), with no read-side work growing in
-    * the part count beyond file listing. Contrast [[maintainIndex]]
-    * (postings must re-aggregate) and the IVF tier (a trained codebook
-    * drifts with the distribution and must re-fit + re-assign — see
-    * [[graft.operators.Similarity.trainCodebook]]); this is why LSH is
-    * the ANN tier you can maintain with a dumb appender.
-    */
-  def maintainLshIndex(
-      stream: DataFrame,
-      indexDir: String,
-      checkpointDir: String,
-      autoCompactEvery: Int = 0,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        maybeAutoCompact(sp, indexDir, autoCompactEvery, batchId, lshFold)
-        writeLsmPart(
-          graft.operators.Similarity.lshIndex(batch), indexDir, batchId,
-          lineageOf(sp, checkpointDir))
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-
-  /** The live view of a [[maintainLshIndex]] artifact: the parts read
-    * back and unioned — nothing else, because bucket rows are per-vector
-    * independent. Feed straight to
-    * [[graft.operators.Similarity.annLshServe]].
-    */
-  def currentLshIndex(spark: SparkSession, indexDir: String): DataFrame = {
-    // the union of parts IS the index, so ONE multi-path scan is the
-    // whole read — one FileScan node at any part count (r16, the census
-    // plan-growth fix applied here), marker-aware so [[compactLshIndex]]
-    // is crash-safe
-    val paths = livePartPaths(spark, indexDir)
-    require(paths.nonEmpty, s"no LSH index parts under $indexDir")
-    spark.read.parquet(paths: _*)
-  }
-
-  /** Fold the LSH part dirs into one ([[compactLsm]] protocol). The LSH
-    * LSM has no merge step — the fold is a plain rewrite of the union —
-    * so compaction here only bounds file-listing/footer cost; the read
-    * PLAN is already O(1) via the multi-path scan.
-    */
-  def compactLshIndex(spark: SparkSession, indexDir: String): Unit =
-    compactLsm(spark, indexDir, lshFold)
-
-  private def lshFold(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.parquet(paths: _*)
-
   /** Streaming maintenance of the IVF serve artifact — the third ANN
     * maintenance mode, and the one with real re-training pressure: a
     * trained codebook DRIFTS as the vector distribution grows (contrast
-    * [[maintainLshIndex]]'s data-independent hyperplanes and
-    * [[maintainIndex]]'s mergeable postings), so maintenance is
+    * [[Lsm.lsh]]'s data-independent hyperplanes and [[Lsm.index]]'s
+    * mergeable postings), so maintenance is
     * (a) append each micro-batch's raw vectors as `vectors/part=<id>`
     * (O(batch), retry-idempotent) and (b) every `refitEvery`-th batch
     * REFIT the codebook on everything so far (optionally on the 1-in-
@@ -1335,9 +1051,8 @@ object StreamingOps {
       checkpointDir: String,
       refitEvery: Int = 4,
       sampleEvery: Int = 1,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
+      trigger: Trigger = Trigger.AvailableNow()
+  ): StreamingQuery = {
     require(refitEvery >= 1, s"need refitEvery >= 1, got $refitEvery")
     stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -1361,16 +1076,11 @@ object StreamingOps {
             // centroids last: a generation without them is not current
             cb.centroids.write.mode("overwrite").parquet(s"$dir/gen=$batchId/centroids")
           } finally graft.operators.Similarity.releaseCodebook(cb)
-          val root = new org.apache.hadoop.fs.Path(dir)
-          val fs = root.getFileSystem(sp.sparkContext.hadoopConfiguration)
-          fs.listStatus(root)
-            .map(_.getPath.getName)
-            .collect { case s if s.startsWith("gen=") => s.stripPrefix("gen=").toLong }
-            .filter(_ < batchId)
-            .foreach { g =>
-              fs.delete(new org.apache.hadoop.fs.Path(s"$dir/gen=$g"), true)
-              ()
-            }
+          val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(sp.sparkContext.hadoopConfiguration)
+          listGens(sp, dir).filter(_ < batchId).foreach { g =>
+            fs.delete(new org.apache.hadoop.fs.Path(s"$dir/gen=$g"), true)
+            ()
+          }
         }
         ()
       }
@@ -1390,12 +1100,8 @@ object StreamingOps {
   )
 
   def currentIvf(spark: SparkSession, dir: String): IvfView = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = fs
-      .listStatus(root)
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("gen=") => s.stripPrefix("gen=").toLong }
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val gens = listGens(spark, dir)
     // a generation is CURRENT only once its centroids are durable
     // (ADVICE r10): [[maintainIvf]] writes index THEN centroids, so a
     // reader arriving between the two writes — or after a crash
@@ -1440,59 +1146,6 @@ object StreamingOps {
     }
   }
 
-  /** Streaming maintenance of a [[graft.operators.Sketch.cmsSketch]] —
-    * the counting tier's LSM: each micro-batch writes its OWN
-    * `part=<batchId>` grid (O(batch) + one grid-bounded aggregate;
-    * retry-idempotent overwrite), and because counter-wise merge is
-    * EXACT ([[graft.operators.Sketch.cmsMerge]] == whole-stream build,
-    * spec-pinned), [[currentCms]]'s merge-on-read equals the sketch of
-    * everything ever streamed — no generation rewrites, no drift, no
-    * compaction pressure beyond part count (fold parts with an explicit
-    * quiesced `currentCms(...).write` when listing cost matters).
-    */
-  def maintainCms(
-      stream: DataFrame,
-      dir: String,
-      checkpointDir: String,
-      keyCol: String,
-      depth: Int = 4,
-      width: Int = 1024,
-      autoCompactEvery: Int = 0,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        maybeAutoCompact(sp, dir, autoCompactEvery, batchId, cmsFold)
-        writeLsmPart(
-          graft.operators.Sketch.cmsSketch(batch, keyCol, depth, width), dir, batchId,
-          lineageOf(sp, checkpointDir))
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-
-  /** Merge-on-read view of a [[maintainCms]] artifact — == the one-pass
-    * sketch of the concatenated stream, exactly.
-    */
-  def currentCms(spark: SparkSession, dir: String): DataFrame = {
-    // single multi-path scan (r16): the (row, cms_col, cnt) sum-merge is
-    // row-set equal on the concatenated frame — O(1) plan in part count,
-    // marker-aware for [[compactCms]]
-    val paths = livePartPaths(spark, dir)
-    require(paths.nonEmpty, s"no CMS parts under $dir")
-    graft.operators.Sketch.cmsMerge(spark.read.parquet(paths: _*))
-  }
-
-  /** [[compactCensus]] for the CMS LSM — cell counts add, same fold. */
-  def compactCms(spark: SparkSession, dir: String): Unit =
-    compactLsm(spark, dir, cmsFold)
-
-  private def cmsFold(spark: SparkSession, paths: Seq[String]): DataFrame =
-    graft.operators.Sketch.cmsMerge(spark.read.parquet(paths: _*))
-
   /** The COMPOSED streaming de-identified release feed — the q167
     * enclave-exit path as a live pipeline: every arriving batch is
     * date-shifted on the RAW entity key (so the offset replays from the
@@ -1503,8 +1156,8 @@ object StreamingOps {
     * the release's cell sizes, never a micro-batch's own), and appended
     * to the release artifact with the dump layout knobs. Contracts,
     * stated honestly (the admitIngest conventions): the census is a
-    * fixed snapshot (compose with [[maintainCensus]]/[[currentCensus]]
-    * inside foreachBatch for a census-so-far feed); foreachBatch +
+    * fixed snapshot (read [[Lsm.census]]'s `current` inside foreachBatch
+    * for a census-so-far feed); foreachBatch +
     * append parquet is at-least-once under retry, and every projection
     * is a pure function of content, so a replayed batch writes
     * identical rows.
@@ -1522,10 +1175,8 @@ object StreamingOps {
       maxShiftDays: Int = 30,
       salt: String = "release",
       layout: graft.sources.ParquetLayout = graft.sources.ParquetLayout(),
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Deidentify
+      trigger: Trigger = Trigger.AvailableNow()
+  ): StreamingQuery = {
     val deid = Deidentify.pseudonymize(
       Deidentify.dateShift(stream, tsCol, entityCol, maxShiftDays, salt),
       pseudoCols,
@@ -1537,10 +1188,7 @@ object StreamingOps {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write
           .mode("append")
-          .option("maxRecordsPerFile", layout.maxRecordsPerFile)
-          .option("parquet.block.size", layout.rowGroupBytes)
-          .option("parquet.page.size", layout.pageBytes)
-          .option("compression", layout.codec)
+          .options(layout.writerOptions)
           .parquet(dir)
       }
       .option("checkpointLocation", checkpointDir)
@@ -1548,134 +1196,6 @@ object StreamingOps {
       .start()
   }
 
-  /** Streaming maintenance of the k-anonymity release census
-    * ([[graft.operators.Deidentify.cellCounts]]) — the privacy tier
-    * joining the exact-merge LSM family: per-cell counts ADD, so each
-    * micro-batch writes its own `part=<batchId>` census (O(batch) + one
-    * cell-bounded aggregate, retry-idempotent overwrite) and
-    * [[currentCensus]]'s merge-on-read equals the census of everything
-    * ever streamed. The composition this exists for: a LIVE de-identified
-    * feed judges arrivals with `suppressAgainstCounts(batch,
-    * currentCensus(...), ...)` against the census-so-far — the
-    * release's k-anonymity promise tracks the growing release instead of
-    * a stale snapshot, with no stateful streaming aggregation (state
-    * would be CELL-cardinality-sized and unbounded; the LSM keeps each
-    * batch's work batch-bounded).
-    */
-  def maintainCensus(
-      stream: DataFrame,
-      dir: String,
-      checkpointDir: String,
-      quasiCols: Seq[String],
-      autoCompactEvery: Int = 0,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(quasiCols.nonEmpty, "need at least one quasi-identifier column")
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        maybeAutoCompact(
-          sp, dir, autoCompactEvery, batchId, censusFold(dir, "__graft_cell_n", "census"))
-        writeLsmPart(
-          graft.operators.Deidentify.cellCounts(batch, quasiCols), dir, batchId,
-          lineageOf(sp, checkpointDir))
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
-
-  /** Merge-on-read view of a [[maintainCensus]] artifact — == the
-    * one-pass census of the concatenated stream, exactly (counts add;
-    * the NULL-safe cell convention survives because the aggregate's
-    * grouping treats NULL as a value on both sides). Output is in the
-    * [[graft.operators.Deidentify.cellCounts]] contract (renamed
-    * `__graft_q_*` columns), directly consumable by
-    * `suppressAgainstCounts`.
-    */
-  def currentCensus(spark: SparkSession, dir: String): DataFrame =
-    mergedCensusView(spark, dir, "__graft_cell_n", "census")
-
-  /** Streaming maintenance of the CLIPPED-SUM census
-    * ([[graft.operators.Deidentify.cellSums]]) — [[maintainCensus]]'s
-    * twin for sum releases, completing the streamed DP serve path (r15,
-    * VERDICT r14 №7): the row-level clamp is per-row (commutes with
-    * micro-batching) and clipped sums ADD exactly, so each batch writes
-    * its own `part=<batchId>` cellSums frame and [[currentSumCensus]]'s
-    * merge-on-read equals the batch census of everything ever streamed.
-    * Composition: `Deidentify.dpSumsFromTotals(currentSumCensus(...),
-    * ...)` is bit-identical to `dpCellSums` of the full history, and
-    * `dpCellMeans` of the two streamed releases equals the batch means
-    * (law-gated in StreamingSpec). Same LSM discipline as every
-    * maintain*: O(batch) + one cell-bounded aggregate per batch,
-    * retry-idempotent overwrite, no unbounded streaming state.
-    */
-  def maintainSumCensus(
-      stream: DataFrame,
-      dir: String,
-      checkpointDir: String,
-      quasiCols: Seq[String],
-      valueCol: String,
-      clip: Long,
-      autoCompactEvery: Int = 0,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(quasiCols.nonEmpty, "need at least one quasi-identifier column")
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        maybeAutoCompact(
-          sp, dir, autoCompactEvery, batchId, censusFold(dir, "__graft_cell_s", "sum census"))
-        writeLsmPart(
-          graft.operators.Deidentify.cellSums(batch, quasiCols, valueCol, clip), dir, batchId,
-          lineageOf(sp, checkpointDir))
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
-
-  /** Merge-on-read view of a [[maintainSumCensus]] artifact — == the
-    * one-pass [[graft.operators.Deidentify.cellSums]] of the
-    * concatenated stream, exactly (clipped sums add; NULL-safe cells
-    * survive the grouping on both sides).
-    */
-  def currentSumCensus(spark: SparkSession, dir: String): DataFrame =
-    mergedCensusView(spark, dir, "__graft_cell_s", "sum census")
-
-  /** The shared census merge-on-read: ONE multi-path parquet scan over
-    * every live part ([[livePartPaths]] — marker-aware, so the view is
-    * complete at every [[compactCensus]] crash point), then the
-    * cell-bounded re-aggregate. A single FileScan node regardless of
-    * part count — the old per-part `reduce(_ unionByName _)` built one
-    * scan node per micro-batch part and a linear union tree, making the
-    * PLAN the bottleneck at thousands of batches (VERDICT r15); parquet
-    * resolves columns by NAME, and every part is written by the same
-    * maintainer aggregate, so the multi-path read is exact. Fails
-    * loudly on the wrong census kind (a COUNT dir read as sums would
-    * otherwise silently treat the count column as a quasi column).
-    * Contract note: all parts of one dir share one maintainer and hence
-    * one column set — that is what [[maintainCensus]] writes. The
-    * oldest-vs-newest column-set check below keeps the old union's
-    * loud-failure property against quasi-set drift (which is monotone
-    * in batch id, so the two endpoints witness any transition), and the
-    * kind check catches a count dir served as sums or vice versa.
-    */
-  private def mergedCensusView(
-      spark: SparkSession,
-      dir: String,
-      cellCol: String,
-      kind: String
-  ): DataFrame = mergedCensusViewOf(spark, dir, livePartPaths(spark, dir), cellCol, kind)
-
-  /** [[mergedCensusView]] over an EXPLICIT path set — the live view and
-    * the compaction fold share one implementation, so compacting can
-    * never produce a frame the view would not have served.
-    */
   /** Footer schemas already verified, keyed by (part path, dir mtime) —
     * NOT path alone (ADVICE r17): a part is immutable only while the dir
     * is never wiped, and a long-lived driver re-running a fixture loop
@@ -1689,14 +1209,18 @@ object StreamingOps {
   private val censusSchemaCache = scala.collection.concurrent.TrieMap
     .empty[(String, Long), Seq[(String, org.apache.spark.sql.types.DataType)]]
 
-  private def mergedCensusViewOf(
+  /** The census families' fold: ONE multi-path scan over the given parts,
+    * then the cell-bounded re-aggregate (parquet resolves columns by NAME
+    * and every part comes from the same maintainer aggregate, so the
+    * multi-path read is exact). Fails loudly on the wrong census kind (a
+    * COUNT dir read as sums would otherwise silently treat the count
+    * column as a quasi column) and on schema drift across parts.
+    */
+  private def censusFold(cellCol: String, kind: String)(
       spark: SparkSession,
-      dir: String,
-      paths: Seq[String],
-      cellCol: String,
-      kind: String
+      paths: Seq[String]
   ): DataFrame = {
-    require(paths.nonEmpty, s"no $kind parts under $dir")
+    val dir = new org.apache.hadoop.fs.Path(paths.head).getParent
     // the loud-failure property the old unionByName gave for free
     // (ADVICE r16 — full version): EVERY live part must agree on the
     // full schema, names AND types. The r16 oldest-vs-newest name check
@@ -1777,100 +1301,27 @@ object StreamingOps {
       .agg(org.apache.spark.sql.functions.sum(org.apache.spark.sql.functions.col(cellCol)).as(cellCol))
   }
 
-  /** Streaming maintenance of the spectral [[graft.operators.Spectral
-    * .momentSketch]] — the subtle one in the exact-merge family:
-    * CENTERING does not commute with sharding (each batch sees its own
-    * mean), so the artifact stores the RAW moment sums — which add
-    * cell-wise exactly — and the reader centers once, globally, through
-    * the integer identity in [[graft.operators.Spectral
-    * .secondMomentFromSketch]]. Each micro-batch writes its own
-    * `part=<batchId>` sketch (O(batch·d²) work, retry-idempotent);
-    * merge-on-read == the sketch of everything ever streamed, so the
-    * STREAMED principal component equals the batch-trained one bit for
-    * bit (spec-pinned) — live embedding-drift monitoring with no
-    * retraining pipeline.
+  /** The numeric ids of the `<prefix><n>` dirs under `dir` — empty for a
+    * dir that has never been written. Parses ONLY pure-numeric ids: a
+    * crash-stranded `part=<n>.compacted` staging dir must never be listed
+    * as live, and must not crash the listing.
     */
-  def maintainMoments(
-      stream: DataFrame,
-      dir: String,
-      checkpointDir: String,
-      autoCompactEvery: Int = 0,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        maybeAutoCompact(sp, dir, autoCompactEvery, batchId, momentsFold)
-        writeLsmPart(
-          graft.operators.Spectral.momentSketch(batch), dir, batchId,
-          lineageOf(sp, checkpointDir))
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-
-  /** Merge-on-read view of a [[maintainMoments]] artifact — live parts
-    * under the marker protocol (so [[compactMoments]] is crash-safe),
-    * read through ONE multi-path scan: the (j, k, v) sum-merge is
-    * row-set equal on the concatenated frame, so the view plan is O(1)
-    * in part count like the census and index views.
-    */
-  def currentMoments(spark: SparkSession, dir: String): DataFrame = {
-    val paths = livePartPaths(spark, dir)
-    require(paths.nonEmpty, s"no moment-sketch parts under $dir")
-    graft.operators.Spectral.mergeMoments(spark.read.parquet(paths: _*))
-  }
-
-  private def listParts(spark: SparkSession, indexDir: String): Array[Long] = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
+  private def listIds(spark: SparkSession, dir: String, prefix: String): Array[Long] = {
+    val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) Array.empty[Long]
     else
       fs.listStatus(root)
         .map(_.getPath.getName)
-        // parse ONLY pure-numeric part ids: a crash-stranded
-        // `part=<n>.compacted` staging dir (see [[compactIndex]]) must
-        // never be listed as live — and must not crash the listing
         .collect {
-          case s if s.startsWith("part=") && s.stripPrefix("part=").forall(_.isDigit) =>
-            s.stripPrefix("part=").toLong
+          case s if s.startsWith(prefix) && s.stripPrefix(prefix).forall(_.isDigit) =>
+            s.stripPrefix(prefix).toLong
         }
   }
 
-  /** Read the current generation of a [[maintainRetrieval]] norms
-    * artifact (same layout as the postings).
-    */
-  def currentNorms(spark: SparkSession, normsDir: String): DataFrame =
-    currentIndex(spark, normsDir)
+  private def listParts(spark: SparkSession, dir: String): Array[Long] = listIds(spark, dir, "part=")
 
-  /** Read the current generation of a [[maintainIndex]] artifact.
-    *
-    * (ADVICE r11) "current" is the max COMPLETE generation, not the max
-    * directory: a crash mid-write leaves a partial top `gen=` dir with no
-    * committer `_SUCCESS`, and serving it would silently drop postings.
-    * Same resolution discipline as [[currentIvf]] — `_SUCCESS` is the
-    * commit marker, with a bare-existence fallback only when NO
-    * generation carries a marker (markerless committer configuration).
-    */
-  def currentIndex(spark: SparkSession, indexDir: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = fs
-      .listStatus(root)
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("gen=") => s.stripPrefix("gen=").toLong }
-    require(gens.nonEmpty, s"no index generations under $indexDir")
-    val anyMarked = gens.exists(g =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/gen=$g/_SUCCESS"))
-    )
-    val eligible =
-      if (anyMarked)
-        gens.filter(g => fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/gen=$g/_SUCCESS")))
-      else gens
-    spark.read.parquet(s"$indexDir/gen=${eligible.max}")
-  }
+  private def listGens(spark: SparkSession, dir: String): Array[Long] = listIds(spark, dir, "gen=")
 
   /** Run a streaming frame to completion against bounded input via the
     * memory sink (used by tests; production would writeStream to parquet/

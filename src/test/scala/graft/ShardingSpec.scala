@@ -116,6 +116,17 @@ class ShardingSpec extends SparkSpec {
     assert(e.getMessage.contains("no parquet shards"), e.getMessage)
   }
 
+  test("ParquetLayout.writerOptions carries the four layout values") {
+    def opts(maxRecords: String) = Map(
+      "maxRecordsPerFile" -> maxRecords,
+      "parquet.block.size" -> "134217728",
+      "parquet.page.size" -> "1048576",
+      "compression" -> "snappy"
+    )
+    assert(ParquetLayout().writerOptions === opts("524288"))
+    assert(ParquetLayout.forWideRows(1 << 20).writerOptions === opts("512"))
+  }
+
   test("sharding invariant: reference layout constant 2^19") {
     assert(ParquetLayout().maxRecordsPerFile == 524288L)
   }

@@ -3,7 +3,7 @@ package graft
 import graft.operators.EventOps
 import graft.sources.Tables
 import graft.streaming.StreamingOps
-import graft.streaming.StreamingOps.Ev
+import graft.streaming.StreamingOps.{Ev, Lsm}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.time.Instant
@@ -22,6 +22,9 @@ class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val events = Tables.load(spark, Sf0001, "events")
+
+  /** The count census over one quasi column, the shape most laws here use. */
+  private val nationCensus = Lsm.census(Seq("nation"))
 
   private lazy val evSeq: Seq[Ev] = events
     .select("event_id", "ts", "user_id", "event_type", "value")
@@ -126,7 +129,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val subset = evSeq.filter(_.user_id < 20)
     val stream = MemoryStream[Ev]
-    val deduped = StreamingOps.dedupStream(stream.toDF(), "ts", "1 hour", Seq("event_id"))
+    val deduped = stream.toDF().withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(Seq("event_id"))
     val q = deduped.writeStream.outputMode("append").format("memory").queryName("dedup_s").start()
     stream.addData(subset); q.processAllAvailable()
     stream.addData(subset.take(50)) // replayed delivery inside the watermark
@@ -138,7 +141,7 @@ class StreamingSpec extends SparkSpec {
 
     val dims = Seq((0L, "gold"), (1L, "silver")).toDF("user_id", "tier")
     val stream2 = MemoryStream[Ev]
-    val enriched = StreamingOps.enrich(stream2.toDF(), dims, "user_id")
+    val enriched = stream2.toDF().join(broadcast(dims), Seq("user_id"), "left")
     val q2 = enriched.writeStream.outputMode("append").format("memory").queryName("enrich_s").start()
     stream2.addData(subset.filter(_.user_id <= 2)); q2.processAllAvailable()
     q2.stop()
@@ -225,11 +228,10 @@ class StreamingSpec extends SparkSpec {
     val stream = MemoryStream[(Long, String)]
     val model =
       graft.operators.NgramLM.persistModel(graft.operators.NgramLM.train(reference))
-    val scored =
-      StreamingOps.scoreRarityAgainst(model, stream.toDF().toDF("doc_id", "text"))
+    val scored = graft.operators.NgramLM.scoredGrams(stream.toDF().toDF("doc_id", "text"), model)
     val q = scored.writeStream.outputMode("append").format("memory").queryName("lm_s").start()
     stream.addData(arrivals); q.processAllAvailable()
-    assert(q.lastProgress.stateOperators.isEmpty, "scoreRarityAgainst must plan stateless")
+    assert(q.lastProgress.stateOperators.isEmpty, "NgramLM.scoredGrams must plan stateless on a stream")
     q.stop()
     graft.operators.NgramLM.releaseModel(model)
     // the foreachBatch-side aggregate over the streamed gram rows ==
@@ -266,11 +268,10 @@ class StreamingSpec extends SparkSpec {
       (2L, "gamma delta gamma") // raw-like
     )
     val stream = MemoryStream[(Long, String)]
-    val scored =
-      StreamingOps.scoreImportanceAgainst(weights, stream.toDF().toDF("doc_id", "text"))
+    val scored = graft.operators.Importance.scoredFeatures(stream.toDF().toDF("doc_id", "text"), weights)
     val q = scored.writeStream.outputMode("append").format("memory").queryName("imp_s").start()
     stream.addData(arrivals); q.processAllAvailable()
-    assert(q.lastProgress.stateOperators.isEmpty, "scoreImportanceAgainst must plan stateless")
+    assert(q.lastProgress.stateOperators.isEmpty, "Importance.scoredFeatures must plan stateless on a stream")
     q.stop()
     // the foreachBatch-side per-doc mean over the streamed feature rows
     // == Importance.score over the same docs as a batch
@@ -339,11 +340,10 @@ class StreamingSpec extends SparkSpec {
       (2L, "click buy free bonus") // negative-like
     )
     val stream = MemoryStream[(Long, String)]
-    val scored =
-      StreamingOps.scoreQualityAgainst(model, stream.toDF().toDF("doc_id", "text"))
+    val scored = graft.operators.Classifier.scoredFeatures(stream.toDF().toDF("doc_id", "text"), model)
     val q = scored.writeStream.outputMode("append").format("memory").queryName("qual_s").start()
     stream.addData(arrivals); q.processAllAvailable()
-    assert(q.lastProgress.stateOperators.isEmpty, "scoreQualityAgainst must plan stateless")
+    assert(q.lastProgress.stateOperators.isEmpty, "Classifier.scoredFeatures must plan stateless on a stream")
     q.stop()
     val streamAgg = spark
       .table("qual_s")
@@ -381,11 +381,10 @@ class StreamingSpec extends SparkSpec {
         (12L, "der alte hund schläft am feuer während die kinder spielen")
       )
       val stream = MemoryStream[(Long, String)]
-      val scored =
-        StreamingOps.assignLangAgainst(persisted, stream.toDF().toDF("doc_id", "text"))
+      val scored = graft.operators.LangId.scoredPairs(stream.toDF().toDF("doc_id", "text"), persisted)
       val q = scored.writeStream.outputMode("append").format("memory").queryName("lang_s").start()
       stream.addData(arrivals); q.processAllAvailable()
-      assert(q.lastProgress.stateOperators.isEmpty, "assignLangAgainst must plan stateless")
+      assert(q.lastProgress.stateOperators.isEmpty, "LangId.scoredPairs must plan stateless on a stream")
       q.stop()
       // foreachBatch side: per-(doc, lang) mean + argmin over the
       // streamed occurrence rows == LangId.assign on the batch frame
@@ -418,10 +417,10 @@ class StreamingSpec extends SparkSpec {
       .localCheckpoint(true)
     val arrivals = corpus.select("doc_id", "text").as[(Long, String)].collect().take(20).toSeq
     val stream = MemoryStream[(Long, String)]
-    val scored = StreamingOps.scoreBm25Against(model, stream.toDF().toDF("doc_id", "text"))
+    val scored = graft.operators.Retrieval.matchedTerms(stream.toDF().toDF("doc_id", "text"), model, "text")
     val q = scored.writeStream.outputMode("append").format("memory").queryName("bm25_s").start()
     stream.addData(arrivals); q.processAllAvailable()
-    assert(q.lastProgress.stateOperators.isEmpty, "scoreBm25Against must plan stateless")
+    assert(q.lastProgress.stateOperators.isEmpty, "Retrieval.matchedTerms must plan stateless on a stream")
     q.stop()
     // foreachBatch side: per-doc tf + the shared integer arithmetic over
     // the streamed matched-term rows == the batch scorer on the same docs
@@ -721,11 +720,12 @@ class StreamingSpec extends SparkSpec {
         .toMap
     val stream = MemoryStream[(Long, String)]
     val normsDir = s"$dir/norms"
-    val q = StreamingOps.maintainRetrieval(
+    // one query and one checkpoint feed both artifacts of the retrieval
+    // deployment: the index LSM and the norms LSM
+    val q = Lsm.maintainAll(
       stream.toDF().toDF("doc_id", "text"),
-      idxDir,
-      normsDir,
       s"$dir/ckpt",
+      Seq(Lsm.index() -> idxDir, Lsm.norms() -> normsDir),
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L)
     )
     val (b1, rest) = docs.splitAt(docs.length / 3)
@@ -734,27 +734,25 @@ class StreamingSpec extends SparkSpec {
     stream.addData(b2); q.processAllAvailable()
     // mid-stream: the artifact equals rebuilding everything streamed so far
     assert(
-      flat(StreamingOps.currentIndex(spark, idxDir))
+      flat(Lsm.index().current(spark, idxDir))
         === flat(Retrieval.invertedIndex((b1 ++ b2).toDF("doc_id", "text")))
     )
     stream.addData(b3); q.processAllAvailable()
     q.stop()
-    // drained: streaming-merged == the full-corpus rebuild EXACTLY, and
-    // superseded generations were retired (base + current at most)
+    // drained: merged-on-read == the full-corpus rebuild EXACTLY, and
+    // each batch wrote one part into each artifact
     assert(
-      flat(StreamingOps.currentIndex(spark, idxDir))
+      flat(Lsm.index().current(spark, idxDir))
         === flat(Retrieval.invertedIndex(docs.toDF("doc_id", "text")))
     )
-    for (d <- Seq(idxDir, normsDir)) {
-      val gens = new java.io.File(d).list().count(_.startsWith("gen="))
-      assert(gens <= 2, s"$d accumulated $gens generations")
-    }
+    for (d <- Seq(idxDir, normsDir))
+      assert(new java.io.File(d).list().count(_.startsWith("part=")) === 3, d)
     // ranked retrieval over the live artifacts == batch BM25 over every
-    // document ever streamed — the law the norms generation exists for
+    // document ever streamed — the law the norms LSM exists for
     val served = Retrieval
       .bm25TopKIndexed(
-        StreamingOps.currentIndex(spark, idxDir),
-        StreamingOps.currentNorms(spark, normsDir),
+        Lsm.index().current(spark, idxDir),
+        Lsm.norms().current(spark, normsDir),
         Seq("dup", "vector", "merge"),
         10
       )
@@ -776,7 +774,7 @@ class StreamingSpec extends SparkSpec {
       .collect()
       .toSeq
     val stream = MemoryStream[(Long, Seq[Float])]
-    val q = StreamingOps.maintainLshIndex(
+    val q = Lsm.lsh.maintain(
       stream.toDF().toDF("vec_id", "embedding"),
       s"$dir/index",
       s"$dir/ckpt",
@@ -787,7 +785,7 @@ class StreamingSpec extends SparkSpec {
     stream.addData(b2); q.processAllAvailable()
     q.stop()
     // the union of parts IS the index — no merge arithmetic exists to get wrong
-    val live = StreamingOps.currentLshIndex(spark, s"$dir/index")
+    val live = Lsm.lsh.current(spark, s"$dir/index")
     val batch = Similarity.lshIndex(vecs.toDF("vec_id", "embedding"))
     assert(live.except(batch).count() === 0L && batch.except(live).count() === 0L)
     // and serving from the streamed artifact == the batch ANN, bit-for-bit
@@ -803,9 +801,9 @@ class StreamingSpec extends SparkSpec {
     // compaction (r16, shared compactLsm protocol) folds the parts to
     // one and changes neither the index nor the serve results
     assert(new java.io.File(s"$dir/index").list().count(_.startsWith("part=")) === 2)
-    StreamingOps.compactLshIndex(spark, s"$dir/index")
+    Lsm.lsh.compact(spark, s"$dir/index")
     assert(new java.io.File(s"$dir/index").list().count(_.startsWith("part=")) === 1)
-    val folded = StreamingOps.currentLshIndex(spark, s"$dir/index")
+    val folded = Lsm.lsh.current(spark, s"$dir/index")
     assert(folded.except(batch).count() === 0L && batch.except(folded).count() === 0L)
     assert(
       rows(Similarity.annLshServe(folded, queries, 10))
@@ -976,14 +974,13 @@ val dir =
       java.nio.file.Files.createTempDirectory("graft-census-lsm").toString + "/census"
     val stream = MemoryStream[(Long, Long)]
     rows.grouped(40).foreach(stream.addData(_))
-    val q = StreamingOps.maintainCensus(
+    val q = nationCensus.maintain(
       stream.toDF().toDF("c_custkey", "nation"),
       dir,
-      s"$dir/_ckpt",
-      Seq("nation")
+      s"$dir/_ckpt"
     )
     q.processAllAvailable(); q.stop()
-    val merged = StreamingOps.currentCensus(spark, dir)
+    val merged = nationCensus.current(spark, dir)
     val batch = Deidentify.cellCounts(full, Seq("nation"))
     val a = merged.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val b = batch.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -1012,15 +1009,14 @@ val dir =
       java.nio.file.Files.createTempDirectory("graft-census-dp-lsm").toString + "/census"
     val stream = MemoryStream[(Long, Long)]
     rows.grouped(35).foreach(stream.addData(_))
-    val q = StreamingOps.maintainCensus(
+    val q = nationCensus.maintain(
       stream.toDF().toDF("c_custkey", "nation"),
       dir,
-      s"$dir/_ckpt",
-      Seq("nation")
+      s"$dir/_ckpt"
     )
     q.processAllAvailable(); q.stop()
     val viaLsm = Deidentify
-      .dpFromCounts(StreamingOps.currentCensus(spark, dir), Seq("nation"), 1000000L, "rel")
+      .dpFromCounts(nationCensus.current(spark, dir), Seq("nation"), 1000000L, "rel")
       .as[(Long, Long, Long)].collect().toSet
     val batch = Deidentify
       .dpCellCounts(full, Seq("nation"), 1000000L, "rel")
@@ -1048,11 +1044,11 @@ val dir =
       java.nio.file.Files.createTempDirectory("graft-census-dpq-lsm").toString + "/census"
     val stream = MemoryStream[(Long, String, Long)]
     rows.grouped(40).foreach(stream.addData(_))
-    val q = StreamingOps.maintainCensus(
+    val segBand = Lsm.census(Seq("seg", "band_lo"))
+    val q = segBand.maintain(
       stream.toDF().toDF("c_custkey", "seg", "band_lo"),
       dir,
-      s"$dir/_ckpt",
-      Seq("seg", "band_lo")
+      s"$dir/_ckpt"
     )
     q.processAllAvailable(); q.stop()
     def quantiles(rel: org.apache.spark.sql.DataFrame) = Deidentify
@@ -1060,7 +1056,7 @@ val dir =
       .as[(String, Int, Long, Long, Long)].collect().toSet
     val viaLsm = quantiles(
       Deidentify.dpFromCounts(
-        StreamingOps.currentCensus(spark, dir), Seq("seg", "band_lo"), 1000000L, "relq"))
+        segBand.current(spark, dir), Seq("seg", "band_lo"), 1000000L, "relq"))
     val batch = quantiles(Deidentify.dpCellCounts(full, Seq("seg", "band_lo"), 1000000L, "relq"))
     assert(viaLsm === batch, "streamed-census quantiles must equal the batch quantiles exactly")
   }
@@ -1087,18 +1083,18 @@ val dir =
     val sdir = s"$mbase/sums"
     val cs = MemoryStream[(Long, Long, Long)]
     rows.grouped(40).foreach(cs.addData(_))
-    val q1 = StreamingOps.maintainCensus(
-      cs.toDF().toDF("c_custkey", "nation", "v"), cdir, s"$cdir/_ckpt", Seq("nation"))
+    val q1 = nationCensus.maintain(
+      cs.toDF().toDF("c_custkey", "nation", "v"), cdir, s"$cdir/_ckpt")
     q1.processAllAvailable(); q1.stop()
     val ss = MemoryStream[(Long, Long, Long)]
     rows.grouped(37).foreach(ss.addData(_))
-    val q2 = StreamingOps.maintainSumCensus(
-      ss.toDF().toDF("c_custkey", "nation", "v"), sdir, s"$sdir/_ckpt", Seq("nation"), "v", 8L)
+    val sums = Lsm.sumCensus(Seq("nation"), "v", 8L)
+    val q2 = sums.maintain(ss.toDF().toDF("c_custkey", "nation", "v"), sdir, s"$sdir/_ckpt")
     q2.processAllAvailable(); q2.stop()
     val countsLsm = Deidentify
-      .dpFromCounts(StreamingOps.currentCensus(spark, cdir), Seq("nation"), 1000000L, "mA")
+      .dpFromCounts(nationCensus.current(spark, cdir), Seq("nation"), 1000000L, "mA")
     val sumsLsm = Deidentify.dpSumsFromTotals(
-      StreamingOps.currentSumCensus(spark, sdir), Seq("nation"), "v", 8L, 2000000L, "mB")
+      sums.current(spark, sdir), Seq("nation"), "v", 8L, 2000000L, "mB")
     val batchCounts = Deidentify.dpCellCounts(full, Seq("nation"), 1000000L, "mA")
     val batchSums = Deidentify.dpCellSums(full, Seq("nation"), "v", 8L, 2000000L, "mB")
     def means(c: org.apache.spark.sql.DataFrame, s: org.apache.spark.sql.DataFrame) =
@@ -1126,7 +1122,7 @@ val dir =
     val ledger = Deidentify.dpLedger(Seq(
       manifest(countsLsm, "r1", 1000000L),
       manifest(Deidentify.dpFromCounts(
-        StreamingOps.currentCensus(spark, cdir), Seq("nation"), 500000L, "mC"), "r2", 500000L)
+        nationCensus.current(spark, cdir), Seq("nation"), 500000L, "mC"), "r2", 500000L)
     ))
     assert(Deidentify.enforceBudget(ledger, 1500000L).count() === 2L, "at-cap passes on the streamed ledger")
     // the enforced frame itself is row-identical to the batch-assembled
@@ -1147,7 +1143,7 @@ val dir =
     val eBatch = intercept[Exception](Deidentify.enforceBudget(batchLedger, 1499999L).collect())
     assert(msgs(eBatch).exists(_.contains("DP budget exceeded")), "the raise fires identically on batch")
     // a COUNT census dir is not a sum census — fail loudly, not nonsense
-    intercept[IllegalArgumentException](StreamingOps.currentSumCensus(spark, cdir))
+    intercept[IllegalArgumentException](sums.current(spark, cdir))
   }
 
   test("streaming range join: live points vs static intervals — stateless, == batch") {
@@ -1247,7 +1243,7 @@ val dir =
       .collect()
       .toSeq
     val stream = MemoryStream[(Long, Seq[Float])]
-    val q = StreamingOps.maintainMoments(
+    val q = Lsm.moments.maintain(
       stream.toDF().toDF("vec_id", "embedding"),
       s"$dir/moments",
       s"$dir/ckpt",
@@ -1257,7 +1253,7 @@ val dir =
     q.stop()
     val all = vecs.toDF("vec_id", "embedding")
     val fromSketch = Spectral
-      .secondMomentFromSketch(StreamingOps.currentMoments(spark, s"$dir/moments"))
+      .secondMomentFromSketch(Lsm.moments.current(spark, s"$dir/moments"))
     val batch = Spectral.secondMoment(all)
     // centering does not commute with sharding — the raw-sums identity
     // must reconstruct the batch-centered matrix EXACTLY
@@ -1279,10 +1275,10 @@ val dir =
     // the sketch LSM shares the compaction protocol (r16): folding the
     // three per-batch partials into one changes nothing in the view
     assert(new java.io.File(s"$dir/moments").list().count(_.startsWith("part=")) === 3)
-    StreamingOps.compactMoments(spark, s"$dir/moments")
+    Lsm.moments.compact(spark, s"$dir/moments")
     assert(new java.io.File(s"$dir/moments").list().count(_.startsWith("part=")) === 1)
     val afterCompact = Spectral
-      .secondMomentFromSketch(StreamingOps.currentMoments(spark, s"$dir/moments"))
+      .secondMomentFromSketch(Lsm.moments.current(spark, s"$dir/moments"))
     assert(afterCompact.except(batch).count() === 0L && batch.except(afterCompact).count() === 0L)
   }
 
@@ -1298,25 +1294,69 @@ val dir =
       .collect()
       .toSeq
     val stream = MemoryStream[String]
-    val q = StreamingOps.maintainCms(
+    val cms = Lsm.cms("tok", depth = 3, width = 256)
+    val q = cms.maintain(
       stream.toDF().toDF("tok"),
       s"$dir/cms",
       s"$dir/ckpt",
-      "tok",
-      depth = 3,
-      width = 256,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L)
     )
     docs.grouped((docs.length + 2) / 3).foreach { b => stream.addData(b); q.processAllAvailable() }
     q.stop()
-    val merged = StreamingOps.currentCms(spark, s"$dir/cms")
+    val merged = cms.current(spark, s"$dir/cms")
     val whole = Sketch.cmsSketch(docs.toDF("tok"), "tok", depth = 3, width = 256)
     assert(merged.except(whole).count() === 0L && whole.except(merged).count() === 0L)
     // compaction (r16, shared protocol) folds to one part, sketch unchanged
-    StreamingOps.compactCms(spark, s"$dir/cms")
+    cms.compact(spark, s"$dir/cms")
     assert(new java.io.File(s"$dir/cms").list().count(_.startsWith("part=")) === 1)
-    val folded = StreamingOps.currentCms(spark, s"$dir/cms")
+    val folded = cms.current(spark, s"$dir/cms")
     assert(folded.except(whole).count() === 0L && whole.except(folded).count() === 0L)
+  }
+
+  test("every Lsm family: current == the one-pass batch build at autoCompactEvery 0 and 2; compact leaves one part") {
+    import graft.operators.{Deidentify, Retrieval, Similarity, Sketch, Spectral}
+    import org.apache.spark.sql.{DataFrame, Encoders, Row}
+    val docs = Tables.load(spark, Sf0001, "documents").select("doc_id", "text")
+    val vecs = spark.read.parquet(s"$Sf0001/embeddings.parquet").select("vec_id", "embedding")
+    val toks = docs.select(explode(split(col("text"), " ")).as("tok")).filter(length(col("tok")) > 0)
+    val cust = Tables.load(spark, Sf0001, "customer").select(
+      col("c_custkey"), col("c_nationkey").cast("long").as("nation"), pmod(col("c_custkey"), lit(13L)).as("v"))
+    // (family, the rows it is streamed, its one-pass batch build over all of them)
+    val families = Seq(
+      (Lsm.index(), docs, Retrieval.invertedIndex(docs)),
+      (Lsm.norms(), docs, Retrieval.docLengths(docs)),
+      (Lsm.lsh, vecs, Similarity.lshIndex(vecs)),
+      (Lsm.cms("tok", depth = 3, width = 256), toks, Sketch.cmsSketch(toks, "tok", depth = 3, width = 256)),
+      (nationCensus, cust, Deidentify.cellCounts(cust, Seq("nation"))),
+      (Lsm.sumCensus(Seq("nation"), "v", 8L), cust, Deidentify.cellSums(cust, Seq("nation"), "v", 8L)),
+      (Lsm.moments, vecs, Spectral.momentSketch(vecs))
+    )
+    def same(a: DataFrame, b: DataFrame): Boolean = {
+      val cols = a.columns.sorted.map(col)
+      val (x, y) = (a.select(cols: _*), b.select(cols: _*))
+      x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty
+    }
+    def partCount(d: String) = new java.io.File(d).list()
+      .count(s => s.startsWith("part=") && !s.endsWith(".compacted"))
+    for ((lsm, rows, batch) <- families; every <- Seq(0, 2)) {
+      val base = java.nio.file.Files.createTempDirectory("graft-lsm-law").toString
+      val dir = s"$base/artifact"
+      val all = rows.collect().toSeq
+      val stream = MemoryStream[Row](Encoders.row(rows.schema), spark.sqlContext)
+      val q = lsm.maintain(
+        stream.toDF(), dir, s"$base/ckpt",
+        autoCompactEvery = every,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+      all.grouped((all.length + 2) / 3).foreach { b => stream.addData(b); q.processAllAvailable() }
+      q.stop()
+      val at = s"${lsm.kind} at autoCompactEvery=$every"
+      // 3 batches: every part, or at 2 the fold of the first two + the third
+      assert(partCount(dir) === (if (every == 0) 3 else 2), at)
+      assert(same(lsm.current(spark, dir), batch), s"$at: current != the one-pass build")
+      lsm.compact(spark, dir)
+      assert(partCount(dir) === 1, at)
+      assert(same(lsm.current(spark, dir), batch), s"$at: compaction changed the view")
+    }
   }
 
   test("LSM index maintenance: append-only partials, merge-on-read == rebuild, compaction preserves") {
@@ -1338,7 +1378,7 @@ val dir =
         .toMap
     def partCount = new java.io.File(idxDir).list().count(_.startsWith("part="))
     val stream = MemoryStream[(Long, String)]
-    val q = StreamingOps.maintainIndexPartials(
+    val q = Lsm.index().maintain(
       stream.toDF().toDF("doc_id", "text"),
       idxDir,
       s"$dir/ckpt",
@@ -1352,21 +1392,21 @@ val dir =
     // each batch wrote ONLY its own partial; the merged view == rebuild
     assert(partCount === 2)
     assert(
-      flat(StreamingOps.currentIndexMerged(spark, idxDir))
+      flat(Lsm.index().current(spark, idxDir))
         === flat(Retrieval.invertedIndex((b1 ++ b2).toDF("doc_id", "text")))
     )
     // compaction (quiesced) folds partials into one and changes nothing
-    StreamingOps.compactIndex(spark, idxDir)
+    Lsm.index().compact(spark, idxDir)
     assert(partCount === 1)
     assert(
-      flat(StreamingOps.currentIndexMerged(spark, idxDir))
+      flat(Lsm.index().current(spark, idxDir))
         === flat(Retrieval.invertedIndex((b1 ++ b2).toDF("doc_id", "text")))
     )
     // maintenance resumes on top of the compacted part — with the
     // ORIGINAL checkpoint: that is the contract the r17 lineage guard
     // enforces (a fresh checkpoint replays its source from zero and
     // would double-count the dir's folded history; it is refused)
-    val q2 = StreamingOps.maintainIndexPartials(
+    val q2 = Lsm.index().maintain(
       stream.toDF().toDF("doc_id", "text"),
       idxDir,
       s"$dir/ckpt",
@@ -1375,7 +1415,7 @@ val dir =
     stream.addData(b3); q2.processAllAvailable()
     q2.stop()
     assert(
-      flat(StreamingOps.currentIndexMerged(spark, idxDir))
+      flat(Lsm.index().current(spark, idxDir))
         === flat(Retrieval.invertedIndex(docs.toDF("doc_id", "text")))
     )
   }
@@ -1402,28 +1442,28 @@ val dir =
     val want = flat(Retrieval.invertedIndex(docs.toDF("doc_id", "text")))
     // crash state A — staged fold written, marker NOT yet committed:
     // readers must see the plain parts (the staged dir is invisible)
-    StreamingOps.currentIndexMerged(spark, idxDir)
+    Lsm.index().current(spark, idxDir)
       .write.parquet(s"$idxDir/part=1.compacted")
-    assert(flat(StreamingOps.currentIndexMerged(spark, idxDir)) === want)
+    assert(flat(Lsm.index().current(spark, idxDir)) === want)
     // crash state B — marker committed, superseded parts mid-delete:
     // the staged dir is authoritative, the view still complete
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$idxDir/_compacting"), "1")
-    assert(flat(StreamingOps.currentIndexMerged(spark, idxDir)) === want)
+    assert(flat(Lsm.index().current(spark, idxDir)) === want)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$idxDir/part=0"))
-    assert(flat(StreamingOps.currentIndexMerged(spark, idxDir)) === want)
+    assert(flat(Lsm.index().current(spark, idxDir)) === want)
     // resume from B: finishes deletes + rename + uncommit, nothing lost
-    StreamingOps.compactIndex(spark, idxDir)
+    Lsm.index().compact(spark, idxDir)
     val names = new java.io.File(idxDir).list().toSet
     assert(names.contains("part=1") && !names.contains("_compacting"), s"got $names")
     assert(!names.exists(_.endsWith(".compacted")), s"staged dir must be renamed away: $names")
-    assert(flat(StreamingOps.currentIndexMerged(spark, idxDir)) === want)
+    assert(flat(Lsm.index().current(spark, idxDir)) === want)
     // crash state C — rename landed but the marker survived: the view is
     // the plain parts, and a resume only uncommits
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$idxDir/_compacting"), "1")
-    assert(flat(StreamingOps.currentIndexMerged(spark, idxDir)) === want)
-    StreamingOps.compactIndex(spark, idxDir)
+    assert(flat(Lsm.index().current(spark, idxDir)) === want)
+    Lsm.index().compact(spark, idxDir)
     assert(!new java.io.File(s"$idxDir/_compacting").exists())
-    assert(flat(StreamingOps.currentIndexMerged(spark, idxDir)) === want)
+    assert(flat(Lsm.index().current(spark, idxDir)) === want)
   }
 
   test("census LSM compaction: folded view == uncompacted view == batch census; maintenance resumes (VERDICT r15 №2)") {
@@ -1447,14 +1487,15 @@ val dir =
     // boundaries: ProcessingTime + processAllAvailable per group —
     // AvailableNow folds everything queued into one batch/part)
     val cs = MemoryStream[(Long, Long, Long)]
-    val q1 = StreamingOps.maintainCensus(
-      cs.toDF().toDF("c_custkey", "nation", "v"), cdir, s"$cdir/_ckpt", Seq("nation"),
+    val q1 = nationCensus.maintain(
+      cs.toDF().toDF("c_custkey", "nation", "v"), cdir, s"$cdir/_ckpt",
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     b12.grouped((b12.length + 1) / 2).foreach { b => cs.addData(b); q1.processAllAvailable() }
     q1.stop()
     val ss = MemoryStream[(Long, Long, Long)]
-    val q2 = StreamingOps.maintainSumCensus(
-      ss.toDF().toDF("c_custkey", "nation", "v"), sdir, s"$sdir/_ckpt", Seq("nation"), "v", 40L,
+    val sums = Lsm.sumCensus(Seq("nation"), "v", 40L)
+    val q2 = sums.maintain(
+      ss.toDF().toDF("c_custkey", "nation", "v"), sdir, s"$sdir/_ckpt",
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     b12.grouped((b12.length + 1) / 2).foreach { b => ss.addData(b); q2.processAllAvailable() }
     q2.stop()
@@ -1462,30 +1503,30 @@ val dir =
     val b12df = b12.toDF("c_custkey", "nation", "v")
     val wantC = censusSet(Deidentify.cellCounts(b12df, Seq("nation")))
     val wantS = censusSet(Deidentify.cellSums(b12df, Seq("nation"), "v", 40L))
-    assert(censusSet(StreamingOps.currentCensus(spark, cdir)) === wantC)
-    assert(censusSet(StreamingOps.currentSumCensus(spark, sdir)) === wantS)
+    assert(censusSet(nationCensus.current(spark, cdir)) === wantC)
+    assert(censusSet(sums.current(spark, sdir)) === wantS)
     // compaction (quiesced) folds to ONE part and changes nothing
-    StreamingOps.compactCensus(spark, cdir)
-    StreamingOps.compactSumCensus(spark, sdir)
+    nationCensus.compact(spark, cdir)
+    sums.compact(spark, sdir)
     assert(partCount(cdir) === 1 && partCount(sdir) === 1)
-    assert(censusSet(StreamingOps.currentCensus(spark, cdir)) === wantC)
-    assert(censusSet(StreamingOps.currentSumCensus(spark, sdir)) === wantS)
+    assert(censusSet(nationCensus.current(spark, cdir)) === wantC)
+    assert(censusSet(sums.current(spark, sdir)) === wantS)
     // the kind check survives compaction: a COUNT dir read as sums raises
-    intercept[IllegalArgumentException](StreamingOps.currentSumCensus(spark, cdir))
+    intercept[IllegalArgumentException](sums.current(spark, cdir))
     // maintenance resumes on top of the folded part; view == full batch.
     // Resumed with the ORIGINAL checkpoint (same MemoryStream instance,
     // offsets align) — the r17 lineage guard refuses a fresh checkpoint
     // here, because a real fresh checkpoint replays the source from zero
     // and would double-count the folded history
     cs.addData(b3)
-    val q3 = StreamingOps.maintainCensus(
-      cs.toDF().toDF("c_custkey", "nation", "v"), cdir, s"$cdir/_ckpt", Seq("nation"))
+    val q3 = nationCensus.maintain(
+      cs.toDF().toDF("c_custkey", "nation", "v"), cdir, s"$cdir/_ckpt")
     q3.processAllAvailable(); q3.stop()
-    assert(censusSet(StreamingOps.currentCensus(spark, cdir)) ===
+    assert(censusSet(nationCensus.current(spark, cdir)) ===
       censusSet(Deidentify.cellCounts(full, Seq("nation"))))
     // and the DP serve path reads the compacted LSM identically
     val viaLsm = Deidentify
-      .dpFromCounts(StreamingOps.currentCensus(spark, cdir), Seq("nation"), 1000000L, "rel")
+      .dpFromCounts(nationCensus.current(spark, cdir), Seq("nation"), 1000000L, "rel")
       .as[(Long, Long, Long)].collect().toSet
     val batchRel = Deidentify
       .dpCellCounts(full, Seq("nation"), 1000000L, "rel")
@@ -1504,13 +1545,13 @@ val dir =
       .write.parquet(s"$cdir/part=0")
     Deidentify.cellCounts(b2.toDF("id", "nation"), Seq("nation"))
       .write.parquet(s"$cdir/part=1")
-    def view = StreamingOps.currentCensus(spark, cdir)
+    def view = nationCensus.current(spark, cdir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = Deidentify.cellCounts(rows.toDF("id", "nation"), Seq("nation"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // crash state A — staged fold written, marker NOT yet committed:
     // the staged dir is invisible, the plain parts serve
-    StreamingOps.currentCensus(spark, cdir).write.parquet(s"$cdir/part=1.compacted")
+    nationCensus.current(spark, cdir).write.parquet(s"$cdir/part=1.compacted")
     assert(view === want)
     // crash state B — marker committed, superseded parts mid-delete:
     // the staged dir is authoritative, the view complete throughout
@@ -1519,7 +1560,7 @@ val dir =
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$cdir/part=0"))
     assert(view === want)
     // resume from B: deletes + rename + uncommit finish, nothing lost
-    StreamingOps.compactCensus(spark, cdir)
+    nationCensus.compact(spark, cdir)
     val names = new java.io.File(cdir).list().toSet
     assert(names.contains("part=1") && !names.contains("_compacting"), s"got $names")
     assert(!names.exists(_.endsWith(".compacted")), s"staged dir must be renamed away: $names")
@@ -1528,7 +1569,7 @@ val dir =
     // only uncommits
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$cdir/_compacting"), "1")
     assert(view === want)
-    StreamingOps.compactCensus(spark, cdir)
+    nationCensus.compact(spark, cdir)
     assert(!new java.io.File(s"$cdir/_compacting").exists())
     assert(view === want)
   }
@@ -1547,7 +1588,7 @@ val dir =
       .write.parquet(s"$cdir/part=0")
     Deidentify.cellCounts(rows.drop(100).toDF("id", "nation"), Seq("nation"))
       .write.parquet(s"$cdir/part=1")
-    StreamingOps.compactCensus(spark, cdir)
+    nationCensus.compact(spark, cdir)
     assert(new java.io.File(s"$cdir/part=1/_graft_compacted").exists(), "fold is marked")
     assert(!new java.io.File(s"$cdir/part=1/_graft_lineage").exists(),
       "legacy fold carries no lineage brand")
@@ -1556,8 +1597,8 @@ val dir =
     // but batch 1 would overwrite the fold — it must fail BEFORE any
     // data moves
     val cs2 = MemoryStream[(Long, Long)]
-    val q2 = StreamingOps.maintainCensus(
-      cs2.toDF().toDF("id", "nation"), cdir, s"$base/ckpt2", Seq("nation"),
+    val q2 = nationCensus.maintain(
+      cs2.toDF().toDF("id", "nation"), cdir, s"$base/ckpt2",
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     cs2.addData(rows.take(10)); q2.processAllAvailable() // batch 0 -> part=0, fine
     cs2.addData(rows.take(10))
@@ -1578,23 +1619,23 @@ val dir =
     val cdir = s"$base/census"
     val rows = (0L until 200L).map(i => (i, i % 5))
     val cs = MemoryStream[(Long, Long)]
-    val q1 = StreamingOps.maintainCensus(
-      cs.toDF().toDF("id", "nation"), cdir, s"$base/ckpt1", Seq("nation"),
+    val q1 = nationCensus.maintain(
+      cs.toDF().toDF("id", "nation"), cdir, s"$base/ckpt1",
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     rows.grouped(100).foreach { b => cs.addData(b); q1.processAllAvailable() }
     q1.stop()
-    StreamingOps.compactCensus(spark, cdir)
+    nationCensus.compact(spark, cdir)
     // the fold keeps the dir OWNED: without brand propagation a foreign
     // maintainer's parts 0..hi-1 would interleave into ids the fold
     // absorbed — nothing collides until the fold id, and a
     // restarted-from-scratch checkpoint replays its source from zero,
     // double-counting the dir's whole history in the served view
     assert(new java.io.File(s"$cdir/part=1/_graft_lineage").exists(), "fold carries the brand")
-    val before = StreamingOps.currentCensus(spark, cdir)
+    val before = nationCensus.current(spark, cdir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val cs2 = MemoryStream[(Long, Long)]
-    val q2 = StreamingOps.maintainCensus(
-      cs2.toDF().toDF("id", "nation"), cdir, s"$base/ckpt2", Seq("nation"),
+    val q2 = nationCensus.maintain(
+      cs2.toDF().toDF("id", "nation"), cdir, s"$base/ckpt2",
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     cs2.addData(rows.take(10))
     val e = intercept[Exception](q2.processAllAvailable()) // batch 0 — refused at once
@@ -1604,7 +1645,7 @@ val dir =
     assert(msgs(e).exists(_.contains("lineage")), s"got: ${msgs(e)}")
     // nothing landed, the view is intact
     assert(!new java.io.File(s"$cdir/part=0").exists(), "no foreign part was written")
-    assert(StreamingOps.currentCensus(spark, cdir)
+    assert(nationCensus.current(spark, cdir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet === before)
   }
 
@@ -1621,7 +1662,7 @@ val dir =
       (0L until 50L).map(i => (i, i % 5, i % 3)).toDF("id", "nation", "segment"),
       Seq("nation", "segment"))
       .write.parquet(s"$cdir/part=1")
-    val e = intercept[IllegalArgumentException](StreamingOps.currentCensus(spark, cdir))
+    val e = intercept[IllegalArgumentException](nationCensus.current(spark, cdir))
     assert(e.getMessage.contains("quasi-set drift"), e.getMessage)
   }
 
@@ -1640,7 +1681,7 @@ val dir =
       .write.parquet(s"$cdir/part=1")
     Deidentify.cellCounts((50L until 90L).map(i => (i, i % 5)).toDF("id", "nation"), Seq("nation"))
       .write.parquet(s"$cdir/part=2")
-    val e1 = intercept[IllegalArgumentException](StreamingOps.currentCensus(spark, cdir))
+    val e1 = intercept[IllegalArgumentException](nationCensus.current(spark, cdir))
     assert(e1.getMessage.contains("quasi-set drift"), e1.getMessage)
     // type drift: identical column NAMES, but the quasi column changed
     // type mid-dir — any name-set comparison passes, after which the
@@ -1651,7 +1692,7 @@ val dir =
     Deidentify.cellCounts(
       (0L until 50L).map(i => (i, (i % 5).toString)).toDF("id", "nation"), Seq("nation"))
       .write.parquet(s"$tdir/part=1")
-    val e2 = intercept[IllegalArgumentException](StreamingOps.currentCensus(spark, tdir))
+    val e2 = intercept[IllegalArgumentException](nationCensus.current(spark, tdir))
     assert(e2.getMessage.contains("quasi-set drift"), e2.getMessage)
   }
 
@@ -1665,13 +1706,13 @@ val dir =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // two batches into parts 0,1 — UNCOMPACTED history, lineage-branded
     val cs = MemoryStream[(Long, Long)]
-    val q1 = StreamingOps.maintainCensus(
-      cs.toDF().toDF("id", "nation"), cdir, s"$base/ckpt1", Seq("nation"),
+    val q1 = nationCensus.maintain(
+      cs.toDF().toDF("id", "nation"), cdir, s"$base/ckpt1",
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     rows.grouped(100).foreach { b => cs.addData(b); q1.processAllAvailable() }
     q1.stop()
     assert(new java.io.File(s"$cdir/part=0/_graft_lineage").exists(), "parts are branded")
-    val before = censusSet(StreamingOps.currentCensus(spark, cdir))
+    val before = censusSet(nationCensus.current(spark, cdir))
     // same-lineage REPLAY: delete the newest commit so the restarted
     // query re-executes its last batch — the retry overwrites part=1
     // idempotently (the at-least-once contract the write path absorbs)
@@ -1683,18 +1724,18 @@ val dir =
     // replayed commit's atomic rename fail as a concurrent-writer error
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(s"$base/ckpt1/commits/.$newest.crc"))
-    val q1b = StreamingOps.maintainCensus(
-      cs.toDF().toDF("id", "nation"), cdir, s"$base/ckpt1", Seq("nation"),
+    val q1b = nationCensus.maintain(
+      cs.toDF().toDF("id", "nation"), cdir, s"$base/ckpt1",
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     q1b.processAllAvailable(); q1b.stop()
-    assert(censusSet(StreamingOps.currentCensus(spark, cdir)) === before,
+    assert(censusSet(nationCensus.current(spark, cdir)) === before,
       "same-lineage retry overwrote its own part idempotently")
     // a maintainer on a FRESH checkpoint re-begins at batch 0: part=0
     // holds uncompacted history it would silently replace — refused
     // BEFORE any data moves (the pre-r17 guard only protected folds)
     val cs2 = MemoryStream[(Long, Long)]
-    val q2 = StreamingOps.maintainCensus(
-      cs2.toDF().toDF("id", "nation"), cdir, s"$base/ckpt2", Seq("nation"),
+    val q2 = nationCensus.maintain(
+      cs2.toDF().toDF("id", "nation"), cdir, s"$base/ckpt2",
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     cs2.addData(rows.take(10))
     val e = intercept[Exception](q2.processAllAvailable())
@@ -1703,7 +1744,7 @@ val dir =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
     assert(msgs(e).exists(_.contains("lineage")), s"got: ${msgs(e)}")
     // part=0 survived untouched
-    assert(censusSet(StreamingOps.currentCensus(spark, cdir)) === before)
+    assert(censusSet(nationCensus.current(spark, cdir)) === before)
   }
 
   test("autoCompactEvery wires the right fold per family: LSH and CMS self-bound and stay exact (VERDICT r16 №4)") {
@@ -1724,22 +1765,22 @@ val dir =
       .count(s => s.startsWith("part=") && !s.endsWith(".compacted"))
     // LSH: 5 batches, fold every 2 — the fold is a plain union rewrite
     val ls = MemoryStream[(Long, Seq[Float])]
-    val q1 = StreamingOps.maintainLshIndex(
+    val q1 = Lsm.lsh.maintain(
       ls.toDF().toDF("vec_id", "embedding"), s"$base/lsh", s"$base/lshckpt",
       autoCompactEvery = 2,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     vecs.grouped((vecs.length + 4) / 5).foreach { b => ls.addData(b); q1.processAllAvailable() }
     q1.stop()
     assert(partCount(s"$base/lsh") <= 3, s"lsh parts: ${partCount(s"$base/lsh")}")
-    val live = StreamingOps.currentLshIndex(spark, s"$base/lsh")
+    val live = Lsm.lsh.current(spark, s"$base/lsh")
     val batch = Similarity.lshIndex(vecs.toDF("vec_id", "embedding"))
     assert(live.except(batch).count() === 0L && batch.except(live).count() === 0L,
       "auto-compacted LSH index == batch build")
     // CMS: counter grids add — the folded sketch must equal the one-pass build
     val rows = (0L until 600L).map(i => (i, s"k${i % 37}"))
     val cs = MemoryStream[(Long, String)]
-    val q2 = StreamingOps.maintainCms(
-      cs.toDF().toDF("id", "k"), s"$base/cms", s"$base/cmsckpt", "k",
+    val q2 = Lsm.cms("k").maintain(
+      cs.toDF().toDF("id", "k"), s"$base/cms", s"$base/cmsckpt",
       autoCompactEvery = 2,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     rows.grouped(120).foreach { b => cs.addData(b); q2.processAllAvailable() }
@@ -1749,7 +1790,7 @@ val dir =
       .select(col("row").cast("long"), col("cms_col").cast("long"), col("cnt").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(
-      grid(StreamingOps.currentCms(spark, s"$base/cms"))
+      grid(Lsm.cms("k").current(spark, s"$base/cms"))
         === grid(Sketch.cmsSketch(rows.toDF("id", "k"), "k")),
       "auto-compacted CMS == one-pass sketch")
   }
@@ -1764,8 +1805,8 @@ val dir =
     val batches = rows.grouped(50).toSeq // 8 micro-batches
     def run(dir: String, ckpt: String, every: Int): MemoryStream[(Long, Long)] = {
       val st = MemoryStream[(Long, Long)]
-      val q = StreamingOps.maintainCensus(
-        st.toDF().toDF("id", "nation"), dir, ckpt, Seq("nation"),
+      val q = nationCensus.maintain(
+        st.toDF().toDF("id", "nation"), dir, ckpt,
         autoCompactEvery = every,
         trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
       batches.foreach { b => st.addData(b); q.processAllAvailable() }
@@ -1783,10 +1824,10 @@ val dir =
     def censusSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = censusSet(Deidentify.cellCounts(rows.toDF("id", "nation"), Seq("nation")))
-    assert(censusSet(StreamingOps.currentCensus(spark, adir)) === want, "auto == batch")
-    assert(censusSet(StreamingOps.currentCensus(spark, udir)) === want, "uncompacted == batch")
-    StreamingOps.compactCensus(spark, udir)
-    assert(censusSet(StreamingOps.currentCensus(spark, udir)) === want, "manual == batch")
+    assert(censusSet(nationCensus.current(spark, adir)) === want, "auto == batch")
+    assert(censusSet(nationCensus.current(spark, udir)) === want, "uncompacted == batch")
+    nationCensus.compact(spark, udir)
+    assert(censusSet(nationCensus.current(spark, udir)) === want, "manual == batch")
     // crash mid-auto-fold at the COMMIT point (state B of the compactLsm
     // walk): stage a fold of everything live, brand it, commit the
     // marker — then die. The view stays complete, and the NEXT maintainer
@@ -1796,25 +1837,25 @@ val dir =
       .collect { case s if s.startsWith("part=") && s.stripPrefix("part=").forall(_.isDigit) =>
         s.stripPrefix("part=").toLong }
       .max
-    StreamingOps.currentCensus(spark, adir).write.parquet(s"$adir/part=$hi.compacted")
+    nationCensus.current(spark, adir).write.parquet(s"$adir/part=$hi.compacted")
     java.nio.file.Files.createFile(
       java.nio.file.Paths.get(s"$adir/part=$hi.compacted/_graft_compacted"))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$adir/_compacting"), hi.toString)
-    assert(censusSet(StreamingOps.currentCensus(spark, adir)) === want,
+    assert(censusSet(nationCensus.current(spark, adir)) === want,
       "view complete at the crash point")
     val extra = (400L until 450L).map(i => (i, i % 7))
     // resume with the ORIGINAL checkpoint (same MemoryStream instance) —
     // the lineage guard refuses a fresh checkpoint over a branded dir
-    val q2 = StreamingOps.maintainCensus(
-      stA.toDF().toDF("id", "nation"), adir, s"$base/ckptA", Seq("nation"),
+    val q2 = nationCensus.maintain(
+      stA.toDF().toDF("id", "nation"), adir, s"$base/ckptA",
       autoCompactEvery = 3,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     stA.addData(extra); q2.processAllAvailable(); q2.stop()
     assert(!new java.io.File(s"$adir/_compacting").exists(), "crashed fold finished")
     val wantAll = censusSet(
       Deidentify.cellCounts((rows ++ extra).toDF("id", "nation"), Seq("nation")))
-    assert(censusSet(StreamingOps.currentCensus(spark, adir)) === wantAll,
+    assert(censusSet(nationCensus.current(spark, adir)) === wantAll,
       "resumed fold + new batch == batch census of everything")
     assert(partCount(adir) <= 4, "still bounded after the resume")
   }
@@ -1856,25 +1897,10 @@ val dir =
     assert(view2.index.count() === completeIdx)
   }
 
-  test("currentIndex serves the max COMPLETE generation, _SUCCESS-gated (ADVICE r11)") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-gen-succ").toString
-    Seq((1L, "one")).toDF("k", "v").write.parquet(s"$dir/gen=1")
-    Seq((2L, "two")).toDF("k", "v").write.parquet(s"$dir/gen=2")
-    // crash mid-write of gen=2: the commit marker never landed — serving
-    // that generation would silently drop postings, so gen=1 is current
-    assert(new java.io.File(s"$dir/gen=2/_SUCCESS").delete())
-    assert(
-      StreamingOps.currentIndex(spark, dir).as[(Long, String)].collect().toSeq
-        === Seq((1L, "one"))
-    )
-    // markerless committer configuration (NO generation carries _SUCCESS):
-    // bare-existence fallback — max generation, as before the fix
-    assert(new java.io.File(s"$dir/gen=1/_SUCCESS").delete())
-    assert(
-      StreamingOps.currentIndex(spark, dir).as[(Long, String)].collect().toSeq
-        === Seq((2L, "two"))
-    )
+  test("currentIvf on a directory that has never been written is a named refusal") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-fresh").toString + "/ivf"
+    val e = intercept[IllegalArgumentException](StreamingOps.currentIvf(spark, dir))
+    assert(e.getMessage.contains(s"no COMPLETE IVF generation under $dir"), e.getMessage)
   }
 
   test("compactIndex: a FAILED rename keeps the marker + staged fold, then resumes (ADVICE r11)") {
@@ -1894,7 +1920,7 @@ val dir =
     Retrieval.invertedIndex(b2.toDF("doc_id", "text")).write.parquet(s"$idxDir/part=1")
     val want = flat(Retrieval.invertedIndex(docs.toDF("doc_id", "text")))
     // committed crash state: staged fold + marker present, parts still live
-    StreamingOps.currentIndexMerged(spark, idxDir)
+    Lsm.index().current(spark, idxDir)
       .write.parquet(s"$idxDir/part=1.compacted")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$idxDir/_compacting"), "1")
     // resume through a filesystem whose rename(staged → part=1) returns
@@ -1905,18 +1931,18 @@ val dir =
       .set("fs.failrename.impl", classOf[FailRenameFs].getName)
     FailRenameFs.armed.set(true)
     try intercept[IllegalArgumentException] {
-      StreamingOps.compactIndex(spark, s"failrename:$idxDir")
+      Lsm.index().compact(spark, s"failrename:$idxDir")
     } finally FailRenameFs.armed.set(false)
     assert(new java.io.File(s"$idxDir/_compacting").exists(), "marker must survive the failed rename")
     assert(new java.io.File(s"$idxDir/part=1.compacted").exists(), "staged fold must survive")
     // the view is still complete (served from the committed staged fold)
-    assert(flat(StreamingOps.currentIndexMerged(spark, idxDir)) === want)
+    assert(flat(Lsm.index().current(spark, idxDir)) === want)
     // re-invocation on a healthy filesystem finishes: rename + uncommit
-    StreamingOps.compactIndex(spark, idxDir)
+    Lsm.index().compact(spark, idxDir)
     val names = new java.io.File(idxDir).list().toSet
     assert(names.contains("part=1") && !names.contains("_compacting"), s"got $names")
     assert(!names.exists(_.endsWith(".compacted")), s"staged dir renamed away: $names")
-    assert(flat(StreamingOps.currentIndexMerged(spark, idxDir)) === want)
+    assert(flat(Lsm.index().current(spark, idxDir)) === want)
   }
 
   test("lineage guard re-verifies per batch: a foreign part appearing AFTER first verification is refused at the next micro-batch (ADVICE r17)") {
@@ -1928,8 +1954,8 @@ val dir =
     // of r17 froze that verdict for the process lifetime, so an
     // interloper's parts written after it interleaved undetected
     val cs = MemoryStream[(Long, Long)]
-    val q1 = StreamingOps.maintainCensus(
-      cs.toDF().toDF("id", "nation"), cdir, s"$base/ckpt1", Seq("nation"),
+    val q1 = nationCensus.maintain(
+      cs.toDF().toDF("id", "nation"), cdir, s"$base/ckpt1",
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     cs.addData((0L until 50L).map(i => (i, i % 5)))
     q1.processAllAvailable()
@@ -1961,8 +1987,8 @@ val dir =
     }
     // maintainer A owns the dir and caches its verdict
     val cs = MemoryStream[(Long, Long)]
-    val q1 = StreamingOps.maintainCensus(
-      cs.toDF().toDF("id", "nation"), cdir, s"$base/ckpt1", Seq("nation"),
+    val q1 = nationCensus.maintain(
+      cs.toDF().toDF("id", "nation"), cdir, s"$base/ckpt1",
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     cs.addData((0L until 50L).map(i => (i, i % 5)))
     q1.processAllAvailable()
@@ -1972,8 +1998,8 @@ val dir =
     rmrf(new java.io.File(cdir))
     Thread.sleep(50) // stay above local-FS mtime resolution
     val cs2 = MemoryStream[(Long, Long)]
-    val q2 = StreamingOps.maintainCensus(
-      cs2.toDF().toDF("id", "nation"), cdir, s"$base/ckpt2", Seq("nation"),
+    val q2 = nationCensus.maintain(
+      cs2.toDF().toDF("id", "nation"), cdir, s"$base/ckpt2",
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     cs2.addData((0L until 30L).map(i => (i, i % 3)))
     q2.processAllAvailable()
@@ -2003,7 +2029,7 @@ val dir =
     Deidentify.cellCounts(good, Seq("nation")).write.parquet(s"$cdir/part=0")
     Deidentify.cellCounts(good, Seq("nation")).write.parquet(s"$cdir/part=1")
     // first read verifies and CACHES both part schemas
-    assert(StreamingOps.currentCensus(spark, cdir).count() === 5)
+    assert(nationCensus.current(spark, cdir).count() === 5)
     // part=1 is wiped and recreated at the same path with a type-drifted
     // quasi column (string nation) — the r17 path-keyed cache kept
     // serving the pre-wipe schema and the view silently coerced
@@ -2012,7 +2038,7 @@ val dir =
     Deidentify
       .cellCounts((0L until 50L).map(i => (i, (i % 5).toString)).toDF("id", "nation"), Seq("nation"))
       .write.parquet(s"$cdir/part=1")
-    val e = intercept[IllegalArgumentException](StreamingOps.currentCensus(spark, cdir))
+    val e = intercept[IllegalArgumentException](nationCensus.current(spark, cdir))
     assert(e.getMessage.contains("quasi-set drift"), e.getMessage)
   }
 }
